@@ -22,7 +22,11 @@ CLASSES = os.path.join(BUILD, "classes")
 
 
 class BuildError(RuntimeError):
-    pass
+    """The build cannot start: no engine sources or no Spark jars."""
+
+
+class CompileError(BuildError):
+    """The sources are there but do not compile."""
 
 
 def spark_jars_dir():
@@ -74,7 +78,7 @@ def build(log=sys.stderr):
                         "-nowarn", "-d", tmp, "-classpath", cp, "@" + argfile],
                        stdout=subprocess.PIPE, stderr=subprocess.STDOUT, text=True)
     if r.returncode != 0:
-        raise BuildError("scalac failed:\n" + r.stdout[-4000:])
+        raise CompileError("scalac failed:\n" + r.stdout[-4000:])
     shutil.rmtree(CLASSES, ignore_errors=True)
     os.rename(tmp, CLASSES)
     with open(stamp, "w") as f:

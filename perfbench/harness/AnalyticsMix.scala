@@ -19,29 +19,36 @@ import graft.util.CacheScope
 object AnalyticsMix {
   import Main.{mean, rmrf, seconds, timed}
 
+  /** The mix: (declared query, operator module it exercises), one query
+    * per operators.* module, none of them gate-only. */
+  val Mix: Seq[(String, String)] = Seq(
+    "t04_join_chain" -> "Relational", "x103_retention_cohorts" -> "TimeSeries",
+    "x301_powerlaw_alpha" -> "Graph", "t37_stats_agg" -> "Profiling",
+    "x142_welch_ttest" -> "Evaluation", "x124_croston" -> "Forecast",
+    "x208_basket_profile" -> "Retail", "x264_hll_grouped" -> "Sketch",
+    "x63_stratified_sample" -> "Sampling", "t34_cosine_topk" -> "Similarity",
+    "x58_vocabulary" -> "TextAnalysis", "x40_exact_dedup" -> "Dedup")
+
   private object Plans extends AdaptiveSparkPlanHelper {
     def exchanges(p: SparkPlan): Int = collect(p) { case e: ShuffleExchangeLike => e }.size
   }
 
   def run(spark: SparkSession, rec: Recorder, a: Args, o: Outcome): Unit = {
-    val mix: Seq[(String, String)] = a.params("mix").split(",").toSeq.map { s =>
-      val Array(q, m) = s.split(":"); q -> m
-    }
-    val unknown = mix.map(_._1).filterNot(SparkEntry.queries.contains)
+    val unknown = Mix.map(_._1).filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"mix names no declared query: ${unknown.mkString(", ")}")
-    val gated = mix.map(_._1).filter(SparkEntry.gateOnly.contains)
+    val gated = Mix.map(_._1).filter(SparkEntry.gateOnly.contains)
     require(gated.isEmpty, s"mix names gate-only queries: ${gated.mkString(", ")}")
 
     // ── one-time state (persisted indexes etc.), as a deployment has ─
     o.stateS = timed {
-      mix.foreach { case (q, _) => SparkEntry.benchSetup.get(q).foreach(_(spark, a.in)) }
+      Mix.foreach { case (q, _) => SparkEntry.benchSetup.get(q).foreach(_(spark, a.in)) }
     }._2
 
     // ── warm-up: each query's first result, kept for the oracle check ─
     val resDir = s"${a.out}/results"
     rmrf(resDir)
     o.warmupS = timed {
-      mix.foreach { case (q, _) =>
+      Mix.foreach { case (q, _) =>
         try SparkEntry.queries(q)(spark, a.in).coalesce(1).write.mode("overwrite")
           .parquet(s"$resDir/$q")
         catch { case e: Exception => System.err.println(s"[perfbench] $q first run failed: $e") }
@@ -50,8 +57,8 @@ object AnalyticsMix {
     }._2
     Files.createDirectories(Paths.get(resDir))
     Files.writeString(Paths.get(resDir, "oracle_sql.json"), Json.render(
-      mix.flatMap { case (q, _) => SparkEntry.oracleSql.get(q).map(q -> _) }.toMap))
-    Files.writeString(Paths.get(resDir, "dumped.json"), Json.render(mix.map(_._1)))
+      Mix.flatMap { case (q, _) => SparkEntry.oracleSql.get(q).map(q -> _) }.toMap))
+    Files.writeString(Paths.get(resDir, "dumped.json"), Json.render(Mix.map(_._1)))
 
     // ── measured passes ────────────────────────────────────────────
     val rng = new scala.util.Random(a.seed)
@@ -64,7 +71,7 @@ object AnalyticsMix {
     var spent = 0.0
     var n = 0
     while (passes == 0 || spent < a.seconds) {
-      rng.shuffle(mix).foreach { case (q, module) =>
+      rng.shuffle(Mix).foreach { case (q, module) =>
         val runId = s"p$passes:$q"
         o.attempted += 1
         val t0 = System.nanoTime()
@@ -103,14 +110,14 @@ object AnalyticsMix {
       o.probeHeap()
     }
     o.items = n
-    o.report ++= Seq("passes" -> passes, "mix_size" -> mix.size,
+    o.report ++= Seq("passes" -> passes, "mix_size" -> Mix.size,
       "query_median_s" -> perQuery.map { case (q, xs) => q -> Main.median(xs.toSeq) }.toMap)
 
     if (rec.enabled) {
       o.layers("queries.plan_s") = mean(planS.toSeq)
       o.layers("queries.exec_s") = mean(execS.toSeq)
       o.layers("queries.exchanges") = mean(exchanges.toSeq)
-      mix.map(_._2).distinct.foreach(m => o.layers(s"queries.exec_s.$m") = byModule(m) / passes)
+      Mix.map(_._2).distinct.foreach(m => o.layers(s"queries.exec_s.$m") = byModule(m) / passes)
       o.layers ++= rec.sparkLayers("q:", n)
     }
   }

@@ -13,12 +13,15 @@ import org.apache.spark.sql.SparkSession
   *
   * `samples` holds the primary latency of every operation that
   * succeeded; a failed operation records no time and is listed by name
-  * in `failed`. */
+  * in `failed`. `tailOnly` names the samples left out of the median
+  * (compaction batches). */
 final class Outcome {
   var stateS = 0.0
   var warmupS = 0.0
+  var checksS = 0.0 // untimed output checks
   val samples = mutable.ArrayBuffer.empty[Double]
   val sampleNames = mutable.ArrayBuffer.empty[String]
+  val tailOnly = mutable.ArrayBuffer.empty[String]
   var items = 0.0 // work completed by the timed operations
   var attempted = 0
   val failed = mutable.ArrayBuffer.empty[String]
@@ -32,13 +35,15 @@ final class Outcome {
   }
   def sample(name: String, s: Double): Unit = { samples += s; sampleNames += name }
   def probeHeap(): Unit = heapPeakMb = math.max(heapPeakMb, Recorder.liveHeapMb())
+  def untimed[T](body: => T): T = {
+    val (r, s) = Main.timed(body)
+    checksS += s
+    r
+  }
 }
 
 final case class Args(workload: String, in: String, work: String, out: String,
-    seconds: Double, trace: Boolean, cores: Int, seed: Long, params: Map[String, String]) {
-  def int(k: String): Int = params(k).toInt
-  def double(k: String): Double = params(k).toDouble
-}
+    seconds: Double, trace: Boolean, cores: Int, seed: Long)
 
 object Main {
   def seconds(t0: Long): Double = (System.nanoTime() - t0) / 1e9
@@ -52,9 +57,8 @@ object Main {
   def main(argv: Array[String]): Unit = {
     val bootS = ManagementFactory.getRuntimeMXBean.getUptime / 1e3
     val kv = argv.grouped(2).map { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
-    val known = Set("workload", "in", "work", "out", "seconds", "trace", "cores", "seed")
     val a = Args(kv("workload"), kv("in"), kv("work"), kv("out"), kv("seconds").toDouble,
-      kv("trace") == "1", kv("cores").toInt, kv("seed").toLong, kv -- known)
+      kv("trace") == "1", kv("cores").toInt, kv("seed").toLong)
 
     val (spark, sessionS) = timed {
       SparkSession.builder().master(s"local[${a.cores}]")
@@ -86,8 +90,8 @@ object Main {
     } finally {
       val json = Json.render(mutable.LinkedHashMap[String, Any](
         "workload" -> a.workload, "boot_s" -> bootS, "session_s" -> sessionS,
-        "state_s" -> o.stateS, "warmup_s" -> o.warmupS,
-        "samples" -> o.samples, "sample_names" -> o.sampleNames, "items" -> o.items,
+        "state_s" -> o.stateS, "warmup_s" -> o.warmupS, "checks_s" -> o.checksS,
+        "samples" -> o.samples, "sample_names" -> o.sampleNames, "tail_only" -> o.tailOnly, "items" -> o.items,
         "attempted" -> o.attempted, "failed" -> o.failed,
         "checks" -> o.checks.map { case (n, ok, d) => Map("name" -> n, "ok" -> ok, "detail" -> d) },
         "report" -> o.report, "layers" -> o.layers,

@@ -11,15 +11,17 @@ Workloads (sizes, loop shape and metric meanings: perfbench/README.md):
 - ``curation_stream``  micro-batches through Incremental.curateBatchFuzzy
 
 A run builds the engine and harness if needed (perfbench/build.py),
-generates the workload's inputs from the seed three times (the median
-time counts as set-up; the three copies must be byte-identical), starts
+generates the workload's inputs from the seed twice (the mean time
+counts as set-up; the two copies must be byte-identical), starts
 one JVM with ``local[N]`` (N = usable cores), measures for ``--seconds``,
 checks every output, and prints as its last stdout line one JSON object
 with ``correct``, ``attempted``, ``failed`` and ``metrics``: the
 end-to-end metrics with ``--trace 0``, the per-layer metrics with
 ``--trace 1``. The line before it is a report with every metric under
-its workload-specific name. Files are written only under
-perfbench/.build, perfbench/.work and perfbench/.out.
+its workload-specific name. A run that measures nothing (the sources do
+not compile, the JVM dies or outlives its timeout) still prints the
+line, with ``correct`` false and every metric null. Files are written
+only under perfbench/.build, perfbench/.work and perfbench/.out.
 """
 import argparse
 import hashlib
@@ -41,49 +43,29 @@ sys.path.insert(0, HERE)
 import build  # noqa: E402
 from gen import docs, m5, tables  # noqa: E402
 
-JVM_TIMEOUT_S = 160
+# A run must end within this many seconds of the build; the JVM gets
+# what is left after input generation, or a wide multiple of the
+# measured time if that is less.
+RUN_BUDGET_S = 170
+
+
+def jvm_timeout(seconds, elapsed):
+    return min(RUN_BUDGET_S - elapsed, 60 + 10 * seconds)
+
 
 # ── workloads ─────────────────────────────────────────────────────────
-# The analytics mix: (declared query, operator module it exercises). At
-# least one query per operators.* module; Graph iteration and the
-# percentile/stats queries set the tail.
-MIX = [
-    ("t04_join_chain", "Relational"), ("t09_hash_agg", "Relational"),
-    ("t23_keyed_update", "Relational"), ("x103_retention_cohorts", "TimeSeries"),
-    ("x129_triangle_count", "Graph"), ("x154_kcore", "Graph"),
-    ("t37_stats_agg", "Profiling"), ("x97_corr_matrix", "Profiling"),
-    ("x142_welch_ttest", "Evaluation"), ("x124_croston", "Forecast"),
-    ("x208_basket_profile", "Retail"), ("x264_hll_grouped", "Sketch"),
-    ("x63_stratified_sample", "Sampling"), ("t34_cosine_topk", "Similarity"),
-    ("x58_vocabulary", "TextAnalysis"), ("x40_exact_dedup", "Dedup"),
-    ("x77_neardup_index", "Dedup"), ("t38_percentile", "Profiling"),
-]
-MODULES = ["Relational", "TimeSeries", "Graph", "Profiling", "Evaluation", "Forecast",
-           "Retail", "Sketch", "Sampling", "Similarity", "TextAnalysis", "Dedup"]
-
+# (the analytics mix itself is AnalyticsMix.Mix in the harness)
 SIZES = {
     "m5_forecast": {
         "full": {"stores": 1, "items": 24, "days": 240},
         "tiny": {"stores": 1, "items": 8, "days": 120}},
     "analytics_mix": {"full": {"scale": 1.0}, "tiny": {"scale": 0.02}},
     "curation_stream": {
-        "full": {"reference": 500, "batches": 4, "batch_size": 150},
+        "full": {"reference": 500, "batches": 6, "batch_size": 150},
         "tiny": {"reference": 200, "batches": 3, "batch_size": 20}},
 }
 GENERATORS = {"m5_forecast": m5.generate, "analytics_mix": tables.generate,
               "curation_stream": docs.generate}
-
-
-def jvm_params(workload, size, meta):
-    if workload == "m5_forecast":
-        # the model must stay within 10% of the naive 28-day-mean
-        # forecast's WRMSSE: speed bought with accuracy fails the run
-        return {"estimators": 2 if size == "tiny" else 4, "max_wrmsse_ratio": 1.10}
-    if workload == "analytics_mix":
-        return {"mix": ",".join(f"{q}:{m}" for q, m in MIX)}
-    return {"threshold": 0.5, "compact_after_files": 4, "min_recall": 0.75,
-            "max_false_drop": 0.01,
-            "input_text_bytes": meta["reference_text_bytes"] + meta["stream_text_bytes"]}
 
 
 # ── metric names (BENCHMARK.json lists the same, with bounds) ─────────
@@ -113,19 +95,25 @@ PER_LAYER = {
     "spark.shuffle_read_mb": "MB", "spark.spill_mb": "MB", "spark.input_mb": "MB",
     "spark.output_mb": "MB", "spark.failed_tasks": "count",
     **{f"spark.stage_s.{f}": "s" for f in [
-        "M5Pipeline", "TweedieGbt", "HistTree", "Gbt", "Relational", "TimeSeries",
-        "Graph", "Profiling", "Evaluation", "Forecast", "Retail", "Sketch", "Sampling",
-        "Similarity", "TextAnalysis", "Dedup", "Incremental", "Cut", "harness", "other"]},
+        "M5Pipeline", "TweedieGbt", "HistTree", "Dedup", "Incremental", "Cut", "other"]},
     "cache.storage_peak_mb": "MB", "cache.evicted_blocks": "count",
     "latency.tail_s": "s", "latency.tail_pct": "%", "latency.samples": "count",
     "trace.latency_p50_s": "s",
 }
-# per-layer metrics only analytics_mix produces (it is not among the
-# workloads BENCHMARK.json lists, see README.md)
+# per-layer metrics only analytics_mix moves; its traced runs print them
+# after PER_LAYER (it is not among the workloads BENCHMARK.json lists,
+# see README.md)
+MODULES = ["Relational", "TimeSeries", "Graph", "Profiling", "Evaluation", "Forecast",
+           "Retail", "Sketch", "Sampling", "Similarity", "TextAnalysis", "Dedup"]
 ANALYTICS_LAYERS = {
     "queries.plan_s": "s", "queries.exec_s": "s", "queries.exchanges": "count",
     **{f"queries.exec_s.{m}": "s" for m in MODULES},
+    "spark.stage_s.harness": "s",
 }
+
+
+def layer_names(workload):
+    return {**PER_LAYER, **(ANALYTICS_LAYERS if workload == "analytics_mix" else {})}
 # the workload-specific names of the end-to-end figures, for the report
 REPORT_NAMES = {
     "m5_forecast": {"latency_p50_s": "m5_dag_s", "latency_tail_s": "m5_dag_max_s",
@@ -155,19 +143,17 @@ def tree_digest(path):
 
 
 def generate(workload, size, seed, work):
-    """Generate the inputs three times; return (dir, meta, median seconds,
-    byte-identical)."""
+    """Generate the inputs twice; return (dir, mean seconds, byte-identical)."""
     gen, sizes = GENERATORS[workload], SIZES[workload][size]
-    times, digests, meta = [], [], None
-    for i in range(3):
+    times, digests = [], []
+    for i in range(2):
         d = os.path.join(work, f"in{i}")
         t0 = time.perf_counter()
-        meta = gen(d, seed, **sizes)
+        gen(d, seed, **sizes)
         times.append(time.perf_counter() - t0)
         digests.append(tree_digest(d))
-    for i in (1, 2):
-        shutil.rmtree(os.path.join(work, f"in{i}"))
-    return os.path.join(work, "in0"), meta, statistics.median(times), len(set(digests)) == 1
+    shutil.rmtree(os.path.join(work, "in1"))
+    return os.path.join(work, "in0"), statistics.mean(times), len(set(digests)) == 1
 
 
 def tail(samples):
@@ -183,7 +169,8 @@ def tail(samples):
 def oracle_check(in_dir, res_dir):
     """Compare each query's first result with its OracleSql twin in
     DuckDB, with the rendering rules of .claude/skills/verify/check.py.
-    Returns {query: problem} for every query that does not match."""
+    Returns ({query: problem} for every query that does not match, the
+    queries checked)."""
     import duckdb
     spec = importlib.util.spec_from_file_location(
         "verify_check", os.path.join(ROOT, ".claude", "skills", "verify", "check.py"))
@@ -196,8 +183,10 @@ def oracle_check(in_dir, res_dir):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM parquet_scan('{p}')")
     with open(os.path.join(res_dir, "oracle_sql.json")) as f:
         oracle = json.load(f)
+    with open(os.path.join(res_dir, "dumped.json")) as f:
+        mix = json.load(f)
     bad = {}
-    for q, _ in MIX:
+    for q in mix:
         d = os.path.join(res_dir, q)
         if not os.path.isdir(d):
             bad[q] = "no first result (query failed)"
@@ -224,10 +213,13 @@ def oracle_check(in_dir, res_dir):
             first = next(i for i, (x, y) in enumerate(zip(chk.render_df(sdf),
                                                           chk.render_df(odf))) if x != y)
             bad[q] = f"row {first} differs"
-    return bad
+    return bad, mix
 
 
-def run_jvm(classpath, workload, in_dir, work, out, seconds, trace, cores, seed, params):
+def run_jvm(classpath, workload, in_dir, work, out, seconds, trace, cores, seed, timeout):
+    """Run the harness JVM; return (result.json contents or None, exit
+    code or None when it was killed at the timeout, seconds from the
+    result file to the JVM's exit)."""
     opens = ["java.base/java.lang", "java.base/java.lang.invoke", "java.base/java.lang.reflect",
              "java.base/java.io", "java.base/java.net", "java.base/java.nio",
              "java.base/java.util", "java.base/java.util.concurrent",
@@ -242,21 +234,40 @@ def run_jvm(classpath, workload, in_dir, work, out, seconds, trace, cores, seed,
            + ["-cp", os.pathsep.join(classpath), "perfbench.Main",
               "--workload", workload, "--in", in_dir, "--work", work, "--out", out,
               "--seconds", str(seconds), "--trace", str(trace), "--cores", str(cores),
-              "--seed", str(seed)]
-           + [x for k, v in params.items() for x in (f"--{k}", str(v))])
+              "--seed", str(seed)])
     with open(os.path.join(out, "jvm.log"), "w") as log:
         proc = subprocess.Popen(cmd, stdout=log, stderr=subprocess.STDOUT, cwd=work)
+        code = None
         try:
-            proc.wait(timeout=JVM_TIMEOUT_S)
+            code = proc.wait(timeout=timeout)
+        except subprocess.TimeoutExpired:
+            print(f"[perfbench] JVM killed at its {timeout:.0f} s timeout", file=sys.stderr)
         finally:
             if proc.poll() is None:
                 proc.kill()
                 proc.wait()
     path = os.path.join(out, "result.json")
     if not os.path.exists(path):
-        fail(f"the JVM wrote no result (exit {proc.returncode}); see {out}/jvm.log")
+        return None, code, None
     with open(path) as f:
-        return json.load(f), proc.returncode
+        return json.load(f), code, time.time() - os.path.getmtime(path)
+
+
+def emit(line, report, detail, out):
+    with open(os.path.join(out, "summary.json"), "w") as f:
+        json.dump({**line, "report": report, "detail": detail}, f, indent=1)
+    print(json.dumps({"report": report, "detail": detail}))
+    print(json.dumps(line), flush=True)
+
+
+def failed_run(args, out, why, detail):
+    """The result line of a run that produced no measurement: incorrect,
+    one failed operation, and every metric of the mode as null."""
+    print(f"[perfbench] {why}", file=sys.stderr, flush=True)
+    names = layer_names(args.workload) if args.trace else END_TO_END
+    line = {"correct": False, "attempted": 1, "failed": 1,
+            "metrics": {k: {"value": None, "unit": u} for k, u in names.items()}}
+    emit(line, {}, {**detail, "failed_operations": [f"{args.workload}:run"], "error": why}, out)
 
 
 def main(argv=None):
@@ -270,32 +281,46 @@ def main(argv=None):
     # turn a SIGTERM into an exception, so the JVM is killed and reaped
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
 
-    try:
-        classpath = build.build()
-    except build.BuildError as e:
-        fail(f"build failed: {e}")
-    cores = len(os.sched_getaffinity(0))
     work = os.path.join(HERE, ".work", args.workload)
     out = os.path.join(HERE, ".out", f"{args.workload}-s{args.seed}-t{args.trace}")
+    cores = len(os.sched_getaffinity(0))
+    detail = {"workload": args.workload, "seed": args.seed, "trace": args.trace,
+              "size": args.size, "sizes": SIZES[args.workload][args.size], "cores": cores}
+    try:
+        classpath = build.build()
+    except build.CompileError as e:
+        # the sources are there but do not compile: a failed run
+        shutil.rmtree(out, ignore_errors=True)
+        os.makedirs(out)
+        failed_run(args, out, f"build failed: {e}", detail)
+        return
+    except build.BuildError as e:
+        fail(f"cannot build: {e}")
     for d in (work, out):
         shutil.rmtree(d, ignore_errors=True)
         os.makedirs(d)
 
     t_start = time.perf_counter()
-    in_dir, meta, gen_s, identical = generate(args.workload, args.size, args.seed, work)
-    params = jvm_params(args.workload, args.size, meta)
+    in_dir, gen_s, identical = generate(args.workload, args.size, args.seed, work)
     t_jvm = time.perf_counter()
-    r, code = run_jvm(classpath, args.workload, in_dir, work, out, args.seconds,
-                      args.trace, cores, args.seed, params)
+    timeout = jvm_timeout(args.seconds, t_jvm - t_start)
+    detail["jvm_timeout_s"] = timeout
+    r, code, teardown = run_jvm(classpath, args.workload, in_dir, work, out, args.seconds,
+                                args.trace, cores, args.seed, timeout)
     jvm_wall = time.perf_counter() - t_jvm
+    if r is None:
+        why = ("the JVM was killed at its timeout" if code is None
+               else f"the JVM exited {code} without a result")
+        failed_run(args, out, f"{why}; see {out}/jvm.log", detail)
+        return
 
     checks = list(r["checks"])
     checks.append({"name": "all.inputs_deterministic", "ok": identical,
-                   "detail": "three generations from the seed are byte-identical"})
+                   "detail": "two generations from the seed are byte-identical"})
     if args.workload == "analytics_mix":
-        bad = oracle_check(in_dir, os.path.join(out, "results"))
+        bad, mix = oracle_check(in_dir, os.path.join(out, "results"))
         checks += [{"name": q, "ok": q not in bad, "detail": bad.get(q, "matches oracle")}
-                   for q, _ in MIX]
+                   for q in mix]
     # a failed check fails the operations it covers, named by the part of
     # the check's name before the first dot ("all" covers every one);
     # their time is dropped
@@ -304,7 +329,7 @@ def main(argv=None):
 
     def covered(name):
         return any(s == "all" or s in name.split(":") for s in failed_scopes)
-    kept = [s for n, s in samples if not covered(n)]
+    kept = [(n, s) for n, s in samples if not covered(n)]
     failed = sorted(set(r["failed"]) | {n for n, _ in samples if covered(n)})
     correct = code == 0 and not failed and all(c["ok"] for c in checks) and bool(kept)
 
@@ -313,9 +338,12 @@ def main(argv=None):
            "latency_p50_s": None, "throughput_per_s": None}
     tail_s = tail_pct = None
     if kept:
-        e2e["latency_p50_s"] = statistics.median(kept)
-        tail_s, tail_pct = tail(kept)
-        e2e["throughput_per_s"] = r["items"] / sum(kept)
+        times = [s for _, s in kept]
+        # the median leaves out tail-only samples (compaction batches)
+        plain = [s for n, s in kept if n not in r["tail_only"]] or times
+        e2e["latency_p50_s"] = statistics.median(plain)
+        tail_s, tail_pct = tail(times)
+        e2e["throughput_per_s"] = r["items"] / sum(times)
 
     names = REPORT_NAMES[args.workload]
     report = {names.get(k, k): {"value": v, "unit": END_TO_END[k]} for k, v in e2e.items()}
@@ -330,19 +358,20 @@ def main(argv=None):
             report[k] = {"value": r["report"][k], "unit": unit}
     if args.workload == "analytics_mix" and kept:
         report["queries_per_min"] = {"value": 60 * e2e["throughput_per_s"], "unit": "1/min"}
-    detail = {"workload": args.workload, "seed": args.seed, "trace": args.trace,
-              "size": args.size, "sizes": SIZES[args.workload][args.size], "cores": cores,
-              "setup_parts_s": {"jvm_boot": r["boot_s"], "session": r["session_s"],
-                                "generate_median_of_3": gen_s, "one_time_state": r["state_s"],
-                                "warmup": r["warmup_s"]},
-              "wall_s": {"generate_x3": t_jvm - t_start, "jvm": jvm_wall,
-                         "total": time.perf_counter() - t_start},
-              "failed_operations": failed,
-              "failed_checks": [c for c in checks if not c["ok"]],
-              "harness": r["report"]}
+    detail.update({
+        "setup_parts_s": {"jvm_boot": r["boot_s"], "session": r["session_s"],
+                          "generate_mean_of_2": gen_s, "one_time_state": r["state_s"],
+                          "warmup": r["warmup_s"]},
+        "wall_s": {"generate_x2": t_jvm - t_start, "untimed_checks": r["checks_s"],
+                   "jvm_teardown": teardown, "jvm": jvm_wall,
+                   "total": time.perf_counter() - t_start},
+        "tail_only": r["tail_only"],
+        "failed_operations": failed,
+        "failed_checks": [c for c in checks if not c["ok"]],
+        "harness": r["report"]})
 
     if args.trace:
-        names = {**PER_LAYER, **(ANALYTICS_LAYERS if args.workload == "analytics_mix" else {})}
+        names = layer_names(args.workload)
         layers = {k: r["layers"].get(k, 0.0) for k in names}
         layers["quality.m5_wrmsse"] = r["report"].get("m5_wrmsse", 0.0)
         layers["latency.tail_s"] = tail_s
@@ -360,10 +389,7 @@ def main(argv=None):
         metrics = {k: {"value": e2e[k], "unit": u} for k, u in END_TO_END.items()}
     line = {"correct": correct, "attempted": int(r["attempted"]), "failed": len(failed),
             "metrics": metrics}
-    with open(os.path.join(out, "summary.json"), "w") as f:
-        json.dump({**line, "report": report, "detail": detail}, f, indent=1)
-    print(json.dumps({"report": report, "detail": detail}))
-    print(json.dumps(line), flush=True)
+    emit(line, report, detail, out)
 
 
 if __name__ == "__main__":
