@@ -72,9 +72,12 @@ GENERATORS = {"m5_forecast": m5.generate, "analytics_mix": tables.generate,
 # The tail is in the report line and the per-layer metrics, not here: no
 # listed workload gets the eleven operations a run the tail rule needs
 # (m5_forecast measures one DAG), so it would be the max of a handful.
-END_TO_END = {"setup_s": "s", "latency_p50_s": "s", "throughput_per_s": "1/s",
-              "live_heap_peak_mb": "MB"}
+# The live heap is a per-layer metric, not here: after one DAG it reads
+# 228 or 153 MB, as Spark happens to hold a finished job's task memory
+# or not, so it cannot be bounded.
+END_TO_END = {"setup_s": "s", "latency_p50_s": "s", "throughput_per_s": "1/s"}
 PER_LAYER = {
+    "jvm.live_heap_peak_mb": "MB",
     "dag.task_busy_s": "s", "dag.ready_wait_s": "s", "dag.critical_path_s": "s",
     "dag.utilization": "ratio",
     "m5.ingest_s": "s", "m5.base_features_s": "s", "m5.ts_features_s": "s",
@@ -334,8 +337,7 @@ def main(argv=None):
     correct = code == 0 and not failed and all(c["ok"] for c in checks) and bool(kept)
 
     setup = r["boot_s"] + r["session_s"] + gen_s + r["state_s"] + r["warmup_s"]
-    e2e = {"setup_s": setup, "live_heap_peak_mb": r["live_heap_peak_mb"] or None,
-           "latency_p50_s": None, "throughput_per_s": None}
+    e2e = {"setup_s": setup, "latency_p50_s": None, "throughput_per_s": None}
     tail_s = tail_pct = None
     if kept:
         times = [s for _, s in kept]
@@ -348,10 +350,12 @@ def main(argv=None):
     names = REPORT_NAMES[args.workload]
     report = {names.get(k, k): {"value": v, "unit": END_TO_END[k]} for k, v in e2e.items()}
     report[names["latency_tail_s"]] = {"value": tail_s, "unit": "s"}
+    report["live_heap_peak_mb"] = {"value": r["live_heap_peak_mb"], "unit": "MB"}
     report["error_rate"] = {"value": len(failed) / max(1, r["attempted"]), "unit": "ratio"}
     report["tail_percentile"] = {"value": tail_pct, "unit": "%"}
     report["samples"] = {"value": len(kept), "unit": "count"}
-    extra_units = {"m5_wrmsse": "ratio", "m5_wrmsse_naive": "ratio", "neardup_recall": "ratio",
+    extra_units = {"m5_wrmsse": "ratio", "m5_wrmsse_naive": "ratio", "m5_wrmsse_zero": "ratio",
+                   "neardup_recall": "ratio",
                    "false_drop_rate": "ratio", "store_bytes_per_input_byte": "ratio"}
     for k, unit in extra_units.items():
         if k in r["report"]:
@@ -373,6 +377,7 @@ def main(argv=None):
     if args.trace:
         names = layer_names(args.workload)
         layers = {k: r["layers"].get(k, 0.0) for k in names}
+        layers["jvm.live_heap_peak_mb"] = r["live_heap_peak_mb"]
         layers["quality.m5_wrmsse"] = r["report"].get("m5_wrmsse", 0.0)
         layers["latency.tail_s"] = tail_s
         layers["latency.tail_pct"] = tail_pct
