@@ -269,8 +269,12 @@ object Bench {
     import org.json4s.jackson.JsonMethods
     try {
       val j = JsonMethods.parse(line)
-      def raw(k: String): String =
-        JsonMethods.compact(JsonMethods.render(j \ k))
+      // a key absent from the full line renders as "" — splicing that
+      // would emit `"runs":,` — so it becomes an explicit null
+      def raw(k: String): String = j \ k match {
+        case JNothing => "null"
+        case v => JsonMethods.compact(JsonMethods.render(v))
+      }
       val nQueries = (j \ "queries") match {
         case JObject(fields) => fields.size
         case _ => -1

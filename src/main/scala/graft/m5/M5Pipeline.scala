@@ -10,7 +10,7 @@ import graft.config.YamlConfig
 import graft.dag.TaskRunner
 import graft.dag.TaskRunner.{external, FileTarget, ParquetTarget, Task}
 import graft.io.Csv
-import graft.ml.Gbt
+import graft.ml.{Gbt, LabelVocab}
 import graft.operators.{Relational, TimeSeries}
 
 /** The reference's whole capability, recomposed Spark-first from the
@@ -187,9 +187,12 @@ final class M5Pipeline(spark: SparkSession, config: YamlConfig) {
   def trainModel(store: String, week: Int): Task = {
     val trainTask = prepareTrainData(store, week)
     val dir = modelDir(store, week)
-    // explicit commit marker: MLWriter's own _SUCCESS files land per
-    // sub-dir mid-save, so none of them alone marks a finished model
-    val target = FileTarget(s"$dir/_COMMITTED")
+    // the vocabulary file is the commit marker: written LAST, by an
+    // atomic move (MLWriter's own _SUCCESS files land per sub-dir
+    // mid-save, so none of them alone marks a finished model). A dir
+    // committed by the older per-column `encoders/` layout lacks it
+    // and retrains instead of failing at prediction time
+    val target = FileTarget(s"$dir/vocab.json")
     Task(s"TrainModel($store, $week)", target, deps = Seq(trainTask),
       body = () => {
         val sales = spark.read.parquet(trainTask.target.path)
@@ -207,15 +210,12 @@ final class M5Pipeline(spark: SparkSession, config: YamlConfig) {
           .filterNot(Set(predTargetCol, predDateCol, "date")) // O11
         val stringCols = featureCols.filter(c =>
           sales.schema(c).dataType == org.apache.spark.sql.types.StringType)
-        val encoders = Gbt.fitEncoders(sales, stringCols) // O13
-        val encoded = Gbt.applyEncoders(sales, encoders)
+        val vocab = LabelVocab.fit(sales, stringCols) // O13
+        val encoded = vocab.encode(sales)
           .withColumn("__valid", col("date") >= lit(validStart)) // O10
-        // native categorical splits (LightGBM parity): each encoded
-        // column's arity = vocab + the unseen slot; Gbt.assemble turns
-        // the small-arity ones into true nominal features
-        val catArity = encoders.map { case (c, vocab) =>
-          c -> (vocab.count().toInt + 1)
-        }
+        // native categorical splits (LightGBM parity): Gbt.assemble
+        // turns the small-arity columns into true nominal features
+        val catArity = vocab.arity
 
         val lgbParams = config.getMap("lgb_params")
         // the reference's actual objective (full.yaml:4): tweedie routes
@@ -234,12 +234,9 @@ final class M5Pipeline(spark: SparkSession, config: YamlConfig) {
             params, catArity)
           model.write.overwrite().save(s"$dir/model")
         }
-        encoders.foreach { case (c, vocab) =>
-          vocab.write.mode("overwrite").parquet(s"$dir/encoders/$c")
-        }
         Files.createDirectories(Paths.get(dir))
         Files.writeString(Paths.get(dir, "feature_cols.txt"), featureCols.mkString("\n"))
-        Files.writeString(Paths.get(dir, "_COMMITTED"), "ok")
+        vocab.save(target.path)
       })
   }
 
@@ -258,19 +255,13 @@ final class M5Pipeline(spark: SparkSession, config: YamlConfig) {
         val featureCols = Files.readAllLines(Paths.get(dir, "feature_cols.txt"))
           .toArray(Array.empty[String]).toSeq
         val xTest = spark.read.parquet(test.target.path)
-        val stringCols = featureCols.filter(c =>
-          xTest.schema(c).dataType == org.apache.spark.sql.types.StringType)
-        val encoders = stringCols.map(c =>
-          c -> spark.read.parquet(s"$dir/encoders/$c")).toMap
+        val vocab = LabelVocab.load(model.target.path)
         // the id FEATURE gets encoded in place; the output id must stay
         // the original string, so stash it before encoding
-        val encoded = Gbt.applyEncoders(
-          xTest.withColumn("__orig_id", col("id")), encoders)
+        val encoded = vocab.encode(xTest.withColumn("__orig_id", col("id")))
         // the same arity map the train task attached — assemble must
         // shift the same columns or codes would be off by one
-        val catArity = encoders.map { case (c, vocab) =>
-          c -> (vocab.count().toInt + 1)
-        }
+        val catArity = vocab.arity
         // a meta.json in the model dir marks the Tweedie loop's artifact;
         // the GBT path saves Spark ML's own layout
         val predicted =

@@ -5,8 +5,6 @@ import org.apache.spark.ml.regression.{GBTRegressionModel, GBTRegressor}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.Relational
-
 /** O37/O38 — gradient-boosted-tree regression tier.
   * Ref: LGBMRegressor fit/predict (pipeline.py:258-265, 287-294).
   *
@@ -21,7 +19,7 @@ import graft.operators.Relational
   *    `validationTol` is the Spark-native equivalent;
   *  - categoricals: LightGBM consumes pandas category codes natively;
   *    here strings are label-encoded to deterministic lexicographic
-  *    codes (O13) and fed as ordinal numerics;
+  *    codes ([[LabelVocab]], O13) and fed as ordinal numerics;
   *  - NaN handling: LightGBM routes missing values per split; GBT
   *    rejects NaN, so missing features are imputed with a sentinel
   *    that lands in its own extreme split region.
@@ -56,18 +54,6 @@ object Gbt {
       subsamplingRate = num("subsample", 1.0),
       featureSubsetStrategy = p.get("colsample_bytree").map(_.toString).getOrElse("all"))
   }
-
-  /** Deterministic per-column dictionaries (O13 semantics) fit on the
-    * training frame; unseen/null values map to -1 at apply time. */
-  def fitEncoders(df: DataFrame, cols: Seq[String]): Map[String, DataFrame] =
-    cols.map(c => c -> Relational.labelEncode(df, c).cache()).toMap
-
-  def applyEncoders(df: DataFrame, encoders: Map[String, DataFrame]): DataFrame =
-    encoders.foldLeft(df) { case (acc, (c, vocab)) =>
-      acc.join(broadcast(vocab.withColumnRenamed("code", s"__code_$c")), Seq(c), "left")
-        .withColumn(c, coalesce(col(s"__code_$c"), lit(-1L)))
-        .drop(s"__code_$c")
-    }
 
   /** Arity ceiling for NATIVE categorical treatment: a nominal feature
     * of arity a needs `maxBins >= a`, and maxBins is global — it also

@@ -282,9 +282,9 @@ object TweedieGbt {
 
   /** Fit on rows where `validCol` is false; validation rows drive early
     * stopping. `train` must already carry an assembled `features`
-    * vector column (use [[Gbt.fitEncoders]]/`assemble` upstream or
-    * [[fitAssembled]]'s companion below). Labels must be ≥ 0 (Tweedie
-    * support); negative labels fail fast. */
+    * vector column (encode strings with [[LabelVocab]], then
+    * `Gbt.assemble`). Labels must be ≥ 0 (Tweedie support); negative
+    * labels fail fast. */
   def fit(train: DataFrame, featuresCol: String, labelCol: String,
       validCol: String, params: Params): Model = {
     val spark = train.sparkSession

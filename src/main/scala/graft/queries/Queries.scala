@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -45,7 +46,13 @@ object Queries {
     * so every downstream aggregate/join is value-identical. */
   private def spread(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
+    // the split count comes from df's own physical plan, before AQE
+    // wraps it: `df.rdd` would plan a second, deserializing copy of
+    // the query on every call
+    val splits = df.queryExecution.sparkPlan.collect {
+      case scan: FileSourceScanExec => scan.inputRDD.getNumPartitions
+    }.sum
+    if (splits >= target) df else df.repartition(target)
   }
 
   /** T01 — scan + projection (O11). */

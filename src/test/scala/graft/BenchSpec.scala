@@ -163,4 +163,15 @@ class BenchSpec extends SparkSpec {
     assert(!Bench.divertToPartial(isSubset = true,
       scratchDefault = false, force = true, Some(full), smaller))
   }
+
+  test("compactLine renders a key missing from the full line as null, keeping the JSON valid") {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods
+    val full = """{"metric":"total","value":12.5,"failed":0,"degraded":false,""" +
+      """"sf":"sf0.01","chunks":1,"queries":{"t01":0.5,"t02":0.7}}"""
+    val compact = Bench.compactLine(full)
+    val j = JsonMethods.parse(compact)
+    assert(j \ "runs" == JNull, s"absent key must be null: $compact")
+    assert(j \ "value" == JDouble(12.5) && j \ "n_queries" == JInt(2), compact)
+  }
 }

@@ -162,6 +162,25 @@ class M5PipelineSpec extends SparkSpec {
     val report3 = pipeline.run(log = _ => ())
     assert(report3.ran.toSet ==
       Set("RunPredictionStoreWeek(CA_1, 1)", "RunPredictionAll", "RunSubmission"))
+
+    // a model dir committed by the older per-column layout (_COMMITTED
+    // marker + encoders/<col> parquet, no vocab.json) must retrain, not
+    // reach prediction without a vocabulary
+    val submission = Files.readAllBytes(Paths.get(outDir, "submission.csv"))
+    val modelDir = Paths.get(outDir, "model_store_TX_1_week_2")
+    TaskRunnerLikeDelete.delete(modelDir.resolve("vocab.json").toString)
+    Files.writeString(modelDir.resolve("_COMMITTED"), "ok")
+    spark.range(1).selectExpr("'x' AS id", "0L AS code")
+      .write.parquet(modelDir.resolve("encoders/id").toString)
+    Seq("pred_store_TX_1_week_2.parquet", "predictions.parquet", "submission.csv")
+      .foreach(t => TaskRunnerLikeDelete.delete(s"$outDir/$t"))
+    val report4 = pipeline.run(log = _ => ())
+    assert(report4.ran.toSet == Set("TrainModel(TX_1, 2)",
+      "RunPredictionStoreWeek(TX_1, 2)", "RunPredictionAll", "RunSubmission"))
+    assert(Files.exists(modelDir.resolve("vocab.json")))
+    assert(java.util.Arrays.equals(submission,
+      Files.readAllBytes(Paths.get(outDir, "submission.csv"))),
+      "the retrained model must reproduce the submission")
   }
 
   test("submission bytes are deterministic across independent runs (fixed seed)") {
