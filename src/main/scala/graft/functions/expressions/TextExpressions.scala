@@ -122,6 +122,64 @@ case class WordShingleHashes(child: Expression, n: Int)
     copy(child = newChild)
 }
 
+/** MinHash signature of one shingle-hash set in one codegen loop:
+  * element j is `min over h of ((2j+3)·h + 7j+1) mod P`, the
+  * [[graft.functions.Hashing.permHash]] family, for j < `numHashes`.
+  * Null for an empty set (the grouped form emits no signature row for
+  * a doc without shingles). Hashes are in [0, P), so every product
+  * stays below 2^63.
+  *
+  * Why: a doc's signature needs only its own hashes, so it is a per-row
+  * projection — the grouped `min(permHash(h, j))` form explodes one row
+  * per shingle and shuffles them by doc. The HOF twin
+  * `array_min(transform(hs, h -> permHash(h, j)))` is interpreted per
+  * element, once per j. Both eval paths call [[MinHashKernel.signature]]. */
+case class MinHashSignature(child: Expression, numHashes: Int)
+    extends UnaryExpression {
+
+  require(numHashes >= 1, s"numHashes must be >= 1, got $numHashes")
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = true
+
+  override def nullSafeEval(input: Any): Any =
+    MinHashKernel.signature(input.asInstanceOf[ArrayData], numHashes)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, hs =>
+      s"""
+         |${ev.value} = graft.functions.expressions.MinHashKernel.signature($hs, $numHashes);
+         |${ev.isNull} = ${ev.value} == null;
+       """.stripMargin)
+
+  override protected def withNewChildInternal(newChild: Expression): MinHashSignature =
+    copy(child = newChild)
+}
+
+object MinHashKernel {
+  private val P = graft.functions.Hashing.P
+
+  /** Shared eval body for [[MinHashSignature]] (called from generated
+    * code too — keep the signature Java-friendly). */
+  def signature(hs: ArrayData, numHashes: Int): ArrayData = {
+    val m = hs.numElements()
+    if (m == 0) return null
+    val out = Array.fill(numHashes)(Long.MaxValue)
+    var i = 0
+    while (i < m) {
+      val h = hs.getLong(i)
+      var j = 0
+      while (j < numHashes) {
+        val v = ((2L * j + 3L) * h + 7L * j + 1L) % P
+        if (v < out(j)) out(j) = v
+        j += 1
+      }
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+}
+
 /** EXACT distinct word-n-gram count in one codegen loop — the kernel
   * behind the repetition (duplicated-gram) quality signal.
   *

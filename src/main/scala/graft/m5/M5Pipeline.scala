@@ -197,14 +197,17 @@ final class M5Pipeline(spark: SparkSession, config: YamlConfig) {
       body = () => {
         val sales = spark.read.parquet(trainTask.target.path)
         // validation split point: min of the last valid_num_days
-        // distinct train dates (O23/O24, pipeline.py:245-246)
+        // distinct train dates (O23/O24, pipeline.py:245-246), picked on
+        // the driver from one collect of the distinct dates (at most the
+        // calendar's ~2k days). A null date counts toward the distinct
+        // total but is never the split point
         val n = config.getInt("valid_num_days")
-        val distinctDates = sales.select("date").distinct()
-        val nDates = distinctDates.count()
+        val dates = sales.select("date").distinct().collect().map(_.getDate(0))
+        val known = dates.filter(_ != null).sortBy(_.getTime)
         val validStart =
-          if (nDates <= n) distinctDates.agg(min(col("date"))).head().getDate(0)
-          else Relational.nthFromLastDistinct(sales.select(col("date")), "date", n)
-            .head().getDate(0)
+          if (known.isEmpty) null
+          else if (dates.length <= n) known.head
+          else known(known.length - n)
 
         val featureCols = sales.columns.toSeq
           .filterNot(Set(predTargetCol, predDateCol, "date")) // O11

@@ -179,15 +179,17 @@ object HistTree {
   /** Build the binning dictionary: nominal arities from the feature
     * column's ML attribute metadata; numeric edges from a ≤
     * `sampleCount`-row sample (LightGBM's `bin_construct_sample_cnt`
-    * idea). Distinct-poor features get exact mid-point edges. */
+    * idea). Distinct-poor features get exact mid-point edges.
+    * `rowCount`, when the caller already knows `df`'s row count, spares
+    * the count job that sizes the sample. */
   def buildBins(df: DataFrame, featuresCol: String, maxBins: Int = 255,
-      sampleCount: Int = 200000, seed: Long = 42L): Bins = {
+      sampleCount: Int = 200000, seed: Long = 42L, rowCount: Long = -1L): Bins = {
     require(maxBins >= 4 && maxBins <= Short.MaxValue - 1,
       s"maxBins out of range: $maxBins")
     val ag = org.apache.spark.ml.attribute.AttributeGroup
       .fromStructField(df.schema(featuresCol))
     val attrs = ag.attributes
-    val n = df.count()
+    val n = if (rowCount >= 0) rowCount else df.count()
     val frac = math.min(1.0, sampleCount * 1.2 / math.max(n, 1L))
     val sample = df.select(col(featuresCol))
       .sample(withReplacement = false, frac, seed)

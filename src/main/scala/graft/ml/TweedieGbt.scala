@@ -294,13 +294,20 @@ object TweedieGbt {
       .withColumn("__y", col(labelCol).cast("double"))
       .select(col(featuresCol).as("features"), col("__y"),
         col(validCol).cast("boolean").as("__valid"))
-    require(base0.filter(col("__y") < 0).isEmpty,
-      "Tweedie labels must be non-negative")
+    // one pass for the label guard, the train mean and both split sizes
+    val stats = base0.agg(
+      count(when(col("__y") < 0, 1)),
+      avg(when(!col("__valid"), col("__y"))),
+      count(when(!col("__valid"), 1)),
+      count(when(col("__valid"), 1))).head()
+    require(stats.getLong(0) == 0, "Tweedie labels must be non-negative")
+    require(!stats.isNullAt(1), "Tweedie fit needs at least one train row")
+    val trainRows = stats.getLong(2)
+    val hasValid = stats.getLong(3) > 0
 
     // F0 = log(mean y) over TRAIN rows only (LightGBM's boost_from_average
     // for tweedie); ε-guard for an all-zero label column
-    val meanY = base0.filter(!col("__valid")).agg(avg("__y")).head().getDouble(0)
-    val f0 = math.log(math.max(meanY, 1e-9))
+    val f0 = math.log(math.max(stats.getDouble(1), 1e-9))
 
     // honor nominal-attribute metadata attached by Gbt.assemble: native
     // categorical splits need maxBins >= the largest nominal arity
@@ -320,7 +327,7 @@ object TweedieGbt {
     val histBins =
       if (params.histogram)
         Some(HistTree.buildBins(base0.filter(!col("__valid")), "features",
-          maxBins = params.histMaxBins, seed = params.seed))
+          maxBins = params.histMaxBins, seed = params.seed, rowCount = trainRows))
       else None
     val base1 = histBins match {
       case Some(hb) =>
@@ -348,7 +355,6 @@ object TweedieGbt {
     var best = (Double.MaxValue, 0) // (valid deviance, round)
     val stages = scala.collection.mutable.ArrayBuffer.empty[BoostStage]
     val validDev = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val hasValid = !cur.filter(col("__valid")).isEmpty
 
     var round = 0
     var stop = false
@@ -452,21 +458,22 @@ object TweedieGbt {
       // checkpointInterval=1 (every round is a cut, releases only ever
       // free a frame with a checkpointed successor) or defer release
       // to the next checkpoint boundary.
-      val next =
-        if ((round + 1) % params.checkpointInterval == 0)
-          next0.localCheckpoint(true)
-        else { val c = next0.persist(); c.count(); c }
-      release(cur)
-      cur = next
-
+      // A plain persist is materialized by the round's first action —
+      // the validation deviance, or a count when there is no validation
+      // split — and only then is the previous round released: its blocks
+      // are the persisted frame's lineage until that action has run.
+      val checkpointed = (round + 1) % params.checkpointInterval == 0
+      val next = if (checkpointed) next0.localCheckpoint(true) else next0.persist()
       if (hasValid) {
         val dev = meanDeviance(
-          cur.filter(col("__valid")).withColumn("__mu", exp(col("__F"))),
+          next.filter(col("__valid")).withColumn("__mu", exp(col("__F"))),
           "__y", "__mu", p)
         validDev += dev
         if (dev < best._1 - 1e-12) best = (dev, round + 1)
         else if (round + 1 - best._2 >= params.earlyStoppingRounds) stop = true
-      }
+      } else if (!checkpointed) next.count()
+      release(cur)
+      cur = next
       round += 1
     }
     release(cur)

@@ -15,7 +15,9 @@ import graft.util.CacheScope
   *  - MinHash: shingle explode → per-(doc, hashIdx) min-aggregate →
   *    band-key join. Candidate generation never compares all pairs; the
   *    only quadratic step is per-bucket, and LSH banding keeps buckets
-  *    small. Signatures are 16 longs/doc regardless of doc size.
+  *    small. Signatures are 16 longs/doc regardless of doc size. The
+  *    persisted index and its probe sketch each doc in one per-row pass
+  *    instead ([[minhashSketch]]): no shingle row is ever shuffled.
   *  - SimHash: one explode + one aggregate per doc → 30-bit fingerprint;
   *    near-dup candidates via band buckets (pigeonhole: hamming ≤ 2 over
   *    3 bands ⇒ one band matches exactly), verified with bit_count(xor).
@@ -78,6 +80,55 @@ object Dedup {
     val mins: Seq[Column] = (0 until numHashes).map(j =>
       min(Hashing.permHash(col("h"), lit(j.toLong))).as(s"mh_$j"))
     shingles.groupBy(col("doc")).agg(mins.head, mins.tail: _*)
+  }
+
+  /** Row-local MinHash sketch: `df` plus `hs` (the sorted distinct
+    * shingle hashes of `textCol`, empty for null or short text), `sz`
+    * (= |hs|) and `mh_0..mh_{n-1}` (the signature, null when sz = 0).
+    * For each row the values equal [[shingleHashes]] →
+    * [[minhashSignatures]] over that row alone (spec-pinned), but the
+    * sketch is one per-row projection: no explode, no `distinct`, no
+    * shuffle — a shingle never leaves its document's row. */
+  def minhashSketch(df: DataFrame, textCol: String,
+      shingleSize: Int, numHashes: Int): DataFrame = {
+    import org.apache.spark.sql.graft.ColumnBridge
+    val clash = sketchCols(numHashes).filter(df.columns.contains)
+    require(clash.isEmpty, s"sketch columns already present: ${clash.mkString(", ")}")
+    val hashes = ColumnBridge.column(graft.functions.expressions.WordShingleHashes(
+      ColumnBridge.expression(Text.tokens(col(textCol))), shingleSize))
+    // two projections, each expensive column computed once: the
+    // optimizer never inlines a costly producer into several consumers
+    val withSet = df.withColumn("hs", coalesce(
+      sort_array(array_distinct(hashes)), array().cast("array<bigint>")))
+    val sig = ColumnBridge.column(graft.functions.expressions.MinHashSignature(
+      ColumnBridge.expression(col("hs")), numHashes))
+    withSet.withColumn("__sig", sig)
+      .select(df.columns.map(c => col(s"`$c`")) ++
+        sketchOf(col("hs"), col("__sig").getItem(_), numHashes): _*)
+  }
+
+  /** Column names of a sketch, in order: hs, sz, mh_0..mh_{n-1}. */
+  private def sketchCols(numHashes: Int): Seq[String] =
+    Seq("hs", "sz") ++ (0 until numHashes).map(j => s"mh_$j")
+
+  private def sketchOf(hs: Column, mh: Int => Column, numHashes: Int): Seq[Column] =
+    Seq(hs.cast("array<bigint>").as("hs"), size(hs).cast("bigint").as("sz")) ++
+      (0 until numHashes).map(j => mh(j).as(s"mh_$j"))
+
+  /** One sketch row per distinct `idCol` value, keyed `doc`: rows that
+    * share an id merge into one set (union of hs, element-wise min of
+    * each mh_j — the min over the union). A doc-level aggregate of
+    * sketch arrays; shingle rows are never shuffled. `carry` aggregates
+    * ride along as extra trailing columns. */
+  private[graft] def docSketches(sketched: DataFrame, idCol: String,
+      numHashes: Int, carry: Seq[Column] = Nil): DataFrame = {
+    val mins = (0 until numHashes).map(j => min(col(s"mh_$j")).as(s"__mh_$j"))
+    val merged = sketched.groupBy(col(idCol).as("doc"))
+      .agg(sort_array(array_distinct(flatten(collect_list(col("hs"))))).as("__hs"),
+        mins ++ carry: _*)
+    merged.select(col("doc") +:
+      (sketchOf(col("__hs"), j => col(s"__mh_$j"), numHashes) ++
+        merged.columns.drop(2 + numHashes).map(c => col(s"`$c`"))): _*)
   }
 
   /** LSH banding over wide signatures: bucket key per (doc, band) =
@@ -617,26 +668,37 @@ object Dedup {
       aSets: DataFrame, bSets: DataFrame, pairs: DataFrame, threshold: Double,
       roundDigits: Int = 4): DataFrame = {
     // size-ratio prefilter, same bound as in [[jaccard]]
-    val eps = math.pow(10.0, -roundDigits) / 2
     val prefiltered = pairs
-      .join(aSets.select(col("doc").as("a"), col("sz").as("__sa")), Seq("a"))
-      .join(bSets.select(col("doc").as("b"), col("sz").as("__sb")), Seq("b"))
-      .where(least(col("__sa"), col("__sb")).cast("double") >=
-        lit(threshold - eps) * greatest(col("__sa"), col("__sb")).cast("double"))
+      .join(aSets.select(col("doc").as("a"), col("sz").as("sa")), Seq("a"))
+      .join(bSets.select(col("doc").as("b"), col("sz").as("sb")), Seq("b"))
+      .where(sizeRatioAdmits(threshold, roundDigits))
       .select(col("a"), col("b"))
-    import org.apache.spark.sql.graft.ColumnBridge
-    val inter = ColumnBridge.column(
-      graft.functions.expressions.SortedIntersectCount(
-        ColumnBridge.expression(col("ha")), ColumnBridge.expression(col("hb"))))
-    prefiltered
+    withJaccard(prefiltered
       .join(aSets.select(col("doc").as("a"), col("hs").as("ha"), col("sz").as("sa")), Seq("a"))
-      .join(bSets.select(col("doc").as("b"), col("hs").as("hb"), col("sz").as("sb")), Seq("b"))
-      .withColumn("inter", inter)
-      .withColumn("jac", round(
-        col("inter").cast("double") /
-          (col("sa") + col("sb") - col("inter")).cast("double"), roundDigits))
+      .join(bSets.select(col("doc").as("b"), col("hs").as("hb"), col("sz").as("sb")), Seq("b")),
+      roundDigits)
       .where(col("jac") >= threshold)
       .select(col("a"), col("b"), col("jac"))
+  }
+
+  /** J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|) over size columns `sa`/`sb`: a
+    * pair this rejects can never reach `threshold` (the ε keeps a pair
+    * whose TRUE Jaccard is a hair under the threshold but ROUNDS up). */
+  private def sizeRatioAdmits(threshold: Double, roundDigits: Int): Column = {
+    val eps = math.pow(10.0, -roundDigits) / 2
+    least(col("sa"), col("sb")).cast("double") >=
+      lit(threshold - eps) * greatest(col("sa"), col("sb")).cast("double")
+  }
+
+  /** `df` plus `jac`, the rounded |A∩B| / |A∪B| of its sorted sets
+    * `ha`/`hb` with sizes `sa`/`sb` (|A∩B| by a merge walk). */
+  private def withJaccard(df: DataFrame, roundDigits: Int): DataFrame = {
+    import org.apache.spark.sql.graft.ColumnBridge
+    df.withColumn("__inter", ColumnBridge.column(
+        graft.functions.expressions.SortedIntersectCount(
+          ColumnBridge.expression(col("ha")), ColumnBridge.expression(col("hb")))))
+      .withColumn("jac", round(col("__inter").cast("double") /
+        (col("sa") + col("sb") - col("__inter")).cast("double"), roundDigits))
   }
 
   /** The drop form of [[minhashNearDupsAgainstReference]]: keep only
@@ -687,8 +749,8 @@ object Dedup {
     def write(dir: String): Unit = {
       NearDupIndex.writeParams(bands.sparkSession, dir,
         shingleSize, numHashes, rowsPerBand)
-      bands.write.mode("overwrite").parquet(s"$dir/bands")
-      sets.write.mode("overwrite").parquet(s"$dir/sets")
+      NearDupIndex.sized(bands).write.mode("overwrite").parquet(s"$dir/bands")
+      NearDupIndex.sized(sets).write.mode("overwrite").parquet(s"$dir/sets")
       // an overwrite may change the doc column's type (rebuild over a
       // different id column) — the schema memo must relearn, not serve
       // the pre-rebuild schema
@@ -698,7 +760,10 @@ object Dedup {
     /** Append a new batch's index rows (the incremental-store shape:
       * the curated store indexes each batch as it is admitted). Fails
       * fast if the slice's sketch params differ from the stored
-      * sidecar; writes the sidecar if this append creates the dir. */
+      * sidecar; writes the sidecar if this append creates the dir.
+      * Each relation is narrowed to its estimated size first
+      * ([[NearDupIndex.sized]]): a batch-sized slice adds one part file
+      * per dir. */
     def append(dir: String): Unit = {
       val spark = bands.sparkSession
       NearDupIndex.readParams(spark, dir) match {
@@ -710,14 +775,27 @@ object Dedup {
         case None =>
           NearDupIndex.writeParams(spark, dir, shingleSize, numHashes, rowsPerBand)
       }
-      bands.write.mode("append").parquet(s"$dir/bands")
-      sets.write.mode("append").parquet(s"$dir/sets")
+      NearDupIndex.sized(bands).write.mode("append").parquet(s"$dir/bands")
+      NearDupIndex.sized(sets).write.mode("append").parquet(s"$dir/sets")
     }
   }
 
   object NearDupIndex {
     private val ParamsFile = "params.json"
     private val CorpusFile = "corpus.json"
+
+    /** `df` narrowed, without a shuffle, to one partition per
+      * advisory-partition-size of its estimated bytes — the part-file
+      * count a shuffled slice gets after AQE coalescing, so each
+      * appended slice adds one file per dir at batch size whatever its
+      * upstream partitioning (the compaction cadence counts files). */
+    private def sized(df: DataFrame): DataFrame = {
+      val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+      val target = df.sparkSession.sessionState.conf.getConf(
+        org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+      df.coalesce(((bytes + target - 1) / target)
+        .max(BigInt(1)).min(BigInt(Int.MaxValue)).toInt)
+    }
 
     /** Corpus-identity stamp for [[ensurePersistedIndex]]'s staleness
       * check: a mode tag plus (count, order-independent fingerprint).
@@ -801,31 +879,41 @@ object Dedup {
     }
   }
 
-  /** Build the [[NearDupIndex]] for a (new slice of the) frozen corpus:
-    * one shingle pass feeds both the signature→band pipeline and the
-    * sorted-set aggregation. This is the ONLY time the corpus text is
-    * read for fuzzy dedup; every subsequent batch probes the stored
-    * index (Dedup.scala r3 VERDICT #2). */
+  /** Build the [[NearDupIndex]] for a (new slice of the) frozen corpus.
+    * This is the ONLY time the corpus text is read for fuzzy dedup;
+    * every subsequent batch probes the stored index (Dedup.scala r3
+    * VERDICT #2).
+    *
+    * Scale shape: one per-row sketch pass ([[minhashSketch]]) and one
+    * doc-level merge ([[docSketches]]) feed both relations — `bands`
+    * from the merged signature columns, `sets` from the merged hs/sz.
+    * No shingle row is exploded or shuffled; the only exchange carries
+    * one sketch row per (doc, partition). `sets` holds one row per doc,
+    * even when the doc is too short to shingle (empty hs, sz = 0 — it
+    * can never be a candidate, having no band keys): it doubles as the
+    * index's doc manifest, so a store-vs-index divergence check (the
+    * crash-window repair in streaming/Incremental) can compare row
+    * counts exactly. */
   def buildNearDupIndex(
       reference: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, numHashes: Int = 16, rowsPerBand: Int = 4,
       scope: graft.util.CacheScope = graft.util.CacheScope.unmanaged): NearDupIndex = {
-    val rs = scope.persist(shingleHashes(reference, idCol, textCol, shingleSize))
-    val bands = lshBandKeys(minhashSignatures(rs, numHashes), numHashes, rowsPerBand)
-    // One sets row per doc, even when the doc is too short to shingle
-    // (empty hs, sz = 0 — it can never be a candidate, having no band
-    // keys): `sets` doubles as the index's doc manifest, so a
-    // store-vs-index divergence check (the crash-window repair in
-    // streaming/Incremental) can compare row counts exactly.
-    val shingled = rs.groupBy(col("doc"))
-      .agg(sort_array(collect_list(col("h"))).as("hs"), count(lit(1)).as("sz"))
-    val sets = reference.select(col(idCol).as("doc")).distinct()
-      .join(shingled, Seq("doc"), "left")
-      .select(col("doc"),
-        coalesce(col("hs"), array().cast("array<long>")).as("hs"),
-        coalesce(col("sz"), lit(0L)).as("sz"))
-    NearDupIndex(bands, sets, shingleSize, numHashes, rowsPerBand)
+    // persisted: both relations read the merged sketches
+    val docs = scope.persist(docSketches(
+      minhashSketch(reference.select(col(idCol), col(textCol)), textCol,
+        shingleSize, numHashes), idCol, numHashes))
+    indexOfSketches(docs, shingleSize, numHashes, rowsPerBand)
   }
+
+  /** The two index relations of already-merged doc sketches
+    * ([[docSketches]] output): band keys for docs with shingles, one
+    * `sets` row for every doc. */
+  private[graft] def indexOfSketches(docs: DataFrame,
+      shingleSize: Int, numHashes: Int, rowsPerBand: Int): NearDupIndex =
+    NearDupIndex(
+      lshBandKeys(docs.where(col("sz") > 0), numHashes, rowsPerBand),
+      docs.select(col("doc"), col("hs"), col("sz")),
+      shingleSize, numHashes, rowsPerBand)
 
   /** Memoized build: read the index back from `dir` if one is already
     * persisted there with the same sketch params AND the same corpus
@@ -950,37 +1038,50 @@ object Dedup {
   }
 
   /** [[minhashNearDupsAgainstReference]] against a precomputed
-    * [[NearDupIndex]]: per batch, only the BATCH is shingled and
-    * signed; the corpus side contributes its stored band keys to
-    * candidate generation and its stored shingle sets (candidate docs
-    * only) to the verify. Per-batch cost is O(batch + candidates)
-    * regardless of corpus size — the index is scanned, never rebuilt,
-    * and corpus TEXT is never touched. Output contract = the recompute
-    * form's: (a = batch id, b = reference id, jac ≥ threshold). */
+    * [[NearDupIndex]]: per batch, only the BATCH is sketched; the corpus
+    * side contributes its stored band keys to candidate generation and
+    * its stored shingle sets to the verify. Output contract = the
+    * recompute form's: (a = batch id, b = reference id, jac ≥
+    * threshold).
+    *
+    * Scale shape: the index is scanned, never rebuilt, and corpus TEXT
+    * is never touched. The batch is sketched once, row-locally
+    * ([[minhashSketch]]); its band keys and verify sets both come from
+    * that one doc-level sketch, so no shingle row is exploded or
+    * shuffled. The exchanges carry band keys, candidate pairs and the
+    * sets joined to them. */
   def minhashNearDupsAgainstIndex(
       batch: DataFrame, index: NearDupIndex, idCol: String, textCol: String,
       threshold: Double = 0.5,
-      scope: graft.util.CacheScope = graft.util.CacheScope.unmanaged): DataFrame = {
-    val bs = scope.persist(
-      shingleHashes(batch, idCol, textCol, index.shingleSize))
-    val bBands = lshBandKeys(
-      minhashSignatures(bs, index.numHashes), index.numHashes, index.rowsPerBand)
-    // persisted (r19): pairs feeds both set semi-joins + the verify
-    // prefilter (3x); each set frame feeds the prefilter + verify (2x)
-    val pairs = scope.persist(
-      bBands.select(col("band"), col("bkey"), col("doc").as("a"))
-        .join(index.bands.select(col("band"), col("bkey"), col("doc").as("b")),
-          Seq("band", "bkey"))
-        .select(col("a"), col("b")).distinct())
-    val aSets = scope.persist(bs
-      .join(pairs.select(col("a").as("doc")).distinct(), Seq("doc"), "left_semi")
-      .groupBy(col("doc"))
-      .agg(sort_array(collect_list(col("h"))).as("hs"),
-        count(lit(1)).as("sz")))
-    val bSets = scope.persist(index.sets
-      .join(pairs.select(col("b").as("doc")).distinct(), Seq("doc"),
-        "left_semi"))
-    jaccardVerifyCross(aSets, bSets, pairs, threshold)
+      scope: graft.util.CacheScope = graft.util.CacheScope.unmanaged): DataFrame =
+    nearDupsOfSketches(
+      scope.persist(docSketches(
+        minhashSketch(batch.select(col(idCol), col(textCol)), textCol,
+          index.shingleSize, index.numHashes), idCol, index.numHashes)),
+      index, threshold)
+
+  /** The probe core of [[minhashNearDupsAgainstIndex]] over merged doc
+    * sketches ([[docSketches]] output, sketched with the index's params;
+    * `docs` is read twice, so hand in a persisted or checkpointed frame).
+    * Each candidate pair is joined to its two sets once: the batch side
+    * from `docs`, the corpus side from the stored sets; the size-ratio
+    * bound of [[jaccardVerifyCross]] then skips the merge walk for pairs
+    * that cannot reach the threshold, so the output is the same. */
+  private[graft] def nearDupsOfSketches(
+      docs: DataFrame, index: NearDupIndex, threshold: Double,
+      roundDigits: Int = 4): DataFrame = {
+    val pairs = lshBandKeys(docs.where(col("sz") > 0), index.numHashes, index.rowsPerBand)
+      .select(col("band"), col("bkey"), col("doc").as("a"))
+      .join(index.bands.select(col("band"), col("bkey"), col("doc").as("b")),
+        Seq("band", "bkey"))
+      .select(col("a"), col("b")).distinct()
+    withJaccard(pairs
+      .join(docs.select(col("doc").as("a"), col("hs").as("ha"), col("sz").as("sa")), Seq("a"))
+      .join(index.sets.select(col("doc").as("b"), col("hs").as("hb"), col("sz").as("sb")),
+        Seq("b"))
+      .where(sizeRatioAdmits(threshold, roundDigits)), roundDigits)
+      .where(col("jac") >= threshold)
+      .select(col("a"), col("b"), col("jac"))
   }
 
   /** Drop form of [[minhashNearDupsAgainstIndex]]: the batch minus docs

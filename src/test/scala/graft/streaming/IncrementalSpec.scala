@@ -924,4 +924,116 @@ class IncrementalSpec extends SparkSpec {
     assert(spark.read.parquet(curDir).select("doc_id")
       .as[Long].collect().toSet == Set(11L, 30L, 31L))
   }
+
+  /** A reference of `refDocs` 40-word docs and a fuzzy batch stream over
+    * it: batch b holds `fresh` new docs, a near and an exact copy of a
+    * reference doc and, from the second batch on, a near and an exact
+    * copy of a doc the batch before admitted. */
+  private def fuzzyStream(tmp: String, refDocs: Int, fresh: Int) = {
+    def words(prefix: String, n: Int): String =
+      (1 to n).map(i => s"$prefix$i").mkString(" ")
+    val refDir = s"$tmp/ref"
+    (1 to refDocs).map(i => (i.toLong, words(s"ref$i-", 40)))
+      .toDF("doc_id", "text").write.parquet(refDir)
+    def freshText(b: Int, i: Int) = words(s"b$b-d$i-", 40)
+    def batch(b: Int) = {
+      val base = 1000L * b
+      val own = (0 until fresh).map(i => (base + i, freshText(b, i)))
+      val refCopies = Seq(
+        (base + 100, words(s"ref${b % refDocs + 1}-", 40) + " edited tail"),
+        (base + 101, words(s"ref${(b + 1) % refDocs + 1}-", 40)))
+      val prevCopies =
+        if (b == 1) Nil
+        else Seq((base + 200, freshText(b - 1, 0) + " edited tail"),
+          (base + 201, freshText(b - 1, 1)))
+      (own ++ refCopies ++ prevCopies).toDF("doc_id", "text")
+    }
+    (refDir, batch _)
+  }
+
+  private def parquetFiles(d: String): Int = Option(new java.io.File(d).listFiles)
+    .map(_.count(_.getName.endsWith(".parquet"))).getOrElse(0)
+
+  test("fuzzy batches keep a fixed job count and a flat probe plan") {
+    val tmp = Files.createTempDirectory("graft-incr-budget").toString
+    val curDir = s"$tmp/curated"; val idxDir = s"$tmp/ndindex"
+    val (refDir, batch) = fuzzyStream(tmp, refDocs = 6, fresh = 6)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val marker = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val probePlans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val group = Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+        if (group.contains("graft-budget-marker")) marker.set(true)
+        else jobs.incrementAndGet(): Unit
+      }
+      // the probe is the one query that scans the stored band keys
+      // without writing them (compaction is off below)
+      override def onOtherEvent(
+          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case st: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+            if st.physicalPlanDescription.contains(s"$idxDir/bands") &&
+              !st.physicalPlanDescription.contains("InsertIntoHadoopFsRelationCommand") =>
+          probePlans.add(st.physicalPlanDescription): Unit
+        case _ =>
+      }
+    }
+    // (jobs, probe plan lengths) per batch; expression ids grow with the
+    // session, so they are masked before lengths are compared
+    val perBatch = (1 to 4).map { b =>
+      val input = batch(b).localCheckpoint()
+      marker.set(false); jobs.set(0); probePlans.clear()
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        Incremental.curateBatchFuzzy(spark, input, "doc_id", "text",
+          refDir, curDir, idxDir, threshold = 0.5, compactAfterFiles = 0)
+        // flush: the listener bus is FIFO, so once the marker lands
+        // every job and execution of the batch has been seen
+        spark.sparkContext.setJobGroup("graft-budget-marker", "flush")
+        try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
+        val deadline = System.nanoTime() + 10_000_000_000L
+        while (!marker.get && System.nanoTime() < deadline) Thread.sleep(20)
+        assert(marker.get, "listener bus never delivered the marker job")
+      } finally spark.sparkContext.removeSparkListener(listener)
+      val plans = probePlans.toArray(Array.empty[String]).toSeq
+      (jobs.get, plans.map(_.replaceAll("#\\d+", "#").length))
+    }
+    info(s"per batch (jobs, probe plan chars): $perBatch")
+    val steady = perBatch.drop(1)
+    assert(steady.map(_._1).distinct.size == 1,
+      s"batches 2-4 must run the same number of jobs: ${steady.map(_._1)}")
+    assert(steady.forall(_._2.size == 1), s"one probe query per batch: $steady")
+    assert(steady.map(_._2).distinct.size == 1,
+      s"the probe plan must not grow from batch to batch: ${steady.map(_._2)}")
+    assert(steady.head._2.head < 256 * 1024,
+      s"probe plan is ${steady.head._2.head} chars")
+    // every batch admitted its fresh docs and dropped all four copies
+    val ids = spark.read.parquet(curDir).select("doc_id").as[Long].collect().toSet
+    assert(ids == (1 to 4).flatMap(b => (0 until 6).map(i => 1000L * b + i)).toSet,
+      s"unexpected curated ids: ${ids.toSeq.sorted}")
+  }
+
+  test("an admitting fuzzy batch adds one part file per index dir and the store's usual count") {
+    val tmp = Files.createTempDirectory("graft-incr-cadence").toString
+    val curDir = s"$tmp/curated"; val idxDir = s"$tmp/ndindex"
+    val (refDir, batch) = fuzzyStream(tmp, refDocs = 6, fresh = 24)
+    def counts = Seq(curDir, s"$idxDir/bands", s"$idxDir/sets").map(parquetFiles)
+    val deltas = (1 to 3).map { b =>
+      val before = counts
+      Incremental.curateBatchFuzzy(spark, batch(b), "doc_id", "text",
+        refDir, curDir, idxDir, threshold = 0.5, compactAfterFiles = 0)
+      counts.zip(before).map { case (a, z) => a - z }
+    }
+    info(s"part files added per batch (store, bands, sets): $deltas")
+    // the first batch builds the index from the reference: one file each
+    assert(deltas.head.tail == Seq(2, 2), s"first batch: ${deltas.head}")
+    deltas.tail.foreach { case Seq(store, bands, sets) =>
+      assert(bands == 1 && sets == 1,
+        s"a batch-sized index slice must add one part file per dir: $bands, $sets")
+      assert(store == spark.sessionState.conf.numShufflePartitions,
+        s"the store gains one part file per shuffle partition: $store")
+    }
+  }
 }
