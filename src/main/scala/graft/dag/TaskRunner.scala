@@ -87,32 +87,39 @@ object TaskRunner {
         throw new IllegalStateException(s"dependency cycle through task ${t.name}")
       try {
         t.deps.foreach(visit)
-        if (t.external) {
-          if (!t.target.exists)
-            throw new IllegalStateException(
-              s"external input missing for task ${t.name}: ${t.target.path}")
-          done(t.name) = Skipped
-        } else if (t.target.exists) {
-          log(s"[dag] skip ${t.name} (target exists: ${t.target.path})")
-          done(t.name) = Skipped
-        } else {
-          log(s"[dag] run  ${t.name} -> ${t.target.path}")
-          t.body()
-          if (!t.target.exists)
-            throw new IllegalStateException(
-              s"task ${t.name} completed without committing its target ${t.target.path}")
-          if (doCleanup) t.cleanup.foreach { c =>
-            log(s"[dag] gc   ${c.path} (consumed by ${t.name})")
-            c.delete()
-          }
-          done(t.name) = Ran
-        }
+        done(t.name) = execute(t, log, doCleanup)
       } finally inStack.remove(t.name)
     }
 
     roots.foreach(visit)
     RunReport(done.toSeq)
   }
+
+  /** One task whose deps have committed: check an external input, skip
+    * on an existing target, else run the body, require its target and
+    * delete the consumed targets. Both walks call this. */
+  private def execute(t: Task, log: String => Unit,
+      doCleanup: Boolean): Outcome =
+    if (t.external) {
+      if (!t.target.exists)
+        throw new IllegalStateException(
+          s"external input missing for task ${t.name}: ${t.target.path}")
+      Skipped
+    } else if (t.target.exists) {
+      log(s"[dag] skip ${t.name} (target exists: ${t.target.path})")
+      Skipped
+    } else {
+      log(s"[dag] run  ${t.name} -> ${t.target.path}")
+      t.body()
+      if (!t.target.exists)
+        throw new IllegalStateException(
+          s"task ${t.name} completed without committing its target ${t.target.path}")
+      if (doCleanup) t.cleanup.foreach { c =>
+        log(s"[dag] gc   ${c.path} (consumed by ${t.name})")
+        c.delete()
+      }
+      Ran
+    }
 
   /** Parallel run: independent ready tasks execute concurrently on a
     * fixed pool (O36 — the per-(store, week) fan-out). Spark's
@@ -147,33 +154,11 @@ object TaskRunner {
     var inFlight = 0
     var failure: Option[Throwable] = None
 
-    def execute(t: Task): Outcome =
-      if (t.external) {
-        if (!t.target.exists)
-          throw new IllegalStateException(
-            s"external input missing for task ${t.name}: ${t.target.path}")
-        Skipped
-      } else if (t.target.exists) {
-        log(s"[dag] skip ${t.name} (target exists: ${t.target.path})")
-        Skipped
-      } else {
-        log(s"[dag] run  ${t.name} -> ${t.target.path}")
-        t.body()
-        if (!t.target.exists)
-          throw new IllegalStateException(
-            s"task ${t.name} completed without committing its target ${t.target.path}")
-        if (doCleanup) t.cleanup.foreach { c =>
-          log(s"[dag] gc   ${c.path} (consumed by ${t.name})")
-          c.delete()
-        }
-        Ran
-      }
-
     def submit(name: String): Unit = {
       inFlight += 1 // caller holds lock
       pool.execute { () =>
         val t = tasks(name)
-        val result = try Right(execute(t)) catch { case e: Throwable => Left(e) }
+        val result = try Right(execute(t, log, doCleanup)) catch { case e: Throwable => Left(e) }
         lock.synchronized {
           result match {
             case Right(o) =>

@@ -228,7 +228,7 @@ final class M5Pipeline(spark: SparkSession, config: YamlConfig) {
           val tp = graft.ml.TweedieGbt.fromLgbParams(lgbParams)
           val model = graft.ml.TweedieGbt.fit(
             Gbt.assemble(encoded, featureCols, catArity,
-              missingAsNaN = tp.histogram), "features",
+              missingAsNaN = true), "features",
             predTargetCol, "__valid", tp)
           model.save(s"$dir/model")
         } else {
@@ -272,7 +272,7 @@ final class M5Pipeline(spark: SparkSession, config: YamlConfig) {
             val model = graft.ml.TweedieGbt.load(spark, s"$dir/model")
             model.transform(
               Gbt.assemble(encoded, featureCols, catArity,
-                missingAsNaN = model.isHistogram), predTargetCol)
+                missingAsNaN = true), predTargetCol)
               .drop("features")
           } else
             Gbt.predict(GBTRegressionModel.load(s"$dir/model"),

@@ -78,7 +78,7 @@ object Gbt {
     * histogram's bin budget take HistTree's top-k + rest-bin remap
     * (M5's 30,490-level `id` becomes a real categorical instead of a
     * quantile-cut ordinal). [[maxBinsFor]] still filters to the
-    * ceiling, so the Spark ML fitters never see a 30k-bin ask. */
+    * ceiling, so Spark's GBTRegressor never sees a 30k-bin ask. */
   private[graft] def assemble(df: DataFrame, featureCols: Seq[String],
       catArity: Map[String, Int] = Map.empty,
       missingAsNaN: Boolean = false): DataFrame = {

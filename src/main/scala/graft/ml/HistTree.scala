@@ -5,6 +5,9 @@ import scala.collection.mutable
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
+
+import graft.functions.expressions.{HistBins, HistLeaf}
 
 /** LightGBM-style HISTOGRAM regression tree — the distributed binned
   * split finder that closes the two largest remaining divergences from
@@ -41,10 +44,15 @@ import org.apache.spark.sql.functions._
   * Remaining divergence vs LightGBM, documented not silent: the
   * sampled bin-edge construction (LightGBM's
   * `bin_construct_sample_cnt` uses the same sampling idea, different
-  * sample). Growth order is NO LONGER a divergence: leaf-wise
-  * `num_leaves` frontier growth landed in r12 and is the default for
-  * `objective: tweedie` configs (level-wise remains available via
-  * `growLevelWise`).
+  * sample). Growth order is NO LONGER a divergence: [[fitLeafWise]]
+  * grows LightGBM's `num_leaves` frontier; [[fit]] grows level-wise,
+  * which [[TweedieGbt]] uses when `numLeaves = 0`.
+  *
+  * Rows are binned and routed by two codegen'd expressions,
+  * [[binColumn]] and [[leafColumn]], over [[Bins.binRow]] and
+  * [[Tree.leafOfBins]]. [[Tree.leafOfVector]] walks raw thresholds
+  * instead; it is the executable spec the binned route is tested
+  * against, not a serving path.
   */
 object HistTree {
 
@@ -73,8 +81,7 @@ object HistTree {
     def numFeatures: Int = numBins.length
     def catMapOf(f: Int): scala.collection.immutable.Map[Int, Int] =
       if (catMaps == null) null else catMaps(f)
-    /** True when any feature routes through a code→bin remap — the
-      * marker that serve-time routing NEEDS this dictionary. */
+    /** True when any feature routes through a code→bin remap. */
     def hasCatMaps: Boolean =
       catMaps != null && catMaps.exists(_ != null)
 
@@ -256,9 +263,9 @@ object HistTree {
     Bins(edges, isCat, numBins, catMaps)
   }
 
-  // ── Bins serialization: models carrying code→bin remaps MUST route
-  //    raw vectors through the fit-time dictionary, so the dictionary
-  //    persists with the model. One line per feature:
+  // ── Bins serialization: models route raw vectors through the
+  //    fit-time dictionary, so the dictionary persists with the model.
+  //    One line per feature:
   //      C <numBins>                      exact categorical
   //      M <numBins> c:b,c:b,...          remapped categorical
   //      N <numBins> e1,e2,... (or -)     numeric edges
@@ -345,12 +352,13 @@ object HistTree {
     out
   }
 
-  /** Column expression binning a vector column with `bins` (broadcast
-    * through the closure). */
-  def binColumn(bins: Bins, featuresCol: String): Column = {
-    val u = udf((v: Vector) => bins.binRow(v))
-    u(col(featuresCol))
-  }
+  /** `featuresCol`'s vectors binned with `bins` (`array<smallint>`). */
+  def binColumn(bins: Bins, featuresCol: String): Column =
+    ColumnBridge.column(HistBins(ColumnBridge.expression(col(featuresCol)), bins))
+
+  /** The leaf `tree` routes each row of `binsCol` to (its node id). */
+  def leafColumn(tree: Tree, binsCol: String): Column =
+    ColumnBridge.column(HistLeaf(ColumnBridge.expression(col(binsCol)), tree))
 
   /** Fit one tree on pre-binned rows. `df` must carry `binsCol`
     * (Array[Short]), `gCol` (the NEGATIVE gradient / pseudo-residual)

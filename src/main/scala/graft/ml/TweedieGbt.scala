@@ -1,6 +1,7 @@
 package graft.ml
 
-import org.apache.spark.ml.regression.{DecisionTreeRegressionModel, DecisionTreeRegressor}
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -9,37 +10,37 @@ import org.apache.spark.sql.functions._
   * previously a declared divergence (squared-loss GBT stand-in).
   *
   * Spark's GBTRegressor hard-codes squared/absolute loss, so this is a
-  * first-order Friedman gradient-boosting loop built from
-  * `DecisionTreeRegressor` stages, with a log link and the
-  * compound-Poisson (Tweedie) deviance, power ρ ∈ (1, 2):
+  * first-order Friedman gradient-boosting loop over [[HistTree]]
+  * stages, with a log link and the compound-Poisson (Tweedie)
+  * deviance, power ρ ∈ (1, 2):
   *
   *   loss(y, F)    = -y·e^{(1-ρ)F}/(1-ρ) + e^{(2-ρ)F}/(2-ρ)   (μ = e^F)
   *   -∂loss/∂F     =  y·e^{(1-ρ)F} - e^{(2-ρ)F}               (pseudo-residual)
   *
   * the same objective/gradient LightGBM's `tweedie` uses. Each stage
-  * fits a regression tree to the pseudo-residuals, then REFITS each
+  * fits a histogram tree to the pseudo-residuals, then REFITS each
   * leaf's value with the second-order Newton step LightGBM uses:
   *
   *   hess = ∂²loss/∂F² = (ρ-1)·y·e^{(1-ρ)F} + (2-ρ)·e^{(2-ρ)F}  (> 0)
   *   γ_leaf = Σ resid / (Σ hess + λ)
   *
-  * (one grouped agg over the train rows per stage; the leaf routing
-  * comes from the model's native `leafCol`, so no re-walk of the tree).
-  * F steps by `stepSize · γ(leaf(x))` and predictions are μ = exp(F),
-  * matching LightGBM's log-link output scale.
+  * (one grouped agg over the train rows per stage, keyed by the leaf
+  * [[HistTree.leafColumn]] routes each row to). F steps by
+  * `stepSize · γ(leaf(x))` and predictions are μ = exp(F), matching
+  * LightGBM's log-link output scale.
   *
-  * With `Params.histogram = true` the per-stage trees come from
-  * [[HistTree]] instead of Spark ML — LightGBM-parity HISTOGRAM split
-  * finding plus PER-SPLIT LEARNED MISSING-VALUE ROUTING over real NaNs
-  * (assemble with `missingAsNaN = true`; M5's lag/rolling warm-up rows
-  * are null by construction, so this touches real data), and with
-  * `numLeaves > 0` (lgb_params `num_leaves`) the trees grow LEAF-WISE
-  * — LightGBM's best-first frontier with histogram subtraction — so
-  * no fitter-SHAPE divergence remains: histogram splits, learned
-  * missing routing, sorted categorical splits, and growth order all
-  * match the reference's LGBMRegressor. Golden-tested, never
-  * oracle-hashed (SURVEY §5.3), with the forecast deltas measured on
-  * the golden fixture in M5TweedieSpec.
+  * The trees are LightGBM's shape: HISTOGRAM split finding plus
+  * PER-SPLIT LEARNED MISSING-VALUE ROUTING over real NaNs (assemble
+  * with `missingAsNaN = true`; M5's lag/rolling warm-up rows are null
+  * by construction, so this touches real data), sorted categorical
+  * splits, and with `numLeaves > 0` (lgb_params `num_leaves`)
+  * LEAF-WISE growth — LightGBM's best-first frontier with histogram
+  * subtraction; `numLeaves = 0` grows level-wise to `maxDepth`.
+  * Golden-tested, never oracle-hashed (SURVEY §5.3).
+  *
+  * Every row is binned ONCE with the fit-time [[HistTree.Bins]], at fit
+  * and at predict time alike, and every stage routes that binned
+  * column: fit and [[Model.transform]] share one stage step.
   *
   * Eval-set early stopping (the reference's `early_stopping_rounds=10`,
   * pipeline.py:262-265) is native here: validation rows (`validCol`)
@@ -48,19 +49,18 @@ import org.apache.spark.sql.functions._
   * improvement, returning the model truncated at the best round — the
   * LightGBM semantics, not GBT's validationTol drift check.
   *
-  * Scale design (100 TB): the working frame carries (bins, label, F) on
-  * the histogram path — the raw feature vector is DROPPED after the
-  * one-time binning (r17: it was the largest resident column) — and is
-  * re-persisted per round with the previous round's storage RELEASED
-  * (unpersist + checkpoint-block release: `DataFrame.unpersist` alone
-  * cannot reach a localCheckpoint's RDD blocks, and that leak — one
-  * full binned frame per checkpointed round per concurrent model — is
-  * what ran the full-width M5 tweedie demo out of a 32 GB heap).
+  * Scale design (100 TB): the working frame carries (bins, label, F) —
+  * the raw feature vector is DROPPED after the one-time binning (r17:
+  * it was the largest resident column) — and is re-persisted per round
+  * with the previous round's storage RELEASED (unpersist, plus the
+  * checkpoint-block release for a cut round: `DataFrame.unpersist`
+  * alone cannot reach a localCheckpoint's RDD blocks, and that leak —
+  * one full binned frame per checkpointed round per concurrent model —
+  * is what ran the full-width M5 tweedie demo out of a 32 GB heap).
   * Lineage is cut by `localCheckpoint` every `checkpointInterval`
   * rounds, the same cadence Spark's own GBT uses. Per round the cost is
-  * one tree fit (Spark ML's distributed histogram builder) + one narrow
-  * map to update F + one 1-row deviance agg; nothing driver-side grows
-  * with data size, only with tree count. */
+  * one tree fit + one narrow map to update F + one 1-row deviance agg;
+  * nothing driver-side grows with data size, only with tree count. */
 object TweedieGbt {
 
   final case class Params(
@@ -72,13 +72,6 @@ object TweedieGbt {
       earlyStoppingRounds: Int = 10,
       checkpointInterval: Int = 10,
       seed: Long = 42L,
-      // LightGBM-parity tree fitter: histogram split finding +
-      // per-split learned missing-value routing (HistTree); assemble
-      // the features with missingAsNaN = true on this path. OFF here
-      // (programmatic callers opt in), but [[fromLgbParams]] — the
-      // reference-yaml entry — defaults it ON since r13 so full.yaml's
-      // num_leaves/min_child_weight actually bite
-      histogram: Boolean = false,
       histMaxBins: Int = 255,
       minDataInLeaf: Int = 20,
       // LightGBM min_child_weight / min_sum_hessian_in_leaf: minimum
@@ -89,9 +82,8 @@ object TweedieGbt {
       // per-tree feature subsample (colsample_bytree / feature_fraction),
       // deterministic per round from `seed`
       colsampleBytree: Double = 1.0,
-      // > 0 switches the histogram fitter to LEAF-WISE (best-first)
-      // growth with this leaf budget — LightGBM's num_leaves frontier,
-      // the last fitter-shape divergence; 0 keeps level-wise
+      // > 0 grows the trees LEAF-WISE (best-first) with this leaf
+      // budget — LightGBM's num_leaves frontier; 0 grows level-wise
       numLeaves: Int = 0) {
     require(variancePower > 1.0 && variancePower < 2.0,
       s"variancePower must be in (1,2) for compound-Poisson Tweedie: $variancePower")
@@ -109,15 +101,11 @@ object TweedieGbt {
       case Some(s) => s.toString.toDouble
       case None => dflt
     }
-    // the LightGBM-parity fitter is the DEFAULT for the tweedie
-    // objective (r13) — running full.yaml verbatim must hit the
-    // histogram path, or its num_leaves: 50 / min_child_weight: 300
-    // are silently ignored; `histogram: false` opts out explicitly
-    val hist = p.get("histogram") match {
-      case Some(v) =>
-        v.toString.equalsIgnoreCase("true") || v.toString == "1"
-      case None => true
-    }
+    // `histogram: false` once selected a Spark ML tree fitter; a config
+    // still asking for it must not silently get histogram trees
+    require(!p.get("histogram").exists(_.toString.equalsIgnoreCase("false")),
+      "lgb_params histogram: false asks for the Spark ML tree fitter, " +
+        "which no longer exists; TweedieGbt always fits histogram trees")
     Params(
       maxIter = num("n_estimators", 100).toInt,
       stepSize = num("learning_rate", 0.1),
@@ -129,7 +117,6 @@ object TweedieGbt {
       variancePower = num("tweedie_variance_power", 1.1),
       subsamplingRate = num("subsample", 1.0),
       earlyStoppingRounds = num("early_stopping_rounds", 10).toInt,
-      histogram = hist,
       histMaxBins = num("max_bin", 255).toInt,
       minDataInLeaf = num("min_child_samples", 20).toInt,
       // LightGBM aliases: min_child_weight == min_sum_hessian_in_leaf
@@ -141,131 +128,88 @@ object TweedieGbt {
       numLeaves = num("num_leaves", 0).toInt)
   }
 
-  /** One boosting stage: the fitted tree (used only for its leaf
-    * ROUTING at apply time) + the Newton-refitted value per leaf id. */
-  sealed trait BoostStage { def leafValues: Map[Double, Double] }
-
-  final case class Stage(
-      tree: DecisionTreeRegressionModel,
-      leafValues: Map[Double, Double]) extends BoostStage
-
-  /** Histogram-fitter stage (LightGBM parity path): the [[HistTree]]
-    * structure routes rows — including per-split learned missing
-    * directions — and `leafValues` carries the Newton-refit values
-    * keyed by leaf node id. */
+  /** One boosting stage: the [[HistTree]] structure routes rows —
+    * including per-split learned missing directions — and
+    * `leafValues` carries the Newton-refit values keyed by leaf node
+    * id. */
   final case class HistStage(
       tree: HistTree.Tree,
-      leafValues: Map[Double, Double]) extends BoostStage
+      leafValues: Map[Int, Double])
+
+  /** F += stepSize · γ(leaf) for one stage, routed through the frame's
+    * `__bins` column — the step of both [[fit]] and [[Model.transform]].
+    * Every leaf has a refit γ: a tree grows only leaves that hold
+    * sampled train rows, and the refit reads all train rows. */
+  private def applyStage(df: DataFrame, st: HistStage,
+      stepSize: Double): DataFrame =
+    df.withColumn("__F", col("__F") + lit(stepSize) *
+      element_at(typedLit(st.leafValues), HistTree.leafColumn(st.tree, "__bins")))
 
   final case class Model(
       f0: Double,
       stepSize: Double,
       variancePower: Double,
-      stages: Seq[BoostStage],
+      stages: Seq[HistStage],
       validDeviances: Seq[Double],
-      // the fit-time binning dictionary — REQUIRED for routing raw
-      // vectors when any high-arity categorical was remapped to bins
-      // (splits then live in bin space, not code space); persisted as
+      // the fit-time binning dictionary: raw vectors are binned with it
+      // before routing (splits live in bin space); persisted as
       // bins.txt next to the trees
-      histBins: Option[HistTree.Bins] = None) {
+      histBins: HistTree.Bins) {
 
-    /** True when this model was fit with the histogram path — its
-      * input must then be assembled with `missingAsNaN = true` so the
-      * learned default directions see real missing values. */
-    def isHistogram: Boolean = stages.exists(_.isInstanceOf[HistStage])
-
-    /** μ = exp(f0 + lr·Σ γₖ(leafₖ(x))) appended as `predCol`. Each stage
-      * is one leaf routing (ML transform or HistTree walk) + a
-      * broadcast-literal map lookup; the additive F column stays
+    /** μ = exp(f0 + lr·Σ γₖ(leafₖ(x))) appended as `predCol`. The raw
+      * `features` vector is binned once, then each stage is one leaf
+      * routing + a literal map lookup; the additive F column stays
       * narrow (no shuffle). */
-    def transform(assembled: DataFrame, predCol: String): DataFrame = {
-      import org.apache.spark.sql.functions.typedLit
-      val withF = stages.zipWithIndex.foldLeft(
-        assembled.withColumn("__F", lit(f0))) {
-        case (acc, (st: Stage, i)) =>
-          val t = st.tree.setPredictionCol(s"__h$i").setLeafCol(s"__leaf$i")
-          t.transform(acc)
-            .withColumn("__F", col("__F") + lit(stepSize) *
-              coalesce(
-                element_at(typedLit(st.leafValues), col(s"__leaf$i")),
-                col(s"__h$i"))) // unreachable in practice: every leaf is refit
-            .drop(s"__h$i", s"__leaf$i")
-        case (acc, (st: HistStage, i)) =>
-          val t = st.tree
-          // a model with code→bin remapped categoricals must route
-          // through the fit-time dictionary (leftCats are BIN ids for
-          // those features); otherwise the raw-vector walk is
-          // equivalent and dictionary-free
-          val leafU = histBins match {
-            case Some(hb) if hb.hasCatMaps =>
-              udf((v: org.apache.spark.ml.linalg.Vector) =>
-                t.leafOfBins(hb.binRow(v)).toDouble)
-            case _ =>
-              udf((v: org.apache.spark.ml.linalg.Vector) =>
-                t.leafOfVector(v).toDouble)
-          }
-          val own = typedLit(t.leafValue.map { case (k, v) => k.toDouble -> v })
-          acc.withColumn(s"__leaf$i", leafU(col("features")))
-            .withColumn("__F", col("__F") + lit(stepSize) *
-              coalesce(
-                element_at(typedLit(st.leafValues), col(s"__leaf$i")),
-                element_at(own, col(s"__leaf$i"))))
-            .drop(s"__leaf$i")
-      }
-      withF.withColumn(predCol, exp(col("__F"))).drop("__F")
-    }
+    def transform(assembled: DataFrame, predCol: String): DataFrame =
+      stages.foldLeft(assembled
+          .withColumn("__bins", HistTree.binColumn(histBins, "features"))
+          .withColumn("__F", lit(f0))) { (acc, st) =>
+        applyStage(acc, st, stepSize)
+      }.withColumn(predCol, exp(col("__F"))).drop("__F", "__bins")
 
     def save(dir: String): Unit = {
-      val p = java.nio.file.Paths.get(dir)
-      java.nio.file.Files.createDirectories(p)
+      val p = Paths.get(dir)
+      Files.createDirectories(p)
       stages.zipWithIndex.foreach { case (st, i) =>
-        st match {
-          case s: Stage =>
-            s.tree.write.overwrite().save(s"$dir/tree_$i")
-          case s: HistStage =>
-            java.nio.file.Files.writeString(p.resolve(s"hist_$i.txt"),
-              HistTree.serialize(s.tree))
-        }
+        Files.writeString(p.resolve(s"hist_$i.txt"), HistTree.serialize(st.tree))
+        // leaf ids print as doubles ("[4.0,γ]"), the leaves_<i>.json format
         val entries = st.leafValues.toSeq.sortBy(_._1)
-          .map { case (k, v) => s"[$k,$v]" }.mkString(",")
-        java.nio.file.Files.writeString(p.resolve(s"leaves_$i.json"),
-          s"[$entries]")
+          .map { case (k, v) => s"[${k.toDouble},$v]" }.mkString(",")
+        Files.writeString(p.resolve(s"leaves_$i.json"), s"[$entries]")
       }
-      histBins.foreach(hb => java.nio.file.Files.writeString(
-        p.resolve("bins.txt"), HistTree.serializeBins(hb)))
-      java.nio.file.Files.writeString(p.resolve("meta.json"),
+      Files.writeString(p.resolve("bins.txt"), HistTree.serializeBins(histBins))
+      Files.writeString(p.resolve("meta.json"),
         s"""{"f0":$f0,"stepSize":$stepSize,"variancePower":$variancePower,""" +
-          s""""numTrees":${stages.size},"histogram":${if (isHistogram) 1 else 0}}""")
+          s""""numTrees":${stages.size}}""")
     }
   }
 
+  /** Read a [[Model.save]] dir. Models of the removed Spark ML fitter
+    * (`tree_<i>` stages, no `bins.txt`) fail with a message naming the
+    * dir; a `meta.json` that still carries its `histogram` flag reads. */
   def load(spark: SparkSession, dir: String): Model = {
-    val txt = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(dir, "meta.json"))
+    val p = Paths.get(dir)
+    val txt = Files.readString(p.resolve("meta.json"))
     def field(k: String): Double =
       s""""$k"\\s*:\\s*(-?[\\d.eE+-]+)""".r.findFirstMatchIn(txt).get.group(1).toDouble
     val n = field("numTrees").toInt
+    (0 until n).find(i => Files.exists(p.resolve(s"tree_$i"))).foreach { i =>
+      throw new IllegalArgumentException(s"$dir: stage $i is a Spark ML " +
+        s"tree (tree_$i), which TweedieGbt no longer reads; retrain the model")
+    }
+    val binsPath = p.resolve("bins.txt")
+    require(Files.exists(binsPath),
+      s"$dir has no bins.txt, so it is not a histogram TweedieGbt model; retrain it")
     val pair = """\[(-?[\d.eE+-]+),(-?[\d.eE+-]+)\]""".r
     val stages = (0 until n).map { i =>
-      val leaves = java.nio.file.Files.readString(
-        java.nio.file.Paths.get(dir, s"leaves_$i.json"))
-      val leafValues = pair.findAllMatchIn(leaves)
-        .map(m => m.group(1).toDouble -> m.group(2).toDouble).toMap
-      val histPath = java.nio.file.Paths.get(dir, s"hist_$i.txt")
-      if (java.nio.file.Files.exists(histPath))
-        HistStage(
-          HistTree.deserialize(java.nio.file.Files.readString(histPath)),
-          leafValues)
-      else
-        Stage(DecisionTreeRegressionModel.load(s"$dir/tree_$i"), leafValues)
+      val leaves = Files.readString(p.resolve(s"leaves_$i.json"))
+      HistStage(
+        HistTree.deserialize(Files.readString(p.resolve(s"hist_$i.txt"))),
+        pair.findAllMatchIn(leaves)
+          .map(m => m.group(1).toDouble.toInt -> m.group(2).toDouble).toMap)
     }
-    val binsPath = java.nio.file.Paths.get(dir, "bins.txt")
-    val bins =
-      if (java.nio.file.Files.exists(binsPath))
-        Some(HistTree.deserializeBins(java.nio.file.Files.readString(binsPath)))
-      else None
     Model(field("f0"), field("stepSize"), field("variancePower"), stages,
-      Nil, bins)
+      Nil, HistTree.deserializeBins(Files.readString(binsPath)))
   }
 
   /** Mean Tweedie deviance of `predCol` vs `labelCol` — the eval metric
@@ -283,11 +227,10 @@ object TweedieGbt {
   /** Fit on rows where `validCol` is false; validation rows drive early
     * stopping. `train` must already carry an assembled `features`
     * vector column (encode strings with [[LabelVocab]], then
-    * `Gbt.assemble`). Labels must be ≥ 0 (Tweedie support); negative
-    * labels fail fast. */
+    * `Gbt.assemble` with `missingAsNaN = true`). Labels must be ≥ 0
+    * (Tweedie support); negative labels fail fast. */
   def fit(train: DataFrame, featuresCol: String, labelCol: String,
       validCol: String, params: Params): Model = {
-    val spark = train.sparkSession
     val p = params.variancePower
 
     val base0 = train
@@ -309,51 +252,36 @@ object TweedieGbt {
     // for tweedie); ε-guard for an all-zero label column
     val f0 = math.log(math.max(stats.getDouble(1), 1e-9))
 
-    // honor nominal-attribute metadata attached by Gbt.assemble: native
-    // categorical splits need maxBins >= the largest nominal arity
-    val maxBins = {
-      val ag = org.apache.spark.ml.attribute.AttributeGroup
-        .fromStructField(train.schema(featuresCol))
-      val arities = ag.attributes.toSeq.flatten.collect {
-        case n: org.apache.spark.ml.attribute.NominalAttribute =>
-          n.getNumValues.getOrElse(0)
-      }
-      (32 +: arities).max
-    }
-
-    // histogram path: build the bin dictionary once from the TRAIN
-    // rows and attach a compact binned column — every round's tree
-    // fit reuses it (LightGBM bins once per dataset, not per tree)
-    val histBins =
-      if (params.histogram)
-        Some(HistTree.buildBins(base0.filter(!col("__valid")), "features",
-          maxBins = params.histMaxBins, seed = params.seed, rowCount = trainRows))
-      else None
-    val base1 = histBins match {
-      case Some(hb) =>
-        // the per-round loop on the histogram path reads ONLY
-        // (__bins, __y, __valid, __F): the raw vector column is dead
-        // weight in every round's resident cache — at full M5 width
-        // (≈5.9M rows/store × 8 DAG-parallel models) it is the
-        // LARGEST column (doubles vs the shorts it was binned to).
-        // Bin once, drop it (r17: half the per-model cache bytes).
-        base0.withColumn("__bins", HistTree.binColumn(hb, "features"))
-          .drop("features")
-      case None => base0
-    }
-    // Rotation helper: a round frame can be a plain persist OR a
-    // localCheckpoint — DataFrame.unpersist alone cannot reach a
-    // checkpoint RDD's blocks (the graft.util.Cut.release gap), so
+    // build the bin dictionary once from the TRAIN rows and attach a
+    // compact binned column — every round's tree fit reuses it
+    // (LightGBM bins once per dataset, not per tree)
+    val histBins = HistTree.buildBins(base0.filter(!col("__valid")), "features",
+      maxBins = params.histMaxBins, seed = params.seed, rowCount = trainRows)
+    // the per-round loop reads ONLY (__bins, __y, __valid, __F): the
+    // raw vector column is dead weight in every round's resident cache
+    // — at full M5 width (≈5.9M rows/store × 8 DAG-parallel models) it
+    // is the LARGEST column (doubles vs the shorts it was binned to).
+    // Bin once, drop it (r17: half the per-model cache bytes).
+    val base1 = base0.withColumn("__bins", HistTree.binColumn(histBins, "features"))
+      .drop("features")
+    // Rotation helper: a round frame is a plain persist OR a
+    // localCheckpoint cut. A cut's blocks belong to its RDD, which
+    // DataFrame.unpersist cannot reach (the graft.util.Cut.release gap):
     // every checkpointed round's FULL binned frame stayed resident
-    // until context GC. At full M5 width × 8 concurrent models that
-    // leak is what ran a 32 GB driver out of heap (r17 tweedie run).
+    // until context GC, and at full M5 width × 8 concurrent models that
+    // leak ran a 32 GB driver out of heap (r17 tweedie run). Only a cut
+    // is released that way: a persisted round's plan still reads the
+    // last cut, which was already released when its successor landed.
     def release(df: DataFrame): Unit = {
       df.unpersist()
-      graft.util.Cut.release(df)
+      df.queryExecution.analyzed match {
+        case _: org.apache.spark.sql.execution.LogicalRDD => graft.util.Cut.release(df)
+        case _ => ()
+      }
     }
     var cur = base1.withColumn("__F", lit(f0)).localCheckpoint(true)
     var best = (Double.MaxValue, 0) // (valid deviance, round)
-    val stages = scala.collection.mutable.ArrayBuffer.empty[BoostStage]
+    val stages = scala.collection.mutable.ArrayBuffer.empty[HistStage]
     val validDev = scala.collection.mutable.ArrayBuffer.empty[Double]
 
     var round = 0
@@ -372,79 +300,50 @@ object TweedieGbt {
         lit(p - 1) * col("__y") * exp(lit(1 - p) * col("__F")) +
         lit(2 - p) * exp(lit(2 - p) * col("__F"))
 
+      // histogram split finding with per-split learned missing routing,
+      // on the pre-binned rows; num_leaves > 0 grows LEAF-WISE
+      // (LightGBM's frontier rule). colsample_bytree: a deterministic
+      // per-round feature subset (seeded shuffle), LightGBM's per-tree
+      // feature_fraction
+      val fitFrame = fitRows.withColumn("__hess", hess)
+      val mask: Array[Boolean] =
+        if (params.colsampleBytree >= 1.0) null
+        else {
+          val numF = histBins.numFeatures
+          val k = math.max(1,
+            math.round(numF * params.colsampleBytree).toInt)
+          val rng = new scala.util.Random(params.seed * 31 + round)
+          val picked = rng.shuffle((0 until numF).toVector).take(k)
+          val m = new Array[Boolean](numF)
+          picked.foreach(m(_) = true)
+          m
+        }
+      val tree =
+        if (params.numLeaves >= 2)
+          HistTree.fitLeafWise(fitFrame, "__bins", "__r", "__hess",
+            histBins, numLeaves = params.numLeaves,
+            maxDepth = params.maxDepth, lambda = 1e-6,
+            minData = params.minDataInLeaf.toLong, minGain = 0.0,
+            minHess = params.minChildWeight, featureMask = mask)
+        else
+          HistTree.fit(fitFrame, "__bins", "__r", "__hess", histBins,
+            maxDepth = params.maxDepth, lambda = 1e-6,
+            minData = params.minDataInLeaf.toLong, minGain = 0.0,
+            minHess = params.minChildWeight, featureMask = mask)
+
       // Newton leaf refit (LightGBM's second-order step): route every
       // TRAIN row to its leaf, then γ_leaf = Σ resid / (Σ hess + λ).
-      // One grouped agg of leaf cardinality (≤ 2^maxDepth rows out) —
+      // One grouped agg with one output row per leaf —
       // map-side combinable, no data-size-proportional driver state.
-      def refit(routed: DataFrame): Map[Double, Double] =
-        routed.groupBy(col("__leaf"))
-          .agg((sum(col("__r")) / (sum(col("__hess")) + lit(1e-6))).as("__g"))
-          .collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
-
-      val next0 = histBins match {
-        case None =>
-          val tree = new DecisionTreeRegressor()
-            .setFeaturesCol("features").setLabelCol("__r")
-            .setPredictionCol("__h")
-            .setMaxDepth(params.maxDepth)
-            .setMaxBins(maxBins)
-            .setSeed(params.seed + round)
-            .fit(fitRows)
-          val leafValues = refit(
-            tree.setLeafCol("__leaf").transform(fitRows0)
-              .withColumn("__hess", hess))
-          stages += Stage(tree, leafValues)
-          val gammaMap = org.apache.spark.sql.functions.typedLit(leafValues)
-          tree.setLeafCol("__leaf").transform(cur)
-            .withColumn("__F", col("__F") + lit(params.stepSize) *
-              coalesce(element_at(gammaMap, col("__leaf")), col("__h")))
-            .drop("__h", "__leaf")
-        case Some(hb) =>
-          // LightGBM-parity fitter: histogram split finding with
-          // per-split learned missing routing, on the pre-binned rows;
-          // num_leaves > 0 grows LEAF-WISE (LightGBM's frontier rule).
-          // colsample_bytree: a deterministic per-round feature subset
-          // (seeded shuffle), LightGBM's per-tree feature_fraction
-          val fitFrame = fitRows.withColumn("__hess", hess)
-          val mask: Array[Boolean] =
-            if (params.colsampleBytree >= 1.0) null
-            else {
-              val numF = hb.numFeatures
-              val k = math.max(1,
-                math.round(numF * params.colsampleBytree).toInt)
-              val rng = new scala.util.Random(params.seed * 31 + round)
-              val picked = rng.shuffle((0 until numF).toVector).take(k)
-              val m = new Array[Boolean](numF)
-              picked.foreach(m(_) = true)
-              m
-            }
-          val tree =
-            if (params.numLeaves >= 2)
-              HistTree.fitLeafWise(fitFrame, "__bins", "__r", "__hess",
-                hb, numLeaves = params.numLeaves,
-                maxDepth = params.maxDepth, lambda = 1e-6,
-                minData = params.minDataInLeaf.toLong, minGain = 0.0,
-                minHess = params.minChildWeight, featureMask = mask)
-            else
-              HistTree.fit(fitFrame, "__bins", "__r", "__hess", hb,
-                maxDepth = params.maxDepth, lambda = 1e-6,
-                minData = params.minDataInLeaf.toLong, minGain = 0.0,
-                minHess = params.minChildWeight, featureMask = mask)
-          val leafU = udf((b: scala.collection.Seq[Short]) =>
-            tree.leafOfBins(b.toArray).toDouble)
-          val leafValues = refit(
-            fitRows0.withColumn("__leaf", leafU(col("__bins")))
-              .withColumn("__hess", hess))
-          stages += HistStage(tree, leafValues)
-          val gammaMap = org.apache.spark.sql.functions.typedLit(leafValues)
-          val own = org.apache.spark.sql.functions.typedLit(
-            tree.leafValue.map { case (k, v) => k.toDouble -> v })
-          cur.withColumn("__leaf", leafU(col("__bins")))
-            .withColumn("__F", col("__F") + lit(params.stepSize) *
-              coalesce(element_at(gammaMap, col("__leaf")),
-                element_at(own, col("__leaf"))))
-            .drop("__leaf")
-      }
+      val leafValues = fitRows0
+        .withColumn("__leaf", HistTree.leafColumn(tree, "__bins"))
+        .withColumn("__hess", hess)
+        .groupBy(col("__leaf"))
+        .agg((sum(col("__r")) / (sum(col("__hess")) + lit(1e-6))).as("__g"))
+        .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+      val stage = HistStage(tree, leafValues)
+      stages += stage
+      val next0 = applyStage(cur, stage, params.stepSize)
       // cut lineage periodically (GBT's checkpointInterval cadence);
       // plain persist in between keeps each round one stage deep.
       // FAULT-TOLERANCE TRADE (r17 ADVICE): release(cur) below frees

@@ -23,11 +23,10 @@ class M5TweedieSpec extends SparkSpec {
     d
   }
 
-  /** `histogram = Some(b)` pins the fitter explicitly; None leaves the
-    * key out, which since r13 means fromLgbParams routes tweedie to
-    * the HISTOGRAM path by default. */
+  /** Mini-fixture scale: 5 rows per leaf instead of LightGBM's 20. */
+  private val smallLeaves = Map[String, Object]("min_child_samples" -> Int.box(5))
+
   private def pipeline(objective: Option[String],
-      histogram: Option[Boolean] = None,
       numLeaves: Option[Int] = None,
       extra: Map[String, Object] = Map.empty): (M5Pipeline, String) = {
     val outDir = Files.createTempDirectory("m5out-tw").toString
@@ -40,13 +39,6 @@ class M5TweedieSpec extends SparkSpec {
       lgb.put("early_stopping_rounds", Int.box(8))
       lgb.put("tweedie_variance_power", Double.box(1.1))
     }
-    histogram.foreach {
-      case true =>
-        lgb.put("histogram", "true")
-        lgb.put("min_child_samples", Int.box(5)) // mini-fixture scale
-      case false =>
-        lgb.put("histogram", "false") // sentinel Spark ML fitter
-    }
     numLeaves.foreach(n => lgb.put("num_leaves", Int.box(n)))
     extra.foreach { case (k, v) => lgb.put(k, v) }
     val cfg = base.updated("lgb_params", lgb: Object)
@@ -54,7 +46,7 @@ class M5TweedieSpec extends SparkSpec {
   }
 
   test("tweedie objective runs the full DAG; forecast delta vs squared loss is measured") {
-    val (tw, twOut) = pipeline(Some("tweedie"), histogram = Some(false))
+    val (tw, twOut) = pipeline(Some("tweedie"))
     val report = tw.run(log = _ => ())
     assert(report.ran.size == 23, report.ran.mkString(", "))
 
@@ -94,44 +86,18 @@ class M5TweedieSpec extends SparkSpec {
   }
 
   test("histogram fitter (LightGBM split finding + learned missing routing) runs the DAG; delta vs sentinel path measured") {
-    val (hist, histOut) = pipeline(Some("tweedie"), histogram = Some(true))
+    val (hist, histOut) = pipeline(Some("tweedie"), extra = smallLeaves)
     val report = hist.run(log = _ => ())
     assert(report.ran.size == 23, report.ran.mkString(", "))
     val preds = spark.read.parquet(s"$histOut/predictions.parquet")
     assert(preds.count() == 2 * 6 * 7 * 2)
     assert(preds.filter(col("pred_units_sold") <= 0).isEmpty,
       "tweedie predictions must be strictly positive")
-
-    // ── missing-routing + histogram-split delta study (VERDICT r11
-    // item 6): same objective, same trees-count — the only change is
-    // the fitter (sentinel-imputed Spark ML splits vs histogram splits
-    // with per-split learned missing directions over the REAL NaNs the
-    // M5 lag/rolling warm-up rows carry) ───────────────────────────
-    val (tw, twOut) = pipeline(Some("tweedie"), histogram = Some(false))
-    tw.run(log = _ => ())
-    val sentinel = spark.read.parquet(s"$twOut/predictions.parquet")
-      .withColumnRenamed("pred_units_sold", "pred_sent")
-    val joined = preds.join(sentinel, Seq("id", "date", "pred_date"))
-    assert(joined.count() == preds.count(), "prediction grids must align")
-    val row = joined.agg(
-      avg(abs(col("pred_units_sold") - col("pred_sent"))).as("mad"),
-      avg(col("pred_units_sold")).as("mean_hist"),
-      avg(col("pred_sent")).as("mean_sent")).head()
-    val (mad, meanH, meanS) = (row.getDouble(0), row.getDouble(1), row.getDouble(2))
-    info(f"forecast delta histogram-vs-sentinel fitter: mean|Δ|=$mad%.4f, " +
-      f"mean(hist)=$meanH%.4f, mean(sentinel)=$meanS%.4f, " +
-      f"relative=${mad / math.max(meanS.abs, 1e-9)}%.3f")
-    // the fitters must stay on the same scale (same objective, same
-    // link); a zero delta would mean the missing routing and binned
-    // splits changed nothing — possible in principle, so only the
-    // scale bound is asserted, the delta itself is the reported number
-    assert(mad < 10 * math.max(meanS.abs, 1.0),
-      s"histogram forecasts on the wrong scale: mean|Δ|=$mad vs level $meanS")
   }
 
   test("leaf-wise growth (num_leaves, LightGBM's frontier) runs the full DAG") {
-    val (lw, lwOut) = pipeline(Some("tweedie"), histogram = Some(true),
-      numLeaves = Some(8))
+    val (lw, lwOut) = pipeline(Some("tweedie"), numLeaves = Some(8),
+      extra = smallLeaves)
     val report = lw.run(log = _ => ())
     assert(report.ran.size == 23, report.ran.mkString(", "))
     val preds = spark.read.parquet(s"$lwOut/predictions.parquet")
@@ -153,7 +119,11 @@ class M5TweedieSpec extends SparkSpec {
       "num_leaves" -> 50, "min_child_weight" -> 300,
       "metric" -> "rmse", "verbose" -> 10)
     val tp = graft.ml.TweedieGbt.fromLgbParams(lgb)
-    assert(tp.histogram, "tweedie must default to the histogram fitter")
+    // histogram trees are the only fitter: asking for the removed
+    // Spark ML one fails, any other histogram value is ignored
+    intercept[IllegalArgumentException](
+      graft.ml.TweedieGbt.fromLgbParams(lgb + ("histogram" -> false)))
+    assert(graft.ml.TweedieGbt.fromLgbParams(lgb + ("histogram" -> true)) == tp)
     assert(tp.numLeaves == 50 && tp.maxDepth == 8)
     assert(tp.minChildWeight == 300.0 && tp.colsampleBytree == 0.8)
 

@@ -60,8 +60,8 @@ class GbtCategoricalSpec extends SparkSpec {
   }
 
   test("TweedieGbt picks maxBins up from the assembled metadata") {
-    // 40-arity nominal > default 32 bins: fit would throw if maxBins
-    // were left at 32; converging proves the metadata-derived raise
+    // the 41-arity nominal column must reach the histogram bins as a
+    // categorical with one bin per code, not as a quantile-cut numeric
     val rng = new scala.util.Random(3)
     val rows = (1 to 400).map { _ =>
       val c = rng.nextInt(40).toLong
@@ -72,6 +72,8 @@ class GbtCategoricalSpec extends SparkSpec {
       .withColumn("is_valid", col("is_valid"))
     val model = TweedieGbt.fit(assembled, "features", "y", "is_valid",
       TweedieGbt.Params(maxIter = 3, maxDepth = 4, variancePower = 1.3))
+    assert(model.histBins.isCat(0) && model.histBins.numBins(0) == 41,
+      s"bins: isCat ${model.histBins.isCat.toSeq}, numBins ${model.histBins.numBins.toSeq}")
     assert(model.stages.size == 3)
   }
 }

@@ -249,7 +249,7 @@ class HistTreeSpec extends SparkSpec {
     val assembled = Gbt.assemble(rows, Seq("x0", "x1", "x2"), Map.empty,
       missingAsNaN = true)
     val params = TweedieGbt.Params(maxIter = 6, maxDepth = 2,
-      histogram = true, minDataInLeaf = 2, colsampleBytree = 0.34)
+      minDataInLeaf = 2, colsampleBytree = 0.34)
     // colsample 0.34 of 3 features = 1 feature per round; across 6
     // rounds the sampled set must vary (else the "sample" is a constant
     // mask and the knob does nothing)
@@ -338,9 +338,9 @@ class HistTreeSpec extends SparkSpec {
     val assembled = Gbt.assemble(rows, Seq("c"), Map("c" -> 40),
       missingAsNaN = true)
     val params = TweedieGbt.Params(maxIter = 20, stepSize = 0.3,
-      maxDepth = 3, histogram = true, histMaxBins = 8, minDataInLeaf = 2)
+      maxDepth = 3, histMaxBins = 8, minDataInLeaf = 2)
     val model = TweedieGbt.fit(assembled, "features", "y", "valid", params)
-    assert(model.histBins.exists(_.hasCatMaps),
+    assert(model.histBins.hasCatMaps,
       "40 levels under 8 bins must remap")
     val preds = model.transform(assembled, "mu")
     val agg = preds.agg(
@@ -352,7 +352,7 @@ class HistTreeSpec extends SparkSpec {
     model.save(dir)
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "bins.txt")))
     val loaded = TweedieGbt.load(spark, dir)
-    assert(loaded.histBins.exists(_.hasCatMaps))
+    assert(loaded.histBins.hasCatMaps)
     val joined = preds.select(col("c"), col("y"), col("mu"))
       .join(loaded.transform(assembled, "mu2")
         .select(col("c"), col("y"), col("mu2")), Seq("c", "y"))
@@ -375,9 +375,9 @@ class HistTreeSpec extends SparkSpec {
     val assembled = Gbt.assemble(df, Seq("x0", "x1"), Map.empty,
       missingAsNaN = true)
     val params = TweedieGbt.Params(maxIter = 6, maxDepth = 3,
-      histogram = true, minDataInLeaf = 2)
+      minDataInLeaf = 2)
     val model = TweedieGbt.fit(assembled, "features", "y", "valid", params)
-    assert(model.isHistogram && model.stages.nonEmpty)
+    assert(model.stages.nonEmpty)
     val preds = model.transform(assembled, "mu")
     assert(preds.filter(col("mu") <= 0).isEmpty, "log link must keep mu > 0")
     // the fitted trees must separate the regimes: mean prediction on
@@ -391,7 +391,6 @@ class HistTreeSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("histgbt").toString
     model.save(dir)
     val loaded = TweedieGbt.load(spark, dir)
-    assert(loaded.isHistogram)
     val p2 = loaded.transform(assembled, "mu2")
     val joined = preds.select(col("x0"), col("x1"), col("y"), col("mu"))
       .join(p2.select(col("x0"), col("x1"), col("y"), col("mu2")),

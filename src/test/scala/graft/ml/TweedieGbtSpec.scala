@@ -1,5 +1,7 @@
 package graft.ml
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -76,7 +78,10 @@ class TweedieGbtSpec extends SparkSpec {
     // aggressive step + deep trees overfit the small train split fast,
     // so validation deviance turns upward well before maxIter
     val params = TweedieGbt.Params(maxIter = 60, stepSize = 0.5,
-      maxDepth = 8, variancePower = 1.3, earlyStoppingRounds = 5)
+      maxDepth = 8, variancePower = 1.3, earlyStoppingRounds = 5,
+      // single-row leaves (Spark ML trees' minInstancesPerNode = 1),
+      // the overfitting this case needs
+      minDataInLeaf = 1)
     val model = TweedieGbt.fit(demand, "features", "y", "is_valid", params)
     assert(model.validDeviances.nonEmpty)
     val bestRound = model.validDeviances.zipWithIndex.minBy(_._1)._2 + 1
@@ -100,6 +105,27 @@ class TweedieGbtSpec extends SparkSpec {
     assert(a.sameElements(b), "loaded model must predict identically")
   }
 
+  test("load reads a meta.json with the histogram flag and refuses Spark ML stage dirs") {
+    val model = TweedieGbt.fit(demand, "features", "y", "is_valid",
+      TweedieGbt.Params(maxIter = 2, maxDepth = 2, variancePower = 1.3))
+    val dir = java.nio.file.Files.createTempDirectory("graft-tweedie-load")
+    model.save(dir.toString)
+    val meta = dir.resolve("meta.json")
+    java.nio.file.Files.writeString(meta,
+      java.nio.file.Files.readString(meta).replace("}", ""","histogram":1}"""))
+    val mu = (m: TweedieGbt.Model) =>
+      m.transform(demand, "mu").select("mu").as[Double].collect().toSeq
+    assert(mu(TweedieGbt.load(spark, dir.toString)) == mu(model))
+
+    java.nio.file.Files.createDirectory(dir.resolve("tree_1"))
+    val stage = intercept[IllegalArgumentException](TweedieGbt.load(spark, dir.toString))
+    assert(stage.getMessage.contains(dir.toString) && stage.getMessage.contains("tree_1"))
+    java.nio.file.Files.delete(dir.resolve("tree_1"))
+    java.nio.file.Files.delete(dir.resolve("bins.txt"))
+    val noBins = intercept[IllegalArgumentException](TweedieGbt.load(spark, dir.toString))
+    assert(noBins.getMessage.contains(dir.toString) && noBins.getMessage.contains("bins.txt"))
+  }
+
   test("determinism: same seed, same data -> identical models") {
     val params = TweedieGbt.Params(maxIter = 6, stepSize = 0.2,
       maxDepth = 3, variancePower = 1.3, subsamplingRate = 0.8)
@@ -108,6 +134,56 @@ class TweedieGbtSpec extends SparkSpec {
     val a = m1.transform(demand, "mu").select("mu").as[Double].collect()
     val b = m2.transform(demand, "mu").select("mu").as[Double].collect()
     assert(a.sameElements(b), "fixed-seed fits must agree run to run")
+  }
+
+  test("each round's storage is released once and every cut by the end") {
+    val sc = spark.sparkContext
+    val data = demand // its own cut exists before the fit
+    val before = sc.getPersistentRDDs.keySet
+    val unpersisted = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    // strong references to every RDD persisted during the fit: the
+    // ContextCleaner would otherwise unpersist a collected one a second
+    // time, which the count below cannot tell from a double release
+    val pinned = new java.util.concurrent.ConcurrentHashMap[Int, org.apache.spark.rdd.RDD[_]]()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      private def pin(): Unit =
+        sc.getPersistentRDDs.foreach { case (id, r) => pinned.putIfAbsent(id, r) }
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        pin()
+        if (Option(js.properties).exists(
+            _.getProperty("spark.jobGroup.id") == "graft-release-marker"))
+          marker.countDown()
+      }
+      override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = pin()
+      override def onUnpersistRDD(
+          u: org.apache.spark.scheduler.SparkListenerUnpersistRDD): Unit =
+        unpersisted.add(u.rddId): Unit
+    }
+    sc.addSparkListener(listener)
+    try {
+      val model = TweedieGbt.fit(data, "features", "y", "is_valid",
+        TweedieGbt.Params(maxIter = 12, stepSize = 0.2, maxDepth = 3,
+          variancePower = 1.3, earlyStoppingRounds = 12, checkpointInterval = 5))
+      assert(model.validDeviances.size == 12, "the fit must run all 12 rounds")
+      // listener events arrive in order: the marker job's start comes
+      // after every unpersist of the fit
+      sc.setJobGroup("graft-release-marker", "release marker")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.clearJobGroup()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+
+    val ids = unpersisted.asScala.toSeq.filterNot(before)
+    val twice = ids.groupBy(identity).collect { case (id, n) if n.size > 1 => id }
+    assert(twice.isEmpty, s"RDDs unpersisted more than once: $twice in $ids")
+    // the root cut and the cuts after rounds 5 and 10
+    val cuts = pinned.asScala.collect {
+      case (id, r) if !before(id) && r.isCheckpointed => id
+    }.toSet
+    assert(cuts.size == 3, s"expected 3 cuts, got $cuts")
+    assert(cuts.subsetOf(ids.toSet), s"cuts $cuts not all released: $ids")
   }
 
   test("negative labels fail fast") {
