@@ -269,7 +269,7 @@ final class M5Pipeline(spark: SparkSession, config: YamlConfig) {
         // the GBT path saves Spark ML's own layout
         val predicted =
           if (Files.exists(Paths.get(dir, "model", "meta.json"))) {
-            val model = graft.ml.TweedieGbt.load(spark, s"$dir/model")
+            val model = graft.ml.TweedieGbt.load(s"$dir/model")
             model.transform(
               Gbt.assemble(encoded, featureCols, catArity,
                 missingAsNaN = true), predTargetCol)

@@ -20,17 +20,19 @@ import graft.functions.expressions.{HistBins, HistLeaf}
   * missing imputed away — and M5's lag/rolling features are null by
   * construction in every warm-up row, so this touches real data).
   *
-  * Shape per level (level-wise growth to `maxDepth`):
-  * ONE `treeAggregate` over the binned rows builds the full
-  * (node × feature × bin) gradient/hessian/count histogram —
-  * `2^depth · Σ numBins · 3` doubles, a few MB at depth 5 — and the
-  * driver scans bin boundaries for the best gain per node. That is
+  * Shape per pass (best-first growth, see [[fit]]): ONE
+  * `treeAggregate` over the binned rows builds the (node × feature ×
+  * bin) gradient/hessian/count histogram of the smaller child of every
+  * open frontier node — `k · Σ numBins · 3` doubles for k open nodes —
+  * and the driver scans bin boundaries for each node's best gain and
+  * derives the larger siblings by subtraction. That is
   * model-state-bounded driver work (the kmeans-centroid contract):
   * nothing driver-side scales with row count. Rows carry a compact
   * `Array[Short]` of bin indices (binned ONCE per boosting run, not
-  * per tree) plus their current node id; after each level a map
-  * routes rows to child nodes and rows landing in finished leaves
-  * drop out of the scan.
+  * per tree), and each pass routes them through the tree grown so far
+  * plus the open nodes' candidate splits. A tree takes at most
+  * 1 + (its depth) passes, so at most `maxDepth + 1`, and never more
+  * than 1 + (its splits).
   *
   * Split semantics (LightGBM's):
   *  - numeric: left ⟺ `v <= threshold`; bin 0 is the missing bin and
@@ -44,9 +46,9 @@ import graft.functions.expressions.{HistBins, HistLeaf}
   * Remaining divergence vs LightGBM, documented not silent: the
   * sampled bin-edge construction (LightGBM's
   * `bin_construct_sample_cnt` uses the same sampling idea, different
-  * sample). Growth order is NO LONGER a divergence: [[fitLeafWise]]
-  * grows LightGBM's `num_leaves` frontier; [[fit]] grows level-wise,
-  * which [[TweedieGbt]] uses when `numLeaves = 0`.
+  * sample). Growth order is NO LONGER a divergence: [[fit]] grows
+  * LightGBM's `num_leaves` best-first frontier, and with no leaf
+  * budget (`numLeaves = 0`) the depth-limited tree.
   *
   * Rows are binned and routed by two codegen'd expressions,
   * [[binColumn]] and [[leafColumn]], over [[Bins.binRow]] and
@@ -363,146 +365,57 @@ object HistTree {
   /** Fit one tree on pre-binned rows. `df` must carry `binsCol`
     * (Array[Short]), `gCol` (the NEGATIVE gradient / pseudo-residual)
     * and `hCol` (the hessian); the returned leaf values are the
-    * Newton step Σg/(Σh+λ). */
-  def fit(df: DataFrame, binsCol: String, gCol: String, hCol: String,
-      bins: Bins, maxDepth: Int, lambda: Double = 1e-6,
-      minData: Long = 20, minGain: Double = 0.0,
-      minHess: Double = 0.0,
-      featureMask: Array[Boolean] = null): Tree = {
-    require(maxDepth >= 1 && maxDepth <= 20, s"bad maxDepth: $maxDepth")
-    val w = bins.width
-    var rows = df
-      .select(col(binsCol), col(gCol).cast("double"), col(hCol).cast("double"))
-      .rdd.map { r =>
-        val b = r.getAs[scala.collection.Seq[Short]](0).toArray
-        (1, b, r.getDouble(1), r.getDouble(2))
-      }
-    val splits = mutable.Map.empty[Int, Split]
-    val leaves = mutable.Map.empty[Int, Double]
-    var active: Map[Int, Int] = Map(1 -> 0)
-    var depth = 0
-    // each level's routed rows persist so level d+1's aggregate reads
-    // one cached pass instead of replaying d routing maps
-    rows = rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the previous level's cache is released only AFTER the next
-    // level's aggregate has materialized its rows — unpersisting at
-    // re-assignment time (the r12 shape) dropped the parent before the
-    // lazily-persisted child ever ran, so every level replayed the
-    // full routing chain from the source: O(depth²) passes per tree
-    var pending: org.apache.spark.rdd.RDD[_] = null
-    while (active.nonEmpty) {
-      val k = active.size
-      val activeL = active // stable closure capture
-      val offsets = bins.offsets
-      val stats = rows.treeAggregate(new Array[Double](k * w * 3))(
-        seqOp = (acc, r) => {
-          val ni = activeL.getOrElse(r._1, -1)
-          if (ni >= 0) {
-            val b = r._2; val g = r._3; val h = r._4
-            val base = ni * w
-            var f = 0
-            while (f < b.length) {
-              val idx = (base + offsets(f) + b(f)) * 3
-              acc(idx) += g; acc(idx + 1) += h; acc(idx + 2) += 1
-              f += 1
-            }
-          }
-          acc
-        },
-        combOp = (a, b) => { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a })
-      // rows is now materialized in cache; the parent level can go
-      if (pending != null) { pending.unpersist(blocking = false); pending = null }
-      val levelSplits = mutable.Map.empty[Int, Split]
-      for ((node, ni) <- active.toSeq.sortBy(_._1)) {
-        val base = ni * w
-        // node totals off feature 0's bins (each row lands in exactly
-        // one bin per feature)
-        var tG = 0.0; var tH = 0.0; var tN = 0.0
-        var b0 = 0
-        while (b0 < bins.numBins(0)) {
-          val idx = (base + bins.offsets(0) + b0) * 3
-          tG += stats(idx); tH += stats(idx + 1); tN += stats(idx + 2)
-          b0 += 1
-        }
-        val leafVal = tG / (tH + lambda)
-        val chosen =
-          if (depth >= maxDepth || tN < 2 * minData) None
-          else bestSplit(stats, base, bins, tG, tH, tN, lambda, minData,
-            minGain, minHess, featureMask).map(_._1)
-        chosen match {
-          case Some(s) => levelSplits(node) = s
-          case None    => leaves(node) = leafVal
-        }
-      }
-      splits ++= levelSplits
-      if (levelSplits.isEmpty) {
-        active = Map.empty
-      } else {
-        val nextActive = levelSplits.keysIterator
-          .flatMap(n => Iterator(2 * n, 2 * n + 1))
-          .toSeq.sorted.zipWithIndex.toMap
-        val ls = levelSplits.toMap
-        val routed = rows.flatMap { case (node, b, g, h) =>
-          ls.get(node) match {
-            case Some(sp) =>
-              val bi = b(sp.feature).toInt
-              val left =
-                if (sp.isCat) sp.leftCatSet.contains(bi)
-                else if (bi == 0) sp.defaultLeft
-                else bi <= sp.thresholdBin
-              Iterator(((if (left) 2 * node else 2 * node + 1), b, g, h))
-            case None => Iterator.empty // row reached a finished leaf
-          }
-        }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        pending = rows // released after routed materializes next round
-        rows = routed
-        active = nextActive
-      }
-      depth += 1
-    }
-    rows.unpersist(blocking = false)
-    if (pending != null) pending.unpersist(blocking = false)
-    Tree(splits.toMap, leaves.toMap)
-  }
-
-  /** LEAF-WISE (best-first) growth — LightGBM's actual frontier rule
-    * (`num_leaves`): repeatedly split the single leaf with the best
-    * gain until the leaf budget is spent, instead of expanding whole
-    * levels. Deep-where-it-matters trees on heterogeneous data; the
-    * last fitter-shape divergence from the reference's LGBMRegressor.
+    * Newton step Σg/(Σh+λ).
     *
-    * Histogram SUBTRACTION (LightGBM's trick): after a split, only
-    * the SMALLER child's histogram is aggregated from the data; the
-    * larger child's is the parent's minus the smaller's — so each
-    * split costs one pass over the smaller child's rows, and the
-    * total work is row-count × average depth, not × split count.
-    * Driver state is the per-frontier-leaf histogram map —
-    * `numLeaves × Σ numBins × 3` doubles (a few MB), the
-    * model-state-bounded contract.
-    */
-  def fitLeafWise(df: DataFrame, binsCol: String, gCol: String,
-      hCol: String, bins: Bins, numLeaves: Int, maxDepth: Int = 20,
-      lambda: Double = 1e-6, minData: Long = 20,
-      minGain: Double = 0.0, minHess: Double = 0.0,
-      featureMask: Array[Boolean] = null): Tree = {
-    require(numLeaves >= 2 && numLeaves <= 4096, s"bad numLeaves: $numLeaves")
+    * Best-first growth (LightGBM's `num_leaves` rule): repeatedly split
+    * the leaf with the highest gain (ties: lowest leaf id) until
+    * `numLeaves` leaves exist, or, with `numLeaves = 0`, until no leaf
+    * can split. A leaf splits only below `maxDepth` and with at least
+    * `2 · minData` rows. Without a budget every splittable leaf splits,
+    * so the order is immaterial and the tree is the level-wise one.
+    *
+    * Histogram SUBTRACTION (LightGBM's trick): a split aggregates only
+    * its SMALLER child from the data; the larger child's histogram is
+    * the parent's minus the smaller's.
+    *
+    * Passes are batched by frontier: when the chosen leaf's children
+    * have no histograms yet, ONE `treeAggregate` builds the smaller
+    * child of every open node — every node with a known histogram and
+    * a best split but no children yet, committed leaf or not. A node's
+    * best split depends only on its own rows, so the speculative
+    * children are exactly the ones a later split would aggregate, and
+    * each slot sums the same rows in the same order as a one-target
+    * pass would. Pass p builds depth p − 1 histograms, and it runs
+    * only to split a leaf at depth p − 2, so a tree takes at most
+    * 1 + (its depth) passes. */
+  def fit(df: DataFrame, binsCol: String, gCol: String, hCol: String,
+      bins: Bins, maxDepth: Int = 20, numLeaves: Int = 0,
+      lambda: Double = 1e-6, minData: Long = 20, minGain: Double = 0.0,
+      minHess: Double = 0.0, featureMask: Array[Boolean] = null): Tree = {
     require(maxDepth >= 1 && maxDepth <= 30, s"bad maxDepth: $maxDepth")
+    require(numLeaves == 0 || (numLeaves >= 2 && numLeaves <= 4096),
+      s"bad numLeaves: $numLeaves")
     val w = bins.width
+    val offsets = bins.offsets
     val rows = df
       .select(col(binsCol), col(gCol).cast("double"), col(hCol).cast("double"))
       .rdd.map { r =>
         (r.getAs[scala.collection.Seq[Short]](0).toArray,
           r.getDouble(1), r.getDouble(2))
       }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def histOf(splitsSoFar: Map[Int, Split], target: Int): Array[Double] = {
-      val t = Tree(splitsSoFar, Map.empty)
-      rows.treeAggregate(new Array[Double](w * 3))(
+    // one pass: the histogram of each target node `route` reaches,
+    // target i in slot i
+    def histsOf(route: Tree, targets: Seq[Int]): Seq[Array[Double]] = {
+      val slot = targets.zipWithIndex.toMap
+      val stats = rows.treeAggregate(new Array[Double](targets.size * w * 3))(
         seqOp = (acc, r) => {
-          if (t.leafOfBins(r._1) == target) {
+          val i = slot.getOrElse(route.leafOfBins(r._1), -1)
+          if (i >= 0) {
             val b = r._1
+            val base = i * w
             var f = 0
             while (f < b.length) {
-              val idx = (bins.offsets(f) + b(f)) * 3
+              val idx = (base + offsets(f) + b(f)) * 3
               acc(idx) += r._2; acc(idx + 1) += r._3; acc(idx + 2) += 1
               f += 1
             }
@@ -510,70 +423,72 @@ object HistTree {
           acc
         },
         combOp = (a, b) => { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a })
+      targets.indices.map(i => java.util.Arrays.copyOfRange(stats, i * w * 3, (i + 1) * w * 3))
     }
-    def totalsOf(h: Array[Double]): (Double, Double, Double) = {
+    def depthOf(node: Int): Int = 31 - Integer.numberOfLeadingZeros(node)
+    // node -> (Σg, Σh, n) off feature 0's bins (each row lands in
+    // exactly one bin per feature), for every node with a histogram
+    val totals = mutable.Map.empty[Int, (Double, Double, Double)]
+    // node -> its best split and left row count, for splittable nodes
+    val best = mutable.Map.empty[Int, (Split, Double)]
+    // splittable nodes whose children are not aggregated yet
+    val open = mutable.Map.empty[Int, Array[Double]]
+    def learn(node: Int, h: Array[Double]): Unit = {
       var tG = 0.0; var tH = 0.0; var tN = 0.0
       var b0 = 0
       while (b0 < bins.numBins(0)) {
-        val idx = (bins.offsets(0) + b0) * 3
+        val idx = (offsets(0) + b0) * 3
         tG += h(idx); tH += h(idx + 1); tN += h(idx + 2)
         b0 += 1
       }
-      (tG, tH, tN)
+      totals(node) = (tG, tH, tN)
+      if (depthOf(node) < maxDepth && tN >= 2 * minData)
+        bestSplit(h, bins, tG, tH, tN, lambda, minData, minGain, minHess,
+          featureMask).foreach { sn => best(node) = sn; open(node) = h }
     }
-    def depthOf(node: Int): Int = 31 - Integer.numberOfLeadingZeros(node)
+    learn(1, histsOf(Tree(Map.empty, Map.empty), Seq(1)).head)
     val splits = mutable.Map.empty[Int, Split]
-    val hists = mutable.Map(1 -> histOf(Map.empty, 1))
-    var frontier = 1
+    val leaves = mutable.SortedSet(1)
     var done = false
-    while (frontier < numLeaves && !done) {
-      // best (gain, leaf, split) over the current frontier
-      val candidates = hists.iterator.flatMap { case (leaf, h) =>
-        if (depthOf(leaf) >= maxDepth) Iterator.empty
-        else {
-          val (tG, tH, tN) = totalsOf(h)
-          if (tN < 2 * minData) Iterator.empty
-          else bestSplit(h, 0, bins, tG, tH, tN, lambda, minData, minGain,
-              minHess, featureMask)
-            .map { case (s, nl) => (s.gain, leaf, s, nl) }.iterator
-        }
-      }.toSeq
+    while (!done && (numLeaves == 0 || leaves.size < numLeaves)) {
+      val candidates = leaves.iterator.filter(best.contains).toSeq
       if (candidates.isEmpty) done = true
       else {
-        // deterministic tie-break: highest gain, then lowest leaf id
-        val (_, leaf, s, nLeft) = candidates
-          .minBy { case (g, l, _, _) => (-g, l) }
-        splits(leaf) = s
-        val parentHist = hists.remove(leaf).get
-        val (_, _, pN) = totalsOf(parentHist)
-        // ONE pass: aggregate only the smaller child (known from the
-        // split scan's left count), subtract for the larger — route
-        // with the tree as it now stands (the new split included)
-        val snapshot = splits.toMap
-        val lId = 2 * leaf; val rId = 2 * leaf + 1
-        val smallId = if (nLeft * 2 <= pN) lId else rId
-        val smallHist = histOf(snapshot, smallId)
-        val other = new Array[Double](w * 3)
-        var i = 0
-        while (i < other.length) {
-          other(i) = parentHist(i) - smallHist(i); i += 1
+        val leaf = candidates.minBy(l => (-best(l)._1.gain, l))
+        if (open.contains(leaf)) {
+          val pending = open.keys.toSeq.sorted
+          val smaller = pending.map { n =>
+            if (best(n)._2 * 2 <= totals(n)._3) 2 * n else 2 * n + 1
+          }
+          val route = Tree(best.map { case (n, (s, _)) => n -> s }.toMap, Map.empty)
+          pending.zip(smaller).zip(histsOf(route, smaller)).foreach {
+            case ((n, small), smallHist) =>
+              val parentHist = open.remove(n).get
+              val other = new Array[Double](w * 3)
+              var i = 0
+              while (i < other.length) {
+                other(i) = parentHist(i) - smallHist(i); i += 1
+              }
+              learn(small, smallHist)
+              learn(small ^ 1, other)
+          }
         }
-        hists(smallId) = smallHist
-        hists(if (smallId == lId) rId else lId) = other
-        frontier += 1
+        splits(leaf) = best(leaf)._1
+        leaves -= leaf
+        leaves += 2 * leaf
+        leaves += 2 * leaf + 1
       }
     }
-    val leaves = hists.map { case (leaf, h) =>
-      val (tG, tH, _) = totalsOf(h)
-      leaf -> tG / (tH + lambda)
-    }
     rows.unpersist(blocking = false)
-    Tree(splits.toMap, leaves.toMap)
+    Tree(splits.toMap, leaves.iterator.map { l =>
+      val (tG, tH, _) = totals(l)
+      l -> tG / (tH + lambda)
+    }.toMap)
   }
 
   /** Returns the best split plus the LEFT-side row count (missing
-    * included per its learned direction) — the leaf-wise grower uses
-    * it to aggregate only the smaller child. `minHess` is LightGBM's
+    * included per its learned direction) — [[fit]] uses it to
+    * aggregate only the smaller child. `minHess` is LightGBM's
     * `min_child_weight` / `min_sum_hessian_in_leaf`: each child must
     * carry at least this much hessian mass (the default split gate —
     * at M5 scale `min_child_weight: 300` in full.yaml:12 is a
@@ -581,7 +496,7 @@ object HistTree {
     * tweedie hessian shrinks toward zero on near-zero-demand rows).
     * `mask` (null = all) is the per-tree feature subsample
     * (`colsample_bytree`): only unmasked features are scanned. */
-  private def bestSplit(stats: Array[Double], base: Int, bins: Bins,
+  private def bestSplit(stats: Array[Double], bins: Bins,
       tG: Double, tH: Double, tN: Double, lambda: Double,
       minData: Long, minGain: Double, minHess: Double = 0.0,
       mask: Array[Boolean] = null): Option[(Split, Double)] = {
@@ -594,7 +509,7 @@ object HistTree {
       if (mask != null && !mask(f)) { f += 1 }
       else {
       val nb = bins.numBins(f)
-      val off = base + bins.offsets(f)
+      val off = bins.offsets(f)
       def g(b: Int) = stats((off + b) * 3)
       def h(b: Int) = stats((off + b) * 3 + 1)
       def n(b: Int) = stats((off + b) * 3 + 2)

@@ -2,7 +2,7 @@ package graft.ml
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Tweedie-objective gradient boosting — the reference's actual M5 loss
@@ -33,9 +33,10 @@ import org.apache.spark.sql.functions._
   * PER-SPLIT LEARNED MISSING-VALUE ROUTING over real NaNs (assemble
   * with `missingAsNaN = true`; M5's lag/rolling warm-up rows are null
   * by construction, so this touches real data), sorted categorical
-  * splits, and with `numLeaves > 0` (lgb_params `num_leaves`)
-  * LEAF-WISE growth — LightGBM's best-first frontier with histogram
-  * subtraction; `numLeaves = 0` grows level-wise to `maxDepth`.
+  * splits, and LightGBM's best-first frontier with histogram
+  * subtraction: `numLeaves` (lgb_params `num_leaves`) is the leaf
+  * budget, and `numLeaves = 0` grows every splittable leaf to
+  * `maxDepth`.
   * Golden-tested, never oracle-hashed (SURVEY §5.3).
   *
   * Every row is binned ONCE with the fit-time [[HistTree.Bins]], at fit
@@ -82,8 +83,8 @@ object TweedieGbt {
       // per-tree feature subsample (colsample_bytree / feature_fraction),
       // deterministic per round from `seed`
       colsampleBytree: Double = 1.0,
-      // > 0 grows the trees LEAF-WISE (best-first) with this leaf
-      // budget — LightGBM's num_leaves frontier; 0 grows level-wise
+      // the best-first leaf budget (LightGBM's num_leaves); 0 means
+      // none, so the trees are limited by maxDepth alone
       numLeaves: Int = 0) {
     require(variancePower > 1.0 && variancePower < 2.0,
       s"variancePower must be in (1,2) for compound-Poisson Tweedie: $variancePower")
@@ -91,6 +92,8 @@ object TweedieGbt {
       s"colsampleBytree must be in (0,1]: $colsampleBytree")
     require(minChildWeight >= 0.0,
       s"minChildWeight must be >= 0: $minChildWeight")
+    require(numLeaves == 0 || (numLeaves >= 2 && numLeaves <= 4096),
+      s"numLeaves must be 0 (no leaf budget) or in 2..4096: $numLeaves")
   }
 
   /** Map the reference's lgb_params onto this trainer (the keys
@@ -187,7 +190,7 @@ object TweedieGbt {
   /** Read a [[Model.save]] dir. Models of the removed Spark ML fitter
     * (`tree_<i>` stages, no `bins.txt`) fail with a message naming the
     * dir; a `meta.json` that still carries its `histogram` flag reads. */
-  def load(spark: SparkSession, dir: String): Model = {
+  def load(dir: String): Model = {
     val p = Paths.get(dir)
     val txt = Files.readString(p.resolve("meta.json"))
     def field(k: String): Double =
@@ -301,7 +304,7 @@ object TweedieGbt {
         lit(2 - p) * exp(lit(2 - p) * col("__F"))
 
       // histogram split finding with per-split learned missing routing,
-      // on the pre-binned rows; num_leaves > 0 grows LEAF-WISE
+      // on the pre-binned rows, best-first under the num_leaves budget
       // (LightGBM's frontier rule). colsample_bytree: a deterministic
       // per-round feature subset (seeded shuffle), LightGBM's per-tree
       // feature_fraction
@@ -318,18 +321,10 @@ object TweedieGbt {
           picked.foreach(m(_) = true)
           m
         }
-      val tree =
-        if (params.numLeaves >= 2)
-          HistTree.fitLeafWise(fitFrame, "__bins", "__r", "__hess",
-            histBins, numLeaves = params.numLeaves,
-            maxDepth = params.maxDepth, lambda = 1e-6,
-            minData = params.minDataInLeaf.toLong, minGain = 0.0,
-            minHess = params.minChildWeight, featureMask = mask)
-        else
-          HistTree.fit(fitFrame, "__bins", "__r", "__hess", histBins,
-            maxDepth = params.maxDepth, lambda = 1e-6,
-            minData = params.minDataInLeaf.toLong, minGain = 0.0,
-            minHess = params.minChildWeight, featureMask = mask)
+      val tree = HistTree.fit(fitFrame, "__bins", "__r", "__hess", histBins,
+        maxDepth = params.maxDepth, numLeaves = params.numLeaves,
+        lambda = 1e-6, minData = params.minDataInLeaf.toLong, minGain = 0.0,
+        minHess = params.minChildWeight, featureMask = mask)
 
       // Newton leaf refit (LightGBM's second-order step): route every
       // TRAIN row to its leaf, then γ_leaf = Σ resid / (Σ hess + λ).

@@ -2,6 +2,8 @@ package graft.m5
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -20,10 +22,52 @@ class M5PipelineSpec extends SparkSpec {
     d
   }
 
-  private def freshPipeline(): (M5Pipeline, String) = {
+  /** A pipeline over a fresh output dir; `lgbExtra` overrides keys of
+    * the fixture's lgb_params. */
+  private def freshPipeline(
+      lgbExtra: Map[String, Object] = Map.empty): (M5Pipeline, String) = {
     val outDir = Files.createTempDirectory("m5out").toString
-    val cfg = YamlConfig.fromMap(MiniM5Fixture.config(inputDir, outDir))
-    (new M5Pipeline(spark, cfg), outDir)
+    val base = MiniM5Fixture.config(inputDir, outDir)
+    val cfg =
+      if (lgbExtra.isEmpty) base
+      else {
+        val lgb = new java.util.HashMap[String, Object](
+          base("lgb_params").asInstanceOf[java.util.Map[String, Object]])
+        lgbExtra.foreach { case (k, v) => lgb.put(k, v) }
+        base.updated("lgb_params", lgb: Object)
+      }
+    (new M5Pipeline(spark, YamlConfig.fromMap(cfg)), outDir)
+  }
+
+  /** Two runs' outputs agree beyond the submission: every model dir's
+    * vocab.json, tree, leaf and bins files byte for byte, and the
+    * predictions row for row. Parquet is compared by schema and rows,
+    * not bytes: its footer lists encodings in JVM hash order. */
+  private def assertSameModelsAndPredictions(out1: String, out2: String): Seq[String] = {
+    val modelFile = """(vocab\.json|bins\.txt|hist_\d+\.txt|leaves_\d+\.json)""".r
+    def modelFiles(out: String): Seq[String] = {
+      val root = Paths.get(out)
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(root.relativize(_).toString)
+        .filter(rel => rel.startsWith("model_store_") &&
+          modelFile.matches(Paths.get(rel).getFileName.toString))
+        .toSeq.sorted
+      finally walk.close()
+    }
+    val files = modelFiles(out1)
+    assert(files == modelFiles(out2), "the runs wrote different model files")
+    // 2 stores × 2 weeks, each committed by its vocab.json
+    assert(files.count(_.endsWith("vocab.json")) == 4, files.mkString(", "))
+    for (rel <- files)
+      assert(java.util.Arrays.equals(Files.readAllBytes(Paths.get(out1, rel)),
+        Files.readAllBytes(Paths.get(out2, rel))), s"$rel must be byte-identical")
+    val Seq(p1, p2) = Seq(out1, out2).map(o => spark.read.parquet(s"$o/predictions.parquet"))
+    assert(p1.schema == p2.schema, "predictions schemas differ")
+    val rows1 = p1.collect().map(_.toString).sorted.toSeq
+    assert(rows1.nonEmpty && rows1 == p2.collect().map(_.toString).sorted.toSeq,
+      "predictions rows must be identical")
+    files
   }
 
   test("golden run: full DAG end-to-end, checkpoint schemas and row counts") {
@@ -191,6 +235,23 @@ class M5PipelineSpec extends SparkSpec {
     val b1 = Files.readAllBytes(Paths.get(out1, "submission.csv"))
     val b2 = Files.readAllBytes(Paths.get(out2, "submission.csv"))
     assert(java.util.Arrays.equals(b1, b2), "submission.csv must be byte-identical")
+    assertSameModelsAndPredictions(out1, out2)
+
+    // the Tweedie path writes tree files; a leaf budget under the depth
+    // cap exercises both of the grower's stopping rules
+    val tweedie = Map[String, Object]("objective" -> "tweedie",
+      "num_leaves" -> Int.box(8), "min_child_samples" -> Int.box(5))
+    val (t1, tOut1) = freshPipeline(tweedie)
+    val (t2, tOut2) = freshPipeline(tweedie)
+    t1.run(log = _ => ())
+    t2.run(log = _ => ())
+    assert(java.util.Arrays.equals(
+      Files.readAllBytes(Paths.get(tOut1, "submission.csv")),
+      Files.readAllBytes(Paths.get(tOut2, "submission.csv"))),
+      "tweedie submission.csv must be byte-identical")
+    val files = assertSameModelsAndPredictions(tOut1, tOut2)
+    assert(files.count(_.endsWith("bins.txt")) == 4 &&
+      files.exists(_.endsWith("hist_1.txt")), files.mkString(", "))
   }
 }
 

@@ -144,4 +144,15 @@ class M5TweedieSpec extends SparkSpec {
     assert(preds.filter(col("pred_units_sold") <= 0).isEmpty,
       "tweedie predictions must be strictly positive")
   }
+
+  test("num_leaves is validated where lgb_params are read") {
+    val lgb = Map[String, Any]("objective" -> "tweedie")
+    // 1 and negatives once grew a depth-limited tree silently; 5000
+    // passed here and failed inside the first tree fit
+    for (bad <- Seq(1, -1, 5000))
+      intercept[IllegalArgumentException](
+        graft.ml.TweedieGbt.fromLgbParams(lgb + ("num_leaves" -> bad)))
+    for (ok <- Seq(0, 50))
+      assert(graft.ml.TweedieGbt.fromLgbParams(lgb + ("num_leaves" -> ok)).numLeaves == ok)
+  }
 }

@@ -125,7 +125,7 @@ class HistTreeSpec extends SparkSpec {
       (1 to 4).map(i => (Vectors.dense(10.0 + i % 2, 20.0), 2.0, 1.0))
     val df = frame(rows)
     val bins = HistTree.buildBins(df, "features", maxBins = 16)
-    val tree = HistTree.fitLeafWise(binned(df, bins), "__bins", "__g",
+    val tree = HistTree.fit(binned(df, bins), "__bins", "__g",
       "__h", bins, numLeaves = 3, lambda = 0.0, minData = 1)
     assert(tree.splits.keySet == Set(1, 3),
       s"expected root + right-child splits, got ${tree.splits.keySet}")
@@ -138,7 +138,7 @@ class HistTreeSpec extends SparkSpec {
     // the budget binds: numLeaves = 4 would also split the left side
     // if it had any gain — it does not (constant g), so the frontier
     // stays at 3 leaves even with budget to spare
-    val t4 = HistTree.fitLeafWise(binned(df, bins), "__bins", "__g",
+    val t4 = HistTree.fit(binned(df, bins), "__bins", "__g",
       "__h", bins, numLeaves = 4, lambda = 0.0, minData = 1)
     assert(t4.splits.keySet == Set(1, 3), s"got ${t4.splits.keySet}")
   }
@@ -152,7 +152,7 @@ class HistTreeSpec extends SparkSpec {
       (1 to 2).map(_ => (Vectors.dense(Double.NaN), 2.0, 1.0))
     val df = frame(rows)
     val bins = HistTree.buildBins(df, "features", maxBins = 16)
-    val tree = HistTree.fitLeafWise(binned(df, bins), "__bins", "__g",
+    val tree = HistTree.fit(binned(df, bins), "__bins", "__g",
       "__h", bins, numLeaves = 2, lambda = 0.0, minData = 1)
     assert(tree.splits(1).defaultLeft, s"got ${tree.splits(1)}")
     assert(tree.valueOfVector(Vectors.dense(Double.NaN)) == 2.0)
@@ -183,7 +183,7 @@ class HistTreeSpec extends SparkSpec {
     assert(gated.splits.isEmpty,
       s"minHess = 1.0 must reject the low-hessian left child: ${gated.splits}")
     // leaf-wise grower enforces the same gate
-    val gatedLw = HistTree.fitLeafWise(binned(df, bins), "__bins", "__g",
+    val gatedLw = HistTree.fit(binned(df, bins), "__bins", "__g",
       "__h", bins, numLeaves = 4, lambda = 0.0, minData = 1, minHess = 1.0)
     assert(gatedLw.splits.isEmpty, s"got ${gatedLw.splits}")
   }
@@ -351,7 +351,7 @@ class HistTreeSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("histcat").toString
     model.save(dir)
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "bins.txt")))
-    val loaded = TweedieGbt.load(spark, dir)
+    val loaded = TweedieGbt.load(dir)
     assert(loaded.histBins.hasCatMaps)
     val joined = preds.select(col("c"), col("y"), col("mu"))
       .join(loaded.transform(assembled, "mu2")
@@ -390,12 +390,182 @@ class HistTreeSpec extends SparkSpec {
     // save/load: identical forecasts
     val dir = java.nio.file.Files.createTempDirectory("histgbt").toString
     model.save(dir)
-    val loaded = TweedieGbt.load(spark, dir)
+    val loaded = TweedieGbt.load(dir)
     val p2 = loaded.transform(assembled, "mu2")
     val joined = preds.select(col("x0"), col("x1"), col("y"), col("mu"))
       .join(p2.select(col("x0"), col("x1"), col("y"), col("mu2")),
         Seq("x0", "x1", "y"))
     assert(joined.filter(abs(col("mu") - col("mu2")) > 1e-12).isEmpty,
       "loaded model must reproduce forecasts exactly")
+  }
+
+  /** `body`'s result and the Spark jobs it ran. A marker job in its own
+    * group flushes the FIFO listener bus before the count is read. */
+  private def withJobCount[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val marker = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val group = Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+        if (group.contains("graft-hist-marker")) marker.set(true)
+        else jobs.incrementAndGet(): Unit
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      spark.sparkContext.setJobGroup("graft-hist-marker", "flush")
+      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
+      val deadline = System.nanoTime() + 10_000_000_000L
+      while (!marker.get && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(marker.get, "listener bus never delivered the marker job")
+      (out, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** x0 splits the root and x1 each half; every quadrant is pure. */
+  private def balanced: DataFrame = frame(
+    for (x0 <- Seq(1.0, 10.0); x1 <- Seq(1.0, 10.0); _ <- 1 to 4)
+      yield (Vectors.dense(x0, x1),
+        (if (x0 < 5) 4.0 else -4.0) + (if (x1 < 5) 1.0 else -1.0), 1.0))
+
+  private def splitLines(t: HistTree.Tree): Seq[String] =
+    HistTree.serialize(t).linesIterator.filter(_.startsWith("S ")).toSeq
+
+  test("one aggregation pass serves a whole frontier") {
+    val df = balanced
+    val bins = HistTree.buildBins(df, "features", maxBins = 16)
+    val b = binned(df, bins)
+    // root, its children, then both grandchild pairs in one pass; the
+    // last split's children are already aggregated
+    val (t4, jobs4) = withJobCount(HistTree.fit(b, "__bins", "__g", "__h",
+      bins, numLeaves = 4, lambda = 0.0, minData = 1))
+    assert(t4.splits.keySet == Set(1, 2, 3), s"got ${t4.splits.keySet}")
+    assert(jobs4 == 3, s"numLeaves = 4 ran $jobs4 jobs")
+    val (d2, jobsD2) = withJobCount(HistTree.fit(b, "__bins", "__g", "__h",
+      bins, maxDepth = 2, lambda = 0.0, minData = 1))
+    assert(d2.splits.keySet == Set(1, 2, 3), s"got ${d2.splits.keySet}")
+    assert(jobsD2 <= 3, s"maxDepth = 2 ran $jobsD2 jobs")
+
+    // a chain: each split peels the largest gradient off the rest, so
+    // no pass can serve two splits
+    val chain = frame((1 to 5).flatMap { x =>
+      Seq.fill(2)((Vectors.dense(x.toDouble), math.pow(4, 5 - x), 1.0))
+    })
+    val cBins = HistTree.buildBins(chain, "features", maxBins = 16)
+    for (budget <- Seq(0, 2, 3, 5)) {
+      val (t, jobs) = withJobCount(HistTree.fit(binned(chain, cBins), "__bins",
+        "__g", "__h", cBins, numLeaves = budget, lambda = 0.0, minData = 1))
+      assert(t.splits.keySet.forall(n => n == 1 || n % 2 == 1),
+        s"budget $budget: not a chain: ${t.splits.keySet}")
+      assert(jobs <= 1 + t.splits.size,
+        s"budget $budget: $jobs jobs for ${t.splits.size} splits")
+    }
+  }
+
+  test("a leaf budget of 2^maxDepth grows the same splits as no budget") {
+    def catFrame(rows: Seq[(Vector, Double, Double)], arity: Int): DataFrame =
+      rows.toDF("features", "__g", "__h").select(col("features").as("features",
+        new org.apache.spark.ml.attribute.AttributeGroup("features",
+          Array[org.apache.spark.ml.attribute.Attribute](
+            NominalAttribute.defaultAttr.withName("c").withNumValues(arity)))
+          .toMetadata()), col("__g"), col("__h"))
+    val nan = Double.NaN
+    def missing(nanG: Double) = frame(
+      (1 to 6).map(i => (Vectors.dense(1.0 + i % 2), 1.0, 1.0)) ++
+      (1 to 6).map(i => (Vectors.dense(10.0 + i % 2), -1.0, 1.0)) ++
+      (1 to 4).map(_ => (Vectors.dense(nan), nanG, 1.0)))
+    // this spec's fixtures: (name, frame, maxBins)
+    val fixtures: Seq[(String, DataFrame, Int)] = Seq(
+      ("numeric clusters", frame((1 to 8).map { i =>
+        if (i <= 4) (Vectors.dense(i % 2 + 1.0), 1.0, 1.0)
+        else (Vectors.dense(10.0 + i % 2), -1.0, 1.0)
+      }), 16),
+      ("missing left", missing(1.0), 16),
+      ("missing right", missing(-1.0), 16),
+      ("many-vs-many categorical", catFrame(
+        (1 to 6).map(i => (Vectors.dense((i % 2) * 2 + 1.0), 1.0, 1.0)) ++
+        (1 to 6).map(_ => (Vectors.dense(2.0), -1.0, 1.0)), 4), 16),
+      ("serialize round-trip", frame(
+        (1 to 6).map(i => (Vectors.dense(1.0 + i % 2, i.toDouble), 1.0, 1.0)) ++
+        (1 to 6).map(i => (Vectors.dense(10.0 + i % 2, i.toDouble), -1.0, 1.0)) ++
+        (1 to 2).map(_ => (Vectors.dense(nan, 3.0), 1.0, 1.0))), 8),
+      ("budget on the best-gain side", frame(
+        (1 to 8).map(i => (Vectors.dense(1.0 + i % 2, i % 3 * 1.0), 0.0, 1.0)) ++
+        (1 to 4).map(i => (Vectors.dense(10.0 + i % 2, 1.0), 6.0, 1.0)) ++
+        (1 to 4).map(i => (Vectors.dense(10.0 + i % 2, 20.0), 2.0, 1.0))), 16),
+      ("subtraction under missing routing", frame(
+        (1 to 6).map(i => (Vectors.dense(1.0 + i % 2), 2.0, 1.0)) ++
+        (1 to 6).map(i => (Vectors.dense(10.0 + i % 2), -2.0, 1.0)) ++
+        (1 to 2).map(_ => (Vectors.dense(nan), 2.0, 1.0))), 16),
+      ("min_child_weight", frame(
+        (1 to 4).map(_ => (Vectors.dense(1.0), 1.0, 0.05)) ++
+        (1 to 4).map(_ => (Vectors.dense(10.0), -1.0, 2.0))), 16),
+      ("feature mask", frame((0 until 12).map { i =>
+        val g = (if (i < 6) 2.0 else -2.0) + (if (i % 2 == 0) 0.5 else -0.5)
+        (Vectors.dense(if (i < 6) 1.0 else 10.0, if (i % 2 == 0) 1.0 else 10.0), g, 1.0)
+      }), 16),
+      ("out-of-range categorical", catFrame(
+        (1 to 6).map(i => (Vectors.dense((i % 2) * 2 + 1.0), 1.0, 1.0)) ++
+        (1 to 6).map(_ => (Vectors.dense(2.0), -1.0, 1.0)) ++
+        (1 to 2).map(_ => (Vectors.dense(0.0), -1.0, 1.0)), 4), 16),
+      ("high-arity categorical", catFrame(
+        (0 until 30).map(i => (Vectors.dense((i % 3 + 1).toDouble), 1.0, 1.0)) ++
+        (0 until 30).map(i => (Vectors.dense((i % 3 + 4).toDouble), -1.0, 1.0)) ++
+        (10 to 15).map(c => (Vectors.dense(c.toDouble), 0.0, 1.0)), 20), 8),
+      ("balanced two-level", balanced, 16))
+
+    // a seeded sweep: NaNs in x0, a categorical x2 whose code 0 is missing
+    val sweepAttrs = new org.apache.spark.ml.attribute.AttributeGroup("features",
+      Array[org.apache.spark.ml.attribute.Attribute](
+        org.apache.spark.ml.attribute.NumericAttribute.defaultAttr.withName("x0"),
+        org.apache.spark.ml.attribute.NumericAttribute.defaultAttr.withName("x1"),
+        NominalAttribute.defaultAttr.withName("x2").withNumValues(6))).toMetadata()
+    val sweep = (1 to 4).map { seed =>
+      val rng = new scala.util.Random(seed)
+      val rows = (0 until 160).map { _ =>
+        val x0 = if (rng.nextDouble() < 0.2) nan else rng.nextInt(40).toDouble
+        val x1 = rng.nextGaussian()
+        val x2 = rng.nextInt(6).toDouble
+        val g = (if (x0.isNaN || x0 > 25) 2.0 else -1.0) +
+          (if (x2 == 1.0 || x2 == 4.0) 1.5 else 0.0) + 0.5 * x1 +
+          rng.nextGaussian()
+        (Vectors.dense(x0, x1, x2), g, 0.5 + rng.nextDouble())
+      }
+      (s"sweep seed $seed", rows.toDF("features", "__g", "__h")
+        .select(col("features").as("features", sweepAttrs), col("__g"), col("__h")), 32)
+    }
+
+    var mostSplits = 0
+    for ((name, df, maxBins) <- fixtures ++ sweep) {
+      val bins = HistTree.buildBins(df, "features", maxBins = maxBins)
+      val b = binned(df, bins)
+      val minData = if (name.startsWith("sweep")) 3L else 1L
+      val lambda = if (name.startsWith("sweep")) 1e-6 else 0.0
+      for (maxDepth <- 1 to 3; minHess <- Seq(0.0, 1.0)) {
+        def grow(numLeaves: Int) = HistTree.fit(b, "__bins", "__g", "__h", bins,
+          maxDepth = maxDepth, numLeaves = numLeaves, lambda = lambda,
+          minData = minData, minHess = minHess)
+        val free = grow(0)
+        val capped = grow(1 << maxDepth)
+        assert(splitLines(capped) == splitLines(free),
+          s"$name maxDepth $maxDepth minHess $minHess")
+        assert(capped.leafValue.keySet == free.leafValue.keySet,
+          s"$name maxDepth $maxDepth minHess $minHess")
+        mostSplits = math.max(mostSplits, free.splits.size)
+      }
+    }
+    assert(mostSplits >= 5, s"no fixture grew past $mostSplits splits")
+
+    // one depth-limited tree's serialized splits, pinned
+    val bins = HistTree.buildBins(balanced, "features", maxBins = 16)
+    val pinned = HistTree.fit(binned(balanced, bins), "__bins", "__g", "__h",
+      bins, maxDepth = 2, lambda = 0.0, minData = 1)
+    assert(splitLines(pinned) == Seq(
+      "S 1 0 1 5.5 false false - 3",
+      "S 2 1 1 5.5 false false - 3",
+      "S 3 1 1 5.5 false false - 3"), HistTree.serialize(pinned))
   }
 }

@@ -98,7 +98,7 @@ class TweedieGbtSpec extends SparkSpec {
     val model = TweedieGbt.fit(demand, "features", "y", "is_valid", params)
     val dir = java.nio.file.Files.createTempDirectory("graft-tweedie").toString
     model.save(dir)
-    val loaded = TweedieGbt.load(spark, dir)
+    val loaded = TweedieGbt.load(dir)
     assert(loaded.f0 == model.f0 && loaded.stages.size == model.stages.size)
     val a = model.transform(demand, "mu").select("mu").as[Double].collect()
     val b = loaded.transform(demand, "mu").select("mu").as[Double].collect()
@@ -115,14 +115,14 @@ class TweedieGbtSpec extends SparkSpec {
       java.nio.file.Files.readString(meta).replace("}", ""","histogram":1}"""))
     val mu = (m: TweedieGbt.Model) =>
       m.transform(demand, "mu").select("mu").as[Double].collect().toSeq
-    assert(mu(TweedieGbt.load(spark, dir.toString)) == mu(model))
+    assert(mu(TweedieGbt.load(dir.toString)) == mu(model))
 
     java.nio.file.Files.createDirectory(dir.resolve("tree_1"))
-    val stage = intercept[IllegalArgumentException](TweedieGbt.load(spark, dir.toString))
+    val stage = intercept[IllegalArgumentException](TweedieGbt.load(dir.toString))
     assert(stage.getMessage.contains(dir.toString) && stage.getMessage.contains("tree_1"))
     java.nio.file.Files.delete(dir.resolve("tree_1"))
     java.nio.file.Files.delete(dir.resolve("bins.txt"))
-    val noBins = intercept[IllegalArgumentException](TweedieGbt.load(spark, dir.toString))
+    val noBins = intercept[IllegalArgumentException](TweedieGbt.load(dir.toString))
     assert(noBins.getMessage.contains(dir.toString) && noBins.getMessage.contains("bins.txt"))
   }
 
