@@ -2,7 +2,6 @@ package graft.m5
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.ml.regression.GBTRegressionModel
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -10,7 +9,7 @@ import graft.config.YamlConfig
 import graft.dag.TaskRunner
 import graft.dag.TaskRunner.{external, FileTarget, ParquetTarget, Task}
 import graft.io.Csv
-import graft.ml.{Gbt, LabelVocab}
+import graft.ml.{LabelVocab, TweedieGbt}
 import graft.operators.{Relational, TimeSeries}
 
 /** The reference's whole capability, recomposed Spark-first from the
@@ -42,6 +41,8 @@ final class M5Pipeline(spark: SparkSession, config: YamlConfig) {
   private val cleanupIntermediates =
     config.contains("cleanup_intermediates") &&
       config.getString("cleanup_intermediates").toBoolean
+  // read up front, so a bad lgb_params value fails before any task runs
+  private val gbtParams = TweedieGbt.fromLgbParams(config.getMap("lgb_params"))
 
   private val DaysPerWeek = 7 // NUM_DAYS_1_WEEK, pipeline.py:20
 
@@ -184,17 +185,26 @@ final class M5Pipeline(spark: SparkSession, config: YamlConfig) {
   // ── TrainModel (pipeline.py:231-269) ─────────────────────────────
   private def modelDir(store: String, week: Int) = s"$outputDir/model_store_${store}_week_$week"
 
+  /** TrainModel's target: the vocabulary file, written LAST by an atomic
+    * move, beside a model in [[TweedieGbt]]'s current layout. A dir
+    * committed by an older layout (the per-column `encoders/`, a Spark
+    * ML `model/`, a `leaves_<i>.json` per stage) reads as absent, so it
+    * retrains instead of failing or serving stale leaf values. */
+  private final class ModelTarget(dir: String) extends TaskRunner.Target {
+    val path = s"$dir/vocab.json"
+    def exists: Boolean =
+      Files.exists(Paths.get(path)) && TweedieGbt.isCurrentLayout(s"$dir/model")
+  }
+
   def trainModel(store: String, week: Int): Task = {
     val trainTask = prepareTrainData(store, week)
     val dir = modelDir(store, week)
-    // the vocabulary file is the commit marker: written LAST, by an
-    // atomic move (MLWriter's own _SUCCESS files land per sub-dir
-    // mid-save, so none of them alone marks a finished model). A dir
-    // committed by the older per-column `encoders/` layout lacks it
-    // and retrains instead of failing at prediction time
-    val target = FileTarget(s"$dir/vocab.json")
+    val target = new ModelTarget(dir)
     Task(s"TrainModel($store, $week)", target, deps = Seq(trainTask),
       body = () => {
+        // a retrain starts from an empty dir: no file of an older
+        // layout outlives it
+        FileTarget(dir).delete()
         val sales = spark.read.parquet(trainTask.target.path)
         // validation split point: min of the last valid_num_days
         // distinct train dates (O23/O24, pipeline.py:245-246), picked on
@@ -216,28 +226,10 @@ final class M5Pipeline(spark: SparkSession, config: YamlConfig) {
         val vocab = LabelVocab.fit(sales, stringCols) // O13
         val encoded = vocab.encode(sales)
           .withColumn("__valid", col("date") >= lit(validStart)) // O10
-        // native categorical splits (LightGBM parity): Gbt.assemble
-        // turns the small-arity columns into true nominal features
-        val catArity = vocab.arity
-
-        val lgbParams = config.getMap("lgb_params")
-        // the reference's actual objective (full.yaml:4): tweedie routes
-        // to the native Tweedie boosting loop; anything else keeps the
-        // squared-loss GBT path
-        if (lgbParams.get("objective").map(_.toString).contains("tweedie")) {
-          val tp = graft.ml.TweedieGbt.fromLgbParams(lgbParams)
-          val model = graft.ml.TweedieGbt.fit(
-            Gbt.assemble(encoded, featureCols, catArity,
-              missingAsNaN = true), "features",
-            predTargetCol, "__valid", tp)
-          model.save(s"$dir/model")
-        } else {
-          val params = Gbt.fromLgbParams(lgbParams)
-          val model = Gbt.fit(encoded, featureCols, predTargetCol, "__valid",
-            params, catArity)
-          model.write.overwrite().save(s"$dir/model")
-        }
-        Files.createDirectories(Paths.get(dir))
+        // the encoded columns become native categoricals (LightGBM parity)
+        TweedieGbt.fit(TweedieGbt.assemble(encoded, featureCols, vocab.arity),
+          "features", predTargetCol, "__valid", gbtParams)
+          .save(s"$dir/model")
         Files.writeString(Paths.get(dir, "feature_cols.txt"), featureCols.mkString("\n"))
         vocab.save(target.path)
       })
@@ -264,20 +256,9 @@ final class M5Pipeline(spark: SparkSession, config: YamlConfig) {
         val encoded = vocab.encode(xTest.withColumn("__orig_id", col("id")))
         // the same arity map the train task attached — assemble must
         // shift the same columns or codes would be off by one
-        val catArity = vocab.arity
-        // a meta.json in the model dir marks the Tweedie loop's artifact;
-        // the GBT path saves Spark ML's own layout
-        val predicted =
-          if (Files.exists(Paths.get(dir, "model", "meta.json"))) {
-            val model = graft.ml.TweedieGbt.load(s"$dir/model")
-            model.transform(
-              Gbt.assemble(encoded, featureCols, catArity,
-                missingAsNaN = true), predTargetCol)
-              .drop("features")
-          } else
-            Gbt.predict(GBTRegressionModel.load(s"$dir/model"),
-              encoded, featureCols, predTargetCol, catArity)
-        predicted
+        TweedieGbt.load(s"$dir/model")
+          .transform(TweedieGbt.assemble(encoded, featureCols, vocab.arity),
+            predTargetCol)
           .withColumn(predDateCol, date_add(col("date"), week * DaysPerWeek)) // O33
           .select(col("__orig_id").as("id"), col("date"), col(predDateCol), col(predTargetCol))
           .write.mode("overwrite").parquet(target.path)

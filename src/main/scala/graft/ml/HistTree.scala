@@ -59,7 +59,7 @@ import graft.functions.expressions.{HistBins, HistLeaf}
 object HistTree {
 
   /** Per-feature binning dictionary. Bin 0 is ALWAYS the missing bin
-    * (NaN for numeric, code 0 for categoricals — `Gbt.assemble` maps
+    * (NaN for numeric, code 0 for categoricals — `TweedieGbt.assemble` maps
     * null/unseen categories to 0). Numeric bin b ∈ [1, edges.len+1]
     * holds `edges(b−2) < v <= edges(b−1)` (left-closed at −∞).
     *
@@ -365,7 +365,8 @@ object HistTree {
   /** Fit one tree on pre-binned rows. `df` must carry `binsCol`
     * (Array[Short]), `gCol` (the NEGATIVE gradient / pseudo-residual)
     * and `hCol` (the hessian); the returned leaf values are the
-    * Newton step Σg/(Σh+λ).
+    * Newton step Σg/(Σh+λ) over `df`'s rows ([[TweedieGbt]] replaces
+    * them with its refit over all train rows, the values it serves).
     *
     * Best-first growth (LightGBM's `num_leaves` rule): repeatedly split
     * the leaf with the highest gain (ties: lowest leaf id) until
@@ -576,7 +577,7 @@ object HistTree {
 
   // ── serialization: line-based, one node per line ──────────────────
   // S <node> <feature> <thresholdBin> <threshold> <isCat> <defaultLeft> <cats csv or -> <maxBin>
-  // L <node> <value>
+  // L <node> <value>    (TweedieGbt's Newton-refit value, the one it serves)
   // (maxBin was appended in r13 for the out-of-range-code clamp; a
   //  line without it loads with the permissive Int.MaxValue default)
 
@@ -595,7 +596,9 @@ object HistTree {
 
   def deserialize(text: String): Tree = {
     val splits = mutable.Map.empty[Int, Split]
-    val leaves = mutable.Map.empty[Int, Double]
+    // line order, so the leaf-value literal a loaded model serves lists
+    // leaves by id, as the saved file does
+    val leaves = mutable.LinkedHashMap.empty[Int, Double]
     text.linesIterator.filter(_.nonEmpty).foreach { line =>
       val p = line.split(' ')
       p(0) match {

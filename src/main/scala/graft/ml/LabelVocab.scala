@@ -28,7 +28,7 @@ import graft.functions.expressions.VocabCode
 final case class LabelVocab(columns: Seq[(String, IndexedSeq[String])]) {
 
   /** Code arity per column, INCLUDING the -1 unseen slot (the
-    * `catArity` contract of `Gbt.assemble`). */
+    * `catArity` contract of `TweedieGbt.assemble`). */
   def arity: Map[String, Int] =
     columns.map { case (c, vs) => c -> (vs.size + 1) }.toMap
 

@@ -40,11 +40,11 @@ class M5PipelineSpec extends SparkSpec {
   }
 
   /** Two runs' outputs agree beyond the submission: every model dir's
-    * vocab.json, tree, leaf and bins files byte for byte, and the
+    * vocab.json, meta.json, tree and bins files byte for byte, and the
     * predictions row for row. Parquet is compared by schema and rows,
     * not bytes: its footer lists encodings in JVM hash order. */
   private def assertSameModelsAndPredictions(out1: String, out2: String): Seq[String] = {
-    val modelFile = """(vocab\.json|bins\.txt|hist_\d+\.txt|leaves_\d+\.json)""".r
+    val modelFile = """(vocab\.json|meta\.json|bins\.txt|hist_\d+\.txt)""".r
     def modelFiles(out: String): Seq[String] = {
       val root = Paths.get(out)
       val walk = Files.walk(root)
@@ -57,8 +57,11 @@ class M5PipelineSpec extends SparkSpec {
     }
     val files = modelFiles(out1)
     assert(files == modelFiles(out2), "the runs wrote different model files")
-    // 2 stores × 2 weeks, each committed by its vocab.json
-    assert(files.count(_.endsWith("vocab.json")) == 4, files.mkString(", "))
+    // 2 stores × 2 weeks, each committed by its vocab.json beside one
+    // histogram model
+    assert(files.count(_.endsWith("vocab.json")) == 4 &&
+      files.count(_.endsWith("bins.txt")) == 4 &&
+      files.exists(_.endsWith("hist_0.txt")), files.mkString(", "))
     for (rel <- files)
       assert(java.util.Arrays.equals(Files.readAllBytes(Paths.get(out1, rel)),
         Files.readAllBytes(Paths.get(out2, rel))), s"$rel must be byte-identical")
@@ -186,10 +189,13 @@ class M5PipelineSpec extends SparkSpec {
     // the metric's new-product rule exercised for real
     assert(tot.getLong(1) == 10L, s"10 of 12 series must score: $tot")
     // the fixture's formula is period-7, so the lag-7 feature predicts
-    // it exactly — the golden model lands at 0.0 while all-zeros sits
-    // above 1; both pins together say "the metric discriminates and
-    // the model actually learned the seasonality"
-    assert(tot.getDouble(0) == 0.0 && zeroTot.getDouble(0) > 1.0,
+    // it; two squared-loss rounds at learning rate 0.1 from the train
+    // mean move only part of the way there (LightGBM's shrinkage, no
+    // full-weight first tree), landing at a pinned 0.5565 (4 dp) while
+    // all-zeros sits above 1: the metric discriminates and the model
+    // beats the zero forecast
+    assert(tot.getDouble(0) == 0.5565 && zeroTot.getDouble(0) > 1.0 &&
+      tot.getDouble(0) < zeroTot.getDouble(0),
       s"model WRMSSE ${tot.getDouble(0)} vs zeros ${zeroTot.getDouble(0)}")
   }
 
@@ -227,6 +233,40 @@ class M5PipelineSpec extends SparkSpec {
       "the retrained model must reproduce the submission")
   }
 
+  test("a model dir in an older model layout retrains and reproduces the submission") {
+    val (pipeline, outDir) = freshPipeline()
+    pipeline.run(log = _ => ())
+    val submission = Files.readAllBytes(Paths.get(outDir, "submission.csv"))
+    // the histogram layout whose served leaf values sat in a
+    // leaves_<i>.json per stage: its meta.json names no objective
+    val histDir = Paths.get(outDir, "model_store_CA_1_week_1", "model")
+    Files.writeString(histDir.resolve("meta.json"),
+      """{"f0":0.0,"stepSize":0.1,"variancePower":1.1,"numTrees":2}""")
+    Files.writeString(histDir.resolve("leaves_0.json"), "[[2.0,0.5],[3.0,-0.5]]")
+    // the removed squared-loss fitter's Spark ML layout
+    val sparkDir = Paths.get(outDir, "model_store_TX_1_week_2", "model")
+    TaskRunnerLikeDelete.delete(sparkDir.toString)
+    Files.createDirectories(sparkDir.resolve("metadata"))
+    Files.writeString(sparkDir.resolve("metadata").resolve("part-00000"),
+      """{"class":"org.apache.spark.ml.regression.GBTRegressionModel"}""")
+    Seq("pred_store_CA_1_week_1.parquet", "pred_store_TX_1_week_2.parquet",
+      "predictions.parquet", "submission.csv")
+      .foreach(t => TaskRunnerLikeDelete.delete(s"$outDir/$t"))
+    val report = pipeline.run(log = _ => ())
+    assert(report.ran.toSet == Set("TrainModel(CA_1, 1)", "TrainModel(TX_1, 2)",
+      "RunPredictionStoreWeek(CA_1, 1)", "RunPredictionStoreWeek(TX_1, 2)",
+      "RunPredictionAll", "RunSubmission"), report.ran.mkString(", "))
+    // the retrain starts from an empty dir
+    for (dir <- Seq(histDir, sparkDir)) {
+      val left = dir.toFile.list().toSeq
+      assert(!left.exists(f => f.startsWith("leaves_") || f == "metadata"),
+        s"$dir kept an older layout's files: ${left.sorted.mkString(", ")}")
+    }
+    assert(java.util.Arrays.equals(submission,
+      Files.readAllBytes(Paths.get(outDir, "submission.csv"))),
+      "the retrained models must reproduce the submission")
+  }
+
   test("submission bytes are deterministic across independent runs (fixed seed)") {
     val (p1, out1) = freshPipeline()
     val (p2, out2) = freshPipeline()
@@ -250,8 +290,7 @@ class M5PipelineSpec extends SparkSpec {
       Files.readAllBytes(Paths.get(tOut2, "submission.csv"))),
       "tweedie submission.csv must be byte-identical")
     val files = assertSameModelsAndPredictions(tOut1, tOut2)
-    assert(files.count(_.endsWith("bins.txt")) == 4 &&
-      files.exists(_.endsWith("hist_1.txt")), files.mkString(", "))
+    assert(files.exists(_.endsWith("hist_1.txt")), files.mkString(", "))
   }
 }
 

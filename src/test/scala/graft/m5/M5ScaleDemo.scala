@@ -21,9 +21,9 @@ object M5ScaleDemo {
     // weeks=4 + stores=10 reproduces the reference's full-width grid
     // (full.yaml store_list × pred_week_list = 40 models)
     val weeksN = if (args.length > 4) args(4).toInt else 2
-    // arg 6 = "tweedie" routes training through the native Tweedie
-    // boosting loop (8 rounds + early stopping) instead of 2-tree GBT —
-    // the full.yaml objective at demo width
+    // arg 6 = "tweedie" fits the Tweedie objective (8 rounds + early
+    // stopping) instead of 2 rounds of squared loss — the full.yaml
+    // objective at demo width
     val tweedie = args.length > 5 && args(5) == "tweedie"
 
     // args 7/8 = explicit in/out dirs: reuse a previous run's fixture

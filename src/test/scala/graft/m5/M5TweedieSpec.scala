@@ -14,7 +14,8 @@ import graft.config.YamlConfig
   * to [[graft.ml.TweedieGbt]]. Pins (a) the tweedie path end-to-end
   * through train → model save/load → predict → submission, and (b) the
   * VERDICT-r10-requested forecast-delta study vs the squared-loss
-  * stand-in, so the divergence decision is measured, not silent. */
+  * objective of the same loop, so the objective choice is measured, not
+  * silent. */
 class M5TweedieSpec extends SparkSpec {
 
   private lazy val inputDir = {
@@ -62,7 +63,7 @@ class M5TweedieSpec extends SparkSpec {
     assert(report2.ran.isEmpty, s"rerun must skip everything: ${report2.ran}")
 
     // ── forecast-delta study (VERDICT r10 item 7) ──────────────────
-    val (sq, sqOut) = pipeline(None) // fixture default: squared-loss GBT
+    val (sq, sqOut) = pipeline(None) // fixture default: squared loss
     sq.run(log = _ => ())
     val sqPreds = spark.read.parquet(s"$sqOut/predictions.parquet")
       .withColumnRenamed("pred_units_sold", "pred_sq")
@@ -154,5 +155,21 @@ class M5TweedieSpec extends SparkSpec {
         graft.ml.TweedieGbt.fromLgbParams(lgb + ("num_leaves" -> bad)))
     for (ok <- Seq(0, 50))
       assert(graft.ml.TweedieGbt.fromLgbParams(lgb + ("num_leaves" -> ok)).numLeaves == ok)
+
+    // objective: absent (LightGBM's default) or an L2 alias is squared
+    // loss, tweedie is Tweedie; anything else once fit squared loss
+    // silently and now fails naming the value
+    import graft.ml.TweedieGbt.Objective
+    assert(graft.ml.TweedieGbt.fromLgbParams(Map.empty).objective == Objective.Squared)
+    for (l2 <- Seq("regression", "regression_l2", "l2", "mse", "mean_squared_error"))
+      assert(graft.ml.TweedieGbt.fromLgbParams(Map("objective" -> l2)).objective ==
+        Objective.Squared, l2)
+    assert(graft.ml.TweedieGbt.fromLgbParams(
+      lgb + ("tweedie_variance_power" -> 1.3)).objective == Objective.Tweedie(1.3))
+    for (bad <- Seq("poisson", "tweedy", "Tweedie", "")) {
+      val e = intercept[IllegalArgumentException](
+        graft.ml.TweedieGbt.fromLgbParams(Map("objective" -> bad)))
+      assert(e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
   }
 }

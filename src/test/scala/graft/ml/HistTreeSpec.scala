@@ -246,17 +246,15 @@ class HistTreeSpec extends SparkSpec {
       val y = if (x0 >= 5) 4.0 + (i % 3) else 0.3 * (i % 2)
       (x0, x1, x2, y, i % 11 == 0)
     }.toDF("x0", "x1", "x2", "y", "valid")
-    val assembled = Gbt.assemble(rows, Seq("x0", "x1", "x2"), Map.empty,
-      missingAsNaN = true)
+    val assembled = TweedieGbt.assemble(rows, Seq("x0", "x1", "x2"))
     val params = TweedieGbt.Params(maxIter = 6, maxDepth = 2,
       minDataInLeaf = 2, colsampleBytree = 0.34)
     // colsample 0.34 of 3 features = 1 feature per round; across 6
     // rounds the sampled set must vary (else the "sample" is a constant
     // mask and the knob does nothing)
     val model = TweedieGbt.fit(assembled, "features", "y", "valid", params)
-    val usedFeatures = model.stages.collect {
-      case s: TweedieGbt.HistStage => s.tree.splits.values.map(_.feature).toSet
-    }.filter(_.nonEmpty)
+    val usedFeatures = model.stages.map(_.splits.values.map(_.feature).toSet)
+      .filter(_.nonEmpty)
     assert(usedFeatures.flatten.toSet.size > 1,
       s"6 rounds at 1 feature each must touch > 1 distinct feature: $usedFeatures")
     // same seed -> identical model (deterministic sampling)
@@ -323,6 +321,24 @@ class HistTreeSpec extends SparkSpec {
       "everything non-missing routes to the rest bin")
   }
 
+  test("TweedieGbt picks maxBins up from the assembled metadata") {
+    // the 41-arity nominal column must reach the histogram bins as a
+    // categorical with one bin per code, not as a quantile-cut numeric
+    val rng = new scala.util.Random(3)
+    val rows = (1 to 400).map { _ =>
+      val c = rng.nextInt(40).toLong
+      (c, if (c % 7 == 0) 5.0 else 0.0, false)
+    }
+    val df = rows.toDF("c", "y", "is_valid")
+    val assembled = TweedieGbt.assemble(df, Seq("c"), Map("c" -> 41))
+    val model = TweedieGbt.fit(assembled, "features", "y", "is_valid",
+      TweedieGbt.Params(maxIter = 3, maxDepth = 4,
+        objective = TweedieGbt.Objective.Tweedie(1.3)))
+    assert(model.histBins.isCat(0) && model.histBins.numBins(0) == 41,
+      s"bins: isCat ${model.histBins.isCat.toSeq}, numBins ${model.histBins.numBins.toSeq}")
+    assert(model.stages.size == 3)
+  }
+
   test("TweedieGbt with a remapped high-arity categorical: bins persist, save/load forecasts match") {
     // 40-level categorical under histMaxBins = 8 — codes 1..3 mean
     // high demand, 4..6 low, tail rare. The model must (a) route raw
@@ -335,8 +351,7 @@ class HistTreeSpec extends SparkSpec {
       val y = if (c <= 3) 5.0 + i % 2 else 0.3 * (i % 2)
       (c.toDouble - 1.0, y, i % 11 == 0) // raw code pre-shift
     }.toDF("c", "y", "valid")
-    val assembled = Gbt.assemble(rows, Seq("c"), Map("c" -> 40),
-      missingAsNaN = true)
+    val assembled = TweedieGbt.assemble(rows, Seq("c"), Map("c" -> 40))
     val params = TweedieGbt.Params(maxIter = 20, stepSize = 0.3,
       maxDepth = 3, histMaxBins = 8, minDataInLeaf = 2)
     val model = TweedieGbt.fit(assembled, "features", "y", "valid", params)
@@ -372,8 +387,7 @@ class HistTreeSpec extends SparkSpec {
     }
     val df = rows.toDF("x0", "x1", "y", "valid")
       .withColumn("x1", when(isnan(col("x1")), lit(null)).otherwise(col("x1")))
-    val assembled = Gbt.assemble(df, Seq("x0", "x1"), Map.empty,
-      missingAsNaN = true)
+    val assembled = TweedieGbt.assemble(df, Seq("x0", "x1"))
     val params = TweedieGbt.Params(maxIter = 6, maxDepth = 3,
       minDataInLeaf = 2)
     val model = TweedieGbt.fit(assembled, "features", "y", "valid", params)

@@ -35,9 +35,11 @@ class TweedieGbtSpec extends SparkSpec {
       .localCheckpoint(true)
   }
 
+  private val tweedie13 = TweedieGbt.Objective.Tweedie(1.3)
+
   test("fit reduces Tweedie deviance vs the intercept-only model") {
     val params = TweedieGbt.Params(maxIter = 30, stepSize = 0.2,
-      maxDepth = 4, variancePower = 1.3, earlyStoppingRounds = 30)
+      maxDepth = 4, objective = tweedie13, earlyStoppingRounds = 30)
     val model = TweedieGbt.fit(demand, "features", "y", "is_valid", params)
     val valid = demand.filter(col("is_valid"))
 
@@ -53,22 +55,21 @@ class TweedieGbtSpec extends SparkSpec {
   }
 
   test("beats squared-loss GBT on held-out Tweedie deviance") {
+    // the same boosting loop under its two objectives
     val params = TweedieGbt.Params(maxIter = 30, stepSize = 0.2,
-      maxDepth = 4, variancePower = 1.3, earlyStoppingRounds = 30)
+      maxDepth = 4, objective = tweedie13, earlyStoppingRounds = 30)
     val tweedie = TweedieGbt.fit(demand, "features", "y", "is_valid", params)
-    val gbt = new org.apache.spark.ml.regression.GBTRegressor()
-      .setFeaturesCol("features").setLabelCol("y")
-      .setMaxIter(30).setStepSize(0.2).setMaxDepth(4).setSeed(42L)
-      .fit(demand.filter(!col("is_valid")))
+    val squared = TweedieGbt.fit(demand, "features", "y", "is_valid",
+      params.copy(objective = TweedieGbt.Objective.Squared))
 
     val valid = demand.filter(col("is_valid"))
     val devT = TweedieGbt.meanDeviance(
       tweedie.transform(valid, "mu"), "y", "mu", 1.3)
-    // squared-loss GBT can predict ≤ 0 where the Tweedie deviance is
+    // squared loss can predict ≤ 0 where the Tweedie deviance is
     // undefined — clamp, which only HELPS the squared-loss side
     val devS = TweedieGbt.meanDeviance(
-      gbt.transform(valid).withColumn("mu",
-        greatest(col("prediction"), lit(1e-6))).drop("prediction"),
+      squared.transform(valid, "pred").withColumn("mu",
+        greatest(col("pred"), lit(1e-6))).drop("pred"),
       "y", "mu", 1.3)
     assert(devT < devS,
       s"tweedie objective must win its own metric: tweedie=$devT squared=$devS")
@@ -78,7 +79,7 @@ class TweedieGbtSpec extends SparkSpec {
     // aggressive step + deep trees overfit the small train split fast,
     // so validation deviance turns upward well before maxIter
     val params = TweedieGbt.Params(maxIter = 60, stepSize = 0.5,
-      maxDepth = 8, variancePower = 1.3, earlyStoppingRounds = 5,
+      maxDepth = 8, objective = tweedie13, earlyStoppingRounds = 5,
       // single-row leaves (Spark ML trees' minInstancesPerNode = 1),
       // the overfitting this case needs
       minDataInLeaf = 1)
@@ -94,7 +95,7 @@ class TweedieGbtSpec extends SparkSpec {
 
   test("save/load round-trips to identical predictions") {
     val params = TweedieGbt.Params(maxIter = 8, stepSize = 0.2,
-      maxDepth = 3, variancePower = 1.3)
+      maxDepth = 3, objective = tweedie13)
     val model = TweedieGbt.fit(demand, "features", "y", "is_valid", params)
     val dir = java.nio.file.Files.createTempDirectory("graft-tweedie").toString
     model.save(dir)
@@ -107,7 +108,7 @@ class TweedieGbtSpec extends SparkSpec {
 
   test("load reads a meta.json with the histogram flag and refuses Spark ML stage dirs") {
     val model = TweedieGbt.fit(demand, "features", "y", "is_valid",
-      TweedieGbt.Params(maxIter = 2, maxDepth = 2, variancePower = 1.3))
+      TweedieGbt.Params(maxIter = 2, maxDepth = 2, objective = tweedie13))
     val dir = java.nio.file.Files.createTempDirectory("graft-tweedie-load")
     model.save(dir.toString)
     val meta = dir.resolve("meta.json")
@@ -117,18 +118,30 @@ class TweedieGbtSpec extends SparkSpec {
       m.transform(demand, "mu").select("mu").as[Double].collect().toSeq
     assert(mu(TweedieGbt.load(dir.toString)) == mu(model))
 
+    // older layouts name no objective in meta.json: Spark ML stage dirs,
+    // and histogram stages whose served leaf values sat in a
+    // leaves_<i>.json beside unrefit L lines. Each is refused, naming
+    // the dir
+    def refused(): Unit = {
+      assert(!TweedieGbt.isCurrentLayout(dir.toString))
+      val e = intercept[IllegalArgumentException](TweedieGbt.load(dir.toString))
+      assert(e.getMessage.contains(dir.toString), e.getMessage)
+    }
+    java.nio.file.Files.writeString(meta,
+      """{"f0":-0.5,"stepSize":0.1,"variancePower":1.3,"histogram":true,"numTrees":2}""")
     java.nio.file.Files.createDirectory(dir.resolve("tree_1"))
-    val stage = intercept[IllegalArgumentException](TweedieGbt.load(dir.toString))
-    assert(stage.getMessage.contains(dir.toString) && stage.getMessage.contains("tree_1"))
+    refused()
     java.nio.file.Files.delete(dir.resolve("tree_1"))
-    java.nio.file.Files.delete(dir.resolve("bins.txt"))
-    val noBins = intercept[IllegalArgumentException](TweedieGbt.load(dir.toString))
-    assert(noBins.getMessage.contains(dir.toString) && noBins.getMessage.contains("bins.txt"))
+    java.nio.file.Files.writeString(dir.resolve("leaves_0.json"), "[[2.0,0.1],[3.0,-0.1]]")
+    refused()
+    // the removed squared-loss fitter saved Spark ML's layout: no meta.json
+    java.nio.file.Files.delete(meta)
+    refused()
   }
 
   test("determinism: same seed, same data -> identical models") {
     val params = TweedieGbt.Params(maxIter = 6, stepSize = 0.2,
-      maxDepth = 3, variancePower = 1.3, subsamplingRate = 0.8)
+      maxDepth = 3, objective = tweedie13, subsamplingRate = 0.8)
     val m1 = TweedieGbt.fit(demand, "features", "y", "is_valid", params)
     val m2 = TweedieGbt.fit(demand, "features", "y", "is_valid", params)
     val a = m1.transform(demand, "mu").select("mu").as[Double].collect()
@@ -165,7 +178,7 @@ class TweedieGbtSpec extends SparkSpec {
     try {
       val model = TweedieGbt.fit(data, "features", "y", "is_valid",
         TweedieGbt.Params(maxIter = 12, stepSize = 0.2, maxDepth = 3,
-          variancePower = 1.3, earlyStoppingRounds = 12, checkpointInterval = 5))
+          objective = tweedie13, earlyStoppingRounds = 12, checkpointInterval = 5))
       assert(model.validDeviances.size == 12, "the fit must run all 12 rounds")
       // listener events arrive in order: the marker job's start comes
       // after every unpersist of the fit
@@ -184,6 +197,82 @@ class TweedieGbtSpec extends SparkSpec {
     }.toSet
     assert(cuts.size == 3, s"expected 3 cuts, got $cuts")
     assert(cuts.subsetOf(ids.toSet), s"cuts $cuts not all released: $ids")
+  }
+
+  test("saved stages are one hist_<i>.txt each, whose L lines are the served leaf values") {
+    val model = TweedieGbt.fit(demand, "features", "y", "is_valid",
+      TweedieGbt.Params(maxIter = 3, maxDepth = 2, objective = tweedie13,
+        subsamplingRate = 0.8))
+    val dir = java.nio.file.Files.createTempDirectory("graft-tweedie-files")
+    model.save(dir.toString)
+    val files = dir.toFile.list().toSeq.sorted
+    assert(files == Seq("bins.txt", "hist_0.txt", "hist_1.txt", "hist_2.txt", "meta.json"),
+      files.mkString(", "))
+    val loaded = TweedieGbt.load(dir.toString)
+    assert(loaded.stages.map(_.leafValue) == model.stages.map(_.leafValue))
+    // the Newton refit over all train rows, not the tree's histogram
+    // value over the sampled ones: recompute stage 0's γ by hand
+    val tree = model.stages.head
+    val f0 = model.f0
+    val refit = demand.filter(!col("is_valid"))
+      .withColumn("__bins", HistTree.binColumn(model.histBins, "features"))
+      .withColumn("leaf", HistTree.leafColumn(tree, "__bins"))
+      .withColumn("r", col("y") * exp(lit(-0.3 * f0)) - exp(lit(0.7 * f0)))
+      .withColumn("h", lit(0.3) * col("y") * exp(lit(-0.3 * f0)) + lit(0.7) * exp(lit(0.7 * f0)))
+      .groupBy("leaf").agg((sum("r") / (sum("h") + lit(1e-6))).as("g"))
+      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+    assert(refit.keySet == tree.leafValue.keySet)
+    for ((leaf, g) <- refit)
+      assert(math.abs(g - tree.leafValue(leaf)) <= 1e-12 * math.max(1.0, g.abs),
+        s"leaf $leaf: refit $g, stored ${tree.leafValue(leaf)}")
+  }
+
+  test("squared loss: F0 is the train mean, a stump at step 1 reproduces the group means") {
+    // group x = 0 has labels -3/-1 (mean -2, negative labels are fine
+    // for squared loss), x = 1 has 4/6 (mean 5); the validation rows'
+    // labels must not reach F0
+    val rows = (0 until 80).map(i => ((i % 2).toDouble,
+        if (i % 2 == 0) (if (i % 4 == 0) -3.0 else -1.0)
+        else (if (i % 4 == 1) 4.0 else 6.0), false)) ++
+      (0 until 4).map(i => ((i % 2).toDouble, 100.0, true))
+    val df = TweedieGbt.assemble(rows.toDF("x", "y", "is_valid"), Seq("x"))
+    val model = TweedieGbt.fit(df, "features", "y", "is_valid",
+      TweedieGbt.Params(maxIter = 1, stepSize = 1.0, maxDepth = 1,
+        minDataInLeaf = 1, objective = TweedieGbt.Objective.Squared))
+    assert(model.f0 == 1.5, s"F0 = train mean (-2 + 5) / 2, got ${model.f0}")
+    assert(model.stages.size == 1 && model.stages.head.splits.size == 1)
+    val pred = model.transform(df.filter(!col("is_valid")), "pred")
+      .groupBy("x").agg(min("pred"), max("pred"))
+      .collect().map(r => r.getDouble(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+    for ((x, mean) <- Seq(0.0 -> -2.0, 1.0 -> 5.0)) {
+      val (lo, hi) = pred(x)
+      assert(lo == hi && math.abs(lo - mean) < 1e-6, s"x=$x: $lo..$hi vs $mean")
+    }
+    // the identity link and the objective survive save/load
+    val dir = java.nio.file.Files.createTempDirectory("graft-squared").toString
+    model.save(dir)
+    assert(java.nio.file.Files.readString(java.nio.file.Paths.get(dir, "meta.json"))
+      .contains("\"objective\":\"regression\""))
+    val loaded = TweedieGbt.load(dir)
+    assert(loaded.objective == TweedieGbt.Objective.Squared)
+    val a = model.transform(df, "p").select("p").as[Double].collect()
+    val b = loaded.transform(df, "p").select("p").as[Double].collect()
+    assert(a.sameElements(b), "loaded model must predict identically")
+  }
+
+  test("squared loss: early stopping truncates at the best validation-MSE round") {
+    val params = TweedieGbt.Params(maxIter = 60, stepSize = 0.5,
+      maxDepth = 8, earlyStoppingRounds = 5, minDataInLeaf = 1,
+      objective = TweedieGbt.Objective.Squared)
+    val model = TweedieGbt.fit(demand, "features", "y", "is_valid", params)
+    val bestRound = model.validDeviances.zipWithIndex.minBy(_._1)._2 + 1
+    assert(model.stages.size == bestRound && bestRound < params.maxIter,
+      s"kept ${model.stages.size} of ${model.validDeviances.size} rounds, best $bestRound")
+    // the tracked metric is the validation MSE of the kept model
+    val mse = model.transform(demand.filter(col("is_valid")), "pred")
+      .agg(avg(pow(col("y") - col("pred"), 2))).head().getDouble(0)
+    assert(math.abs(mse - model.validDeviances(bestRound - 1)) <= 1e-9 * mse,
+      s"validation MSE $mse vs tracked ${model.validDeviances(bestRound - 1)}")
   }
 
   test("negative labels fail fast") {
