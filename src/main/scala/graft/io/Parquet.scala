@@ -3,7 +3,7 @@ package graft.io
 import org.apache.spark.sql.DataFrame
 
 /** Size-targeted parquet writing — the batch-side answer to the
-  * small-files problem the streaming tier solves with `compactDir`.
+  * small-files problem the streaming tier solves with `compactCuratedState`.
   * At 100 TB both failure modes are real: thousands of KB-sized part
   * files tax every later listing/open/footer-read, while a handful of
   * multi-GB files caps read parallelism at the file count.

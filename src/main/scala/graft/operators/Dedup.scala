@@ -890,10 +890,8 @@ object Dedup {
     * No shingle row is exploded or shuffled; the only exchange carries
     * one sketch row per (doc, partition). `sets` holds one row per doc,
     * even when the doc is too short to shingle (empty hs, sz = 0 — it
-    * can never be a candidate, having no band keys): it doubles as the
-    * index's doc manifest, so a store-vs-index divergence check (the
-    * crash-window repair in streaming/Incremental) can compare row
-    * counts exactly. */
+    * can never be a candidate, having no band keys), so every indexed
+    * doc id appears in `sets`. */
   def buildNearDupIndex(
       reference: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, numHashes: Int = 16, rowsPerBand: Int = 4,

@@ -16,11 +16,12 @@ import org.apache.spark.sql.types.StructType
   * later opens supply the memoized schema and run no job at all.
   *
   * A SCHEMA change to a memoized dir is not detected here. The two
-  * readers that tolerate reference regeneration (ensureIndex,
-  * ensureReferenceDigests) call [[invalidate]] and re-open on their
-  * rebuild paths — the only moment a schema change can arrive under
-  * their contracts — and every state-dir writer invalidates after an
-  * overwrite; [[invalidate]] remains available for manual recovery. */
+  * readers that tolerate reference regeneration (Incremental's index
+  * build on first use or after a regeneration, ensureReferenceDigests)
+  * call [[invalidate]] and re-open on that path — the only moment a
+  * schema change can arrive under their contracts — and every
+  * state-dir writer invalidates after an overwrite or an index
+  * rebuild; [[invalidate]] remains available for manual recovery. */
 object ParquetSchemaMemo {
   private val memo =
     scala.collection.concurrent.TrieMap.empty[String, StructType]

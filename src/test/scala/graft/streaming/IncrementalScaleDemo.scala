@@ -58,7 +58,8 @@ object IncrementalScaleDemo {
         compactAfterFiles = compactAfter, refBloomFpp = bloomFpp)
       val secs = (System.nanoTime() - t0) / 1e9
       val store = spark.read.parquet(curDir).count()
-      val files = Incremental.parquetFileCount(spark, curDir)
+      val files = Incremental.latestEntry(spark, idxDir)
+        .fold(0)(_(Incremental.Store).size)
       println(f"[incrscale] batch=${b + 1}/$batches rows=$n " +
         f"storeAfter=$store files=$files sec=$secs%.2f")
     }

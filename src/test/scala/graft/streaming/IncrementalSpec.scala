@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -186,14 +187,17 @@ class IncrementalSpec extends SparkSpec {
     Incremental.curateBatchFuzzy(spark,
       Seq((10L, storyA)).toDF("doc_id", "text"),
       "doc_id", "text", refDir, curDir, idxDir, threshold = 0.5)
-    // simulate the documented crash: a batch died AFTER its store
-    // append, BEFORE its index append — storyB is curated but unindexed
+    // a batch that died AFTER its store append, BEFORE its commit:
+    // storyB's rows sit in the store dir but no log entry lists them
     Seq((20L, storyB)).toDF("doc_id", "text")
       .withColumn(Incremental.DigestCol, sha2(col("text"), 256))
       .write.mode("append").parquet(curDir)
 
-    // next batch carries an edited recrawl of the ORPHANED doc — only a
-    // repaired index can drop it
+    // the crashed batch never happened: its replay admits storyB again,
+    // and the next batch's edited recrawl of it is dropped
+    Incremental.curateBatchFuzzy(spark,
+      Seq((20L, storyB)).toDF("doc_id", "text"),
+      "doc_id", "text", refDir, curDir, idxDir, threshold = 0.5)
     Incremental.curateBatchFuzzy(spark,
       Seq((30L, storyB + " appended update note"), (31L, storyC))
         .toDF("doc_id", "text"),
@@ -201,13 +205,15 @@ class IncrementalSpec extends SparkSpec {
     val curated = spark.read.parquet(curDir)
       .select("doc_id", "text").as[(Long, String)].collect().toSet
     assert(curated == Set((10L, storyA), (20L, storyB), (31L, storyC)),
-      s"recrawl of the orphaned batch must still be dropped: ${curated.map(_._1)}")
-    // and the repair healed the index itself: every stored doc + the
-    // reference is exactly once in the manifest
+      s"recrawl of the replayed batch must still be dropped: ${curated.map(_._1)}")
+    assert(spark.read.parquet(curDir).count() == 3,
+      "the crashed append's rows must not land twice")
+    // every stored doc + the reference is exactly once in the index
     val idx = Dedup.NearDupIndex.read(spark, idxDir)
     assert(idx.sets.select("doc").as[Long].collect().sorted.toSeq ==
       Seq(1L, 10L, 20L, 31L),
-      "manifest must cover reference + every curated doc exactly once")
+      "index must cover reference + every curated doc exactly once")
+    assertListed(curDir, idxDir)
   }
 
   test("ensureIndex: duplicate ids in the reference never trigger the repair path") {
@@ -224,67 +230,20 @@ class IncrementalSpec extends SparkSpec {
       Seq((10L, words("alpha", 40))).toDF("doc_id", "text"),
       "doc_id", "text", refDir, curDir, idxDir, threshold = 0.5)
 
-    // a raw-count staleness compare (ref rows + store rows = 4) can
-    // never be satisfied by the manifest (3 distinct ids) — it would
-    // run the repair anti-join AND append empty part files on EVERY
-    // batch forever. A healthy ensure must leave the index untouched.
+    // 4 reference + store rows but 3 distinct ids: nothing that compares
+    // row counts with the index may conclude it is stale and append
+    // to it. A healthy ensure must leave the index untouched.
     def setsFiles: Set[String] = new java.io.File(s"$idxDir/sets")
       .listFiles.map(_.getName).filter(_.endsWith(".parquet")).toSet
     val before = setsFiles
-    // batch 1 stamped verified.json; delete it so this ensure exercises
-    // the EXACT distinct-count path, not the cheap stamp fast-pass
-    assert(new java.io.File(s"$idxDir/verified.json").delete())
-    val scope = graft.util.CacheScope()
-    try Incremental.ensureIndex(
-      spark, idxDir, refDir, curDir, "doc_id", "text", scope)
-    finally scope.unpersistAll()
-    assert(setsFiles == before,
-      "ensure over a healthy index must not append (repair-loop bug)")
-    // and the exact check re-stamped, restoring the cheap path
-    assert(new java.io.File(s"$idxDir/verified.json").exists(),
-      "a passed exact check must rewrite the verified stamp")
-
-    // stamp fast-pass: with the stamp present and counts unchanged, a
-    // second ensure is also append-free (the per-batch healthy path)
-    val scope2 = graft.util.CacheScope()
-    try Incremental.ensureIndex(
-      spark, idxDir, refDir, curDir, "doc_id", "text", scope2)
-    finally scope2.unpersistAll()
-    assert(setsFiles == before, "stamped ensure must not append")
-  }
-
-  test("ensureIndex: bands present but sets missing (index-write crash) self-heals") {
-    val tmp = Files.createTempDirectory("graft-incr-halfidx").toString
-    val refDir = s"$tmp/ref"; val curDir = s"$tmp/curated"
-    val idxDir = s"$tmp/ndindex"
-    def words(prefix: String, n: Int): String =
-      (1 to n).map(i => s"$prefix$i").mkString(" ")
-    val storyA = words("alpha", 40)
-    Seq((1L, words("ref", 40))).toDF("doc_id", "text").write.parquet(refDir)
-    Incremental.curateBatchFuzzy(spark,
-      Seq((10L, storyA)).toDF("doc_id", "text"),
-      "doc_id", "text", refDir, curDir, idxDir, threshold = 0.5)
-    // simulate a crash between NearDupIndex.write's bands and sets
-    // writes: bands/ landed, sets/ did not
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
+    (1 to 2).foreach { _ =>
+      val scope = graft.util.CacheScope()
+      try Incremental.ensureIndex(
+        spark, idxDir, refDir, curDir, "doc_id", "text", scope)
+      finally scope.unpersistAll()
+      assert(setsFiles == before,
+        "ensure over a healthy index must not append (repair-loop bug)")
     }
-    rm(new java.io.File(s"$idxDir/sets"))
-    assert(new java.io.File(s"$idxDir/bands").exists())
-
-    // the next batch must NOT fail permanently — ensureIndex rebuilds
-    // from reference + store, so the recrawl of the admitted doc drops
-    Incremental.curateBatchFuzzy(spark,
-      Seq((20L, storyA + " appended update note"), (21L, words("beta", 40)))
-        .toDF("doc_id", "text"),
-      "doc_id", "text", refDir, curDir, idxDir, threshold = 0.5)
-    val curated = spark.read.parquet(curDir)
-      .select("doc_id", "text").as[(Long, String)].collect().toSet
-    assert(curated.map(_._1) == Set(10L, 21L),
-      s"rebuilt index must still drop the recrawl: ${curated.map(_._1)}")
-    val healed = Dedup.NearDupIndex.read(spark, idxDir)
-    assert(healed.sets.select("doc").as[Long].collect().sorted.toSeq ==
-      Seq(1L, 10L, 21L), "rebuilt manifest covers reference + store")
   }
 
   test("ensureIndex: legacy index dir without the params sidecar is rebuilt") {
@@ -298,8 +257,16 @@ class IncrementalSpec extends SparkSpec {
     Incremental.curateBatchFuzzy(spark,
       Seq((10L, storyA)).toDF("doc_id", "text"),
       "doc_id", "text", refDir, curDir, idxDir, threshold = 0.5)
-    // a pre-sidecar index dir: bands + sets present, params.json absent
+    // a pre-log, pre-sidecar index dir: bands + sets present, no
+    // commit log and no params.json
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
+    }
+    rm(new java.io.File(s"$idxDir/_log"))
     assert(new java.io.File(s"$idxDir/params.json").delete())
+    def bandFiles: Set[String] = new java.io.File(s"$idxDir/bands")
+      .listFiles.map(_.getName).filter(_.endsWith(".parquet")).toSet
+    val legacyBands = bandFiles
 
     Incremental.curateBatchFuzzy(spark,
       Seq((20L, storyA + " appended update note"), (21L, words("beta", 40)))
@@ -309,6 +276,13 @@ class IncrementalSpec extends SparkSpec {
       .select("doc_id").as[Long].collect().toSet
     assert(curated == Set(10L, 21L),
       s"legacy dir must self-heal and keep dropping recrawls: $curated")
+    // first use adopted the store, rebuilt the index over reference ∪
+    // store as new parts, and deleted the legacy ones
+    assert(bandFiles.intersect(legacyBands).isEmpty,
+      s"the legacy index parts must be replaced: $bandFiles")
+    assert(Dedup.NearDupIndex.read(spark, idxDir).sets.select("doc").as[Long]
+      .collect().sorted.toSeq == Seq(1L, 10L, 21L))
+    assertListed(curDir, idxDir)
   }
 
   test("ensureIndex: in-place reference regeneration at the same row count forces a rebuild") {
@@ -325,10 +299,8 @@ class IncrementalSpec extends SparkSpec {
       "doc_id", "text", refDir, curDir, idxDir, threshold = 0.5)
 
     // regenerate the reference IN PLACE: same id, same row count,
-    // different text. A count-only stamp would keep the stale index
-    // forever — and the exact check is count-based too, so even a
-    // forced check would miss it (r7 ADVICE #5). The file-metadata
-    // fingerprint must catch it.
+    // different text. Nothing count- or id-based can see it (r7 ADVICE
+    // #5); the file-metadata fingerprint in the log entry must.
     Seq((1L, storyNew)).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(refDir)
 
@@ -343,15 +315,18 @@ class IncrementalSpec extends SparkSpec {
     assert(curated == Set(10L, 21L),
       s"recrawl of the regenerated reference must be dropped: $curated")
 
-    // regeneration COMBINED with a crash (store count differs from the
-    // stamp too): the id-based exact check would pass over stale
-    // sketches, so the fingerprint mismatch alone must force a rebuild
+    // regeneration COMBINED with a crashed batch whose store append
+    // landed outside the log: the crashed rows are discarded, the
+    // replayed batch lands, and the index is rebuilt over the new bytes
     val storyNew2 = words("newer", 40)
     Seq((1L, storyNew2)).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(refDir)
     Seq((25L, words("delta", 40))).toDF("doc_id", "text")
       .withColumn(Incremental.DigestCol, sha2(col("text"), 256))
-      .write.mode("append").parquet(curDir) // orphaned (unindexed) row
+      .write.mode("append").parquet(curDir) // crashed, uncommitted append
+    Incremental.curateBatchFuzzy(spark,
+      Seq((25L, words("delta", 40))).toDF("doc_id", "text"),
+      "doc_id", "text", refDir, curDir, idxDir, threshold = 0.5)
     Incremental.curateBatchFuzzy(spark,
       Seq((30L, storyNew2 + " appended update note"), (31L, words("eps", 40)))
         .toDF("doc_id", "text"),
@@ -359,124 +334,12 @@ class IncrementalSpec extends SparkSpec {
     val curated2 = spark.read.parquet(curDir)
       .select("doc_id").as[Long].collect().toSet
     assert(curated2 == Set(10L, 21L, 25L, 31L),
-      s"regeneration + crash must still rebuild, not exact-check: $curated2")
-  }
-
-  test("ensureIndex: regeneration is caught even when the verified stamp is missing") {
-    val tmp = Files.createTempDirectory("graft-incr-regen-nostamp").toString
-    val refDir = s"$tmp/ref"; val curDir = s"$tmp/curated"
-    val idxDir = s"$tmp/ndindex"
-    def words(prefix: String, n: Int): String =
-      (1 to n).map(i => s"$prefix$i").mkString(" ")
-    val storyNew = words("new", 40)
-    Seq((1L, words("old", 40))).toDF("doc_id", "text").write.parquet(refDir)
-    Incremental.curateBatchFuzzy(spark,
-      Seq((10L, words("alpha", 40))).toDF("doc_id", "text"),
-      "doc_id", "text", refDir, curDir, idxDir, threshold = 0.5)
-
-    // the hole the source.json sidecar closes: regenerate the reference
-    // in place AND lose the stamp — the id-based exact check would pass
-    // over the stale sketches and then re-stamp them as verified
-    Seq((1L, storyNew)).toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(refDir)
-    assert(new java.io.File(s"$idxDir/verified.json").delete())
-
-    Incremental.curateBatchFuzzy(spark,
-      Seq((20L, storyNew + " appended update note"), (21L, words("beta", 40)))
-        .toDF("doc_id", "text"),
-      "doc_id", "text", refDir, curDir, idxDir, threshold = 0.5)
-    val curated = spark.read.parquet(curDir)
-      .select("doc_id").as[Long].collect().toSet
-    assert(curated == Set(10L, 21L),
-      s"stamp-less regeneration must rebuild, not exact-check: $curated")
-  }
-
-  test("compactDir recovers a live dir stranded mid-swap") {
-    val tmp = Files.createTempDirectory("graft-compact-recover").toString
-    val dir = s"$tmp/store"
-    val rows = Seq((1L, "alpha"), (2L, "beta"))
-    rows.toDF("doc_id", "text").write.parquet(dir)
-    // simulate the documented crash window: tmp fully written, live
-    // renamed aside, crash before tmp moved into place
-    rows.toDF("doc_id", "text").write.parquet(s"$dir.compact-tmp")
-    assert(new java.io.File(dir).renameTo(new java.io.File(s"$dir.compact-old")))
-    assert(!new java.io.File(dir).exists)
-
-    Incremental.compactDir(spark, dir)
-    assert(spark.read.parquet(dir).select("doc_id", "text")
-      .as[(Long, String)].collect().toSet == rows.toSet,
-      "recovery must restore the complete compacted copy at the live name")
-    assert(!new java.io.File(s"$dir.compact-old").exists &&
-      !new java.io.File(s"$dir.compact-tmp").exists,
-      "recovery must clear both sidecar dirs")
-  }
-
-  test("restart after crash between swap renames (tmp present) loses zero rows") {
-    // VERDICT r10 item 3: live dir missing + .compact-tmp (and -old)
-    // present = compactDir died between its two renames. A RESTARTED
-    // stream must see the recovered store — not an empty/fresh one that
-    // silently strands every curated row — and keep deduping against it.
-    implicit val sqlCtx = spark.sqlContext
-    val tmp = Files.createTempDirectory("graft-crash-tmp").toString
-    val refDir = s"$tmp/ref"; val curDir = s"$tmp/curated"
-    Seq((1L, "frozen one")).toDF("doc_id", "text").write.parquet(refDir)
-    val mem = MemoryStream[(Long, String)]
-    mem.addData((10L, "alpha beta"), (11L, "gamma delta"))
-    Incremental.curateStream(mem.toDF().toDF("doc_id", "text"),
-      "doc_id", "text", refDir, curDir, s"$tmp/ck").awaitTermination()
-    val before = spark.read.parquet(curDir)
-      .select("doc_id", "text").as[(Long, String)].collect().toSet
-    assert(before.map(_._1) == Set(10L, 11L))
-
-    // crash state: tmp fully written (the compacted copy), live renamed
-    // aside, death before tmp moved in — both sidecars complete copies
-    spark.read.parquet(curDir).repartition(1)
-      .write.parquet(s"$curDir.compact-tmp")
-    assert(new java.io.File(curDir)
-      .renameTo(new java.io.File(s"$curDir.compact-old")))
-    assert(!new java.io.File(curDir).exists)
-
-    // restarted stream (fresh checkpoint): a cross-restart dup must be
-    // dropped, a fresh doc admitted, every pre-crash row retained
-    val mem2 = MemoryStream[(Long, String)]
-    mem2.addData((20L, "alpha beta"), (21L, "epsilon zeta"))
-    Incremental.curateStream(mem2.toDF().toDF("doc_id", "text"),
-      "doc_id", "text", refDir, curDir, s"$tmp/ck2").awaitTermination()
-    val after = spark.read.parquet(curDir)
-      .select("doc_id", "text").as[(Long, String)].collect().toSet
-    assert(after.map(_._1) == Set(10L, 11L, 21L),
-      s"zero rows may be lost and the recrawl must still drop: $after")
-    assert(!new java.io.File(s"$curDir.compact-old").exists &&
-      !new java.io.File(s"$curDir.compact-tmp").exists,
-      "recovery must clear the sidecars")
-  }
-
-  test("restart after crash with only .compact-old present loses zero rows") {
-    // the other half of the window: tmp never landed (or was already
-    // promoted and re-crashed) — only the original under .compact-old
-    implicit val sqlCtx = spark.sqlContext
-    val tmp = Files.createTempDirectory("graft-crash-old").toString
-    val refDir = s"$tmp/ref"; val curDir = s"$tmp/curated"
-    Seq((1L, "frozen one")).toDF("doc_id", "text").write.parquet(refDir)
-    val mem = MemoryStream[(Long, String)]
-    mem.addData((10L, "alpha beta"), (11L, "gamma delta"))
-    Incremental.curateStream(mem.toDF().toDF("doc_id", "text"),
-      "doc_id", "text", refDir, curDir, s"$tmp/ck").awaitTermination()
-
-    assert(new java.io.File(curDir)
-      .renameTo(new java.io.File(s"$curDir.compact-old")))
-    assert(!new java.io.File(curDir).exists)
-
-    val mem2 = MemoryStream[(Long, String)]
-    mem2.addData((20L, "gamma delta"), (21L, "epsilon zeta"))
-    Incremental.curateStream(mem2.toDF().toDF("doc_id", "text"),
-      "doc_id", "text", refDir, curDir, s"$tmp/ck2").awaitTermination()
-    val after = spark.read.parquet(curDir)
-      .select("doc_id", "text").as[(Long, String)].collect().toSet
-    assert(after.map(_._1) == Set(10L, 11L, 21L),
-      s"zero rows may be lost and the recrawl must still drop: $after")
-    assert(!new java.io.File(s"$curDir.compact-old").exists,
-      "recovery must clear the sidecar")
+      s"regeneration + crash must still rebuild: $curated2")
+    assert(spark.read.parquet(curDir).count() == 4,
+      "the crashed append's row must not land twice")
+    assert(Dedup.NearDupIndex.read(spark, idxDir).sets.select("doc").as[Long]
+      .collect().sorted.toSeq == Seq(1L, 10L, 21L, 25L, 31L))
+    assertListed(curDir, idxDir)
   }
 
   test("compactCuratedState: fewer files, same rows, index still drops recrawls") {
@@ -517,7 +380,7 @@ class IncrementalSpec extends SparkSpec {
     assert(rowsAfter == rowsBefore, "compaction must not change store rows")
     assert(Dedup.NearDupIndex.read(spark, idxDir)
       .sets.select("doc").as[Long].collect().sorted.toSeq == setsBefore,
-      "compaction must not change the index manifest")
+      "compaction must not change the index sets")
     // and the compacted state still curates: a recrawl of a compacted
     // admission is dropped, a fresh doc lands
     Incremental.curateBatchFuzzy(spark,
@@ -659,10 +522,9 @@ class IncrementalSpec extends SparkSpec {
       Seq((10L, words("alpha", 40))).toDF("doc_id", "text"),
       "doc_id", "text", refDir, curDir, idxDir, threshold = 0.5)
 
-    // count jobs submitted during a healthy ensure: the admitting batch
-    // memoized the store's post-append count and the reference count is
-    // memoized on its (frozen) fingerprint, so the ensure must be pure
-    // driver work — listings + the stamp read (r8 VERDICT #3)
+    // count jobs submitted during a healthy ensure: the log entry
+    // stands in for any count and the schemas are memoized, so the
+    // ensure must be pure driver work — the log read and listings
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val marker = new java.util.concurrent.atomic.AtomicBoolean(false)
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -718,8 +580,7 @@ class IncrementalSpec extends SparkSpec {
       .collect().toSet
     assert(rows == Set(10L, 11L, 12L, 13L, 14L),
       s"compaction must never lose curated rows: $rows")
-    assert(new java.io.File(s"$idxDir/verified.json").exists(),
-      "the verified stamp must survive compaction")
+    assertListed(curDir, idxDir)
 
     // post-compaction the state still curates and replay stays
     // idempotent: a recrawl + an exact dup admit nothing
@@ -760,74 +621,6 @@ class IncrementalSpec extends SparkSpec {
     assert(spark.read.parquet(curDir).select("doc_id").as[Long]
       .collect().toSet == rows,
       "dups of compacted rows and frozen texts must still be dropped")
-  }
-
-  test("compactDir recovery: only .compact-old remains — restored, then compacted") {
-    val tmp = Files.createTempDirectory("graft-compact-oldonly").toString
-    val dir = s"$tmp/store"
-    val rows = Seq((1L, "alpha"), (2L, "beta"))
-    rows.toDF("doc_id", "text").repartition(2).write.parquet(dir)
-    // crash shape: live renamed aside and the tmp copy lost (or the
-    // swap crashed before tmp was fully written and a janitor removed
-    // it) — only the original survives
-    assert(new java.io.File(dir).renameTo(new java.io.File(s"$dir.compact-old")))
-    Incremental.compactDir(spark, dir)
-    assert(spark.read.parquet(dir).select("doc_id", "text")
-      .as[(Long, String)].collect().toSet == rows.toSet,
-      "recovery must restore the original rows at the live name")
-    assert(new java.io.File(dir).listFiles
-      .count(_.getName.endsWith(".parquet")) == 1,
-      "after recovering the original, compactDir must still compact it")
-    assert(!new java.io.File(s"$dir.compact-old").exists &&
-      !new java.io.File(s"$dir.compact-tmp").exists,
-      "recovery + compaction must clear both sidecar names")
-  }
-
-  test("a store stranded mid-compaction is recovered by the next batch, never read as fresh") {
-    val tmp = Files.createTempDirectory("graft-incr-strand").toString
-    val refDir = s"$tmp/ref"; val curDir = s"$tmp/curated"
-    val idxDir = s"$tmp/ndindex"
-    def words(prefix: String, n: Int): String =
-      (1 to n).map(i => s"$prefix$i").mkString(" ")
-    val storyA = words("alpha", 40)
-    Seq((1L, words("ref", 40))).toDF("doc_id", "text").write.parquet(refDir)
-    Incremental.curateBatchFuzzy(spark,
-      Seq((10L, storyA)).toDF("doc_id", "text"),
-      "doc_id", "text", refDir, curDir, idxDir, threshold = 0.5)
-
-    // simulate a compaction swap that died after moving the live store
-    // aside: the r8 ADVICE store-loss scenario — a restarted stream that
-    // treats the missing dir as empty re-admits dups and strands every
-    // prior row in .compact-old forever
-    assert(new java.io.File(curDir)
-      .renameTo(new java.io.File(s"$curDir.compact-old")))
-    assert(!new java.io.File(curDir).exists)
-    Incremental.curateBatchFuzzy(spark,
-      Seq((20L, storyA), (21L, words("beta", 40))).toDF("doc_id", "text"),
-      "doc_id", "text", refDir, curDir, idxDir, threshold = 0.5)
-    val got = spark.read.parquet(curDir)
-      .select("doc_id", "text").as[(Long, String)].collect().toSet
-    assert(got.map(_._1) == Set(10L, 21L),
-      s"recovered store must keep prior rows AND still drop their dups: " +
-        s"${got.map(_._1)}")
-
-    // same for a stranded index dir: recovery, not a rebuild — the
-    // original band files must come back under their own names
-    def bandFiles: Set[String] = new java.io.File(s"$idxDir/bands")
-      .listFiles.map(_.getName).filter(_.endsWith(".parquet")).toSet
-    val bandsBefore = bandFiles
-    assert(new java.io.File(s"$idxDir/bands")
-      .renameTo(new java.io.File(s"$idxDir/bands.compact-old")))
-    Incremental.curateBatchFuzzy(spark,
-      Seq((30L, storyA + " appended update note"), (31L, words("gamma", 40)))
-        .toDF("doc_id", "text"),
-      "doc_id", "text", refDir, curDir, idxDir, threshold = 0.5)
-    assert(bandsBefore.subsetOf(bandFiles),
-      "stranded bands dir must be RECOVERED (same files), not rebuilt")
-    val ids = spark.read.parquet(curDir).select("doc_id").as[Long]
-      .collect().toSet
-    assert(ids == Set(10L, 21L, 31L),
-      s"recovered index must still drop recrawls: $ids")
   }
 
   test("curateBatch drops null-text rows instead of letting them bypass dedup") {
@@ -897,7 +690,7 @@ class IncrementalSpec extends SparkSpec {
     assert(spark.read.parquet(curDir).select("doc_id")
       .as[Long].collect().toSet == Set(10L, 11L))
 
-    // takedown storyA: store row gone, index manifest purged
+    // takedown storyA: store row gone, index purged
     val removed = Incremental.takedown(spark, curDir, "doc_id",
       Seq(10L).toDF("doc_id"), Some(idxDir))
     assert(removed == 1L, s"expected 1 removed row, got $removed")
@@ -905,12 +698,14 @@ class IncrementalSpec extends SparkSpec {
       .as[Long].collect().toSet == Set(11L))
     assert(spark.read.parquet(s"$idxDir/sets").select("doc")
       .as[Long].collect().toSet == Set(1L, 11L),
-      "index manifest must forget the removed doc")
+      "index sets must forget the removed doc")
+    assert(spark.read.parquet(s"$idxDir/bands").where(col("doc") === 10L)
+      .count() == 0, "index bands must forget the removed doc")
+    assertListed(curDir, idxDir)
 
     // deletion means deletion: the SAME text re-enters under a new id
     // (exact digests left with the row; no ghost bands block it), and
     // an unrelated fresh doc is admitted too — the stream continues
-    // through ensureIndex's honest re-verify after the rewrite
     Incremental.curateBatchFuzzy(spark,
       Seq((30L, storyA), (31L, words("gamma", 40))).toDF("doc_id", "text"),
       "doc_id", "text", refDir, curDir, idxDir, threshold = 0.5)
@@ -923,6 +718,41 @@ class IncrementalSpec extends SparkSpec {
       "doc_id", "text", refDir, curDir, idxDir, threshold = 0.5)
     assert(spark.read.parquet(curDir).select("doc_id")
       .as[Long].collect().toSet == Set(11L, 30L, 31L))
+  }
+
+  test("a write to a fuzzy stream's store outside its log stops the stream instead of losing rows") {
+    val tmp = Files.createTempDirectory("graft-incr-foreign").toString
+    val refDir = s"$tmp/ref"; val curDir = s"$tmp/curated"
+    val idxDir = s"$tmp/ndindex"
+    def words(prefix: String, n: Int): String =
+      (1 to n).map(i => s"$prefix$i").mkString(" ")
+    def ids: Set[Long] = spark.read.parquet(curDir).select("doc_id").as[Long].collect().toSet
+    Seq((1L, words("frozen", 40))).toDF("doc_id", "text").write.parquet(refDir)
+    Incremental.curateBatchFuzzy(spark,
+      Seq((10L, words("alpha", 40)), (11L, words("beta", 40))).toDF("doc_id", "text"),
+      "doc_id", "text", refDir, curDir, idxDir, threshold = 0.5)
+    // a takedown that leaves out the index dir runs under an exact-only
+    // log in the store, which the fuzzy log knows nothing of
+    Incremental.takedown(spark, curDir, "doc_id", Seq(10L).toDF("doc_id"))
+    val next = Seq((20L, words("gamma", 40)), (21L, words("beta", 40) + " edited tail"))
+      .toDF("doc_id", "text")
+    val err = intercept[IllegalStateException](Incremental.curateBatchFuzzy(spark,
+      next, "doc_id", "text", refDir, curDir, idxDir, threshold = 0.5))
+    assert(err.getMessage.contains(s"$idxDir/_log"), err.getMessage)
+    assert(ids == Set(11L), s"no row may be lost: $ids")
+    // the remedy the error names: drop the fuzzy log, so the next batch
+    // adopts the store as it stands and rebuilds the index without 10
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
+    }
+    rm(new java.io.File(s"$idxDir/_log"))
+    Incremental.curateBatchFuzzy(spark,
+      next, "doc_id", "text", refDir, curDir, idxDir, threshold = 0.5)
+    assert(ids == Set(11L, 20L), s"got $ids")
+    assert(!new java.io.File(s"$curDir/_log").exists, "the adopted exact log must go")
+    assert(Dedup.NearDupIndex.read(spark, idxDir).sets.select("doc").as[Long]
+      .collect().sorted.toSeq == Seq(1L, 11L, 20L))
+    assertListed(curDir, idxDir)
   }
 
   /** A reference of `refDocs` 40-word docs and a fuzzy batch stream over
@@ -954,6 +784,20 @@ class IncrementalSpec extends SparkSpec {
   private def parquetFiles(d: String): Int = Option(new java.io.File(d).listFiles)
     .map(_.count(_.getName.endsWith(".parquet"))).getOrElse(0)
 
+  private def partNames(d: String): Set[String] = Option(new java.io.File(d).listFiles)
+    .map(_.map(_.getName).filter(_.endsWith(".parquet")).toSet).getOrElse(Set.empty)
+
+  /** Each state dir holds exactly the part files the log lists. */
+  private def assertListed(curDir: String, idxDir: String): Unit = {
+    val entry = Incremental.latestEntry(spark, idxDir)
+      .getOrElse(fail(s"no committed entry under $idxDir"))
+    Seq(Incremental.Store -> curDir, Incremental.Bands -> s"$idxDir/bands",
+        Incremental.Sets -> s"$idxDir/sets").foreach { case (role, dir) =>
+      assert(partNames(dir) == entry(role).toSet,
+        s"$dir holds ${partNames(dir)}, the log lists ${entry(role)}")
+    }
+  }
+
   test("fuzzy batches keep a fixed job count and a flat probe plan") {
     val tmp = Files.createTempDirectory("graft-incr-budget").toString
     val curDir = s"$tmp/curated"; val idxDir = s"$tmp/ndindex"
@@ -980,8 +824,9 @@ class IncrementalSpec extends SparkSpec {
         case _ =>
       }
     }
-    // (jobs, probe plan lengths) per batch; expression ids grow with the
-    // session, so they are masked before lengths are compared
+    // (jobs, probe plan lengths) per batch; expression, plan and RDD ids
+    // grow with the session (and gain digits), so they are masked
+    // before lengths are compared
     val perBatch = (1 to 4).map { b =>
       val input = batch(b).localCheckpoint()
       marker.set(false); jobs.set(0); probePlans.clear()
@@ -998,7 +843,7 @@ class IncrementalSpec extends SparkSpec {
         assert(marker.get, "listener bus never delivered the marker job")
       } finally spark.sparkContext.removeSparkListener(listener)
       val plans = probePlans.toArray(Array.empty[String]).toSeq
-      (jobs.get, plans.map(_.replaceAll("#\\d+", "#").length))
+      (jobs.get, plans.map(_.replaceAll("#\\d+|(?<=plan_id=|RDD\\[)\\d+", "#").length))
     }
     info(s"per batch (jobs, probe plan chars): $perBatch")
     val steady = perBatch.drop(1)
@@ -1035,5 +880,44 @@ class IncrementalSpec extends SparkSpec {
       assert(store == spark.sessionState.conf.numShufflePartitions,
         s"the store gains one part file per shuffle partition: $store")
     }
+  }
+
+  test("a copied index dir streams like its original without a rebuild; the log stays short") {
+    val tmp = Files.createTempDirectory("graft-incr-copy").toString
+    val (refDir, batch) = fuzzyStream(tmp, refDocs = 6, fresh = 6)
+    val orig = s"$tmp/orig"; val copy = s"$tmp/copy"
+    def run(root: String, b: DataFrame): Unit =
+      Incremental.curateBatchFuzzy(spark, b, "doc_id", "text", refDir,
+        s"$root/curated", s"$root/index", threshold = 0.5, compactAfterFiles = 4)
+    // one index build, then the index dir alone — its log included — is
+    // copied to a fresh root, the way a benchmark replay starts
+    run(orig, batch(1).where(lit(false)))
+    val src = java.nio.file.Paths.get(orig, "index")
+    Files.walk(src).forEach { p =>
+      val dst = java.nio.file.Paths.get(copy, "index").resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(dst) else Files.copy(p, dst)
+    }
+    val copied = Seq("bands", "sets").map(d => d -> partNames(s"$copy/index/$d"))
+    (1 to 6).foreach { b =>
+      run(orig, batch(b)); run(copy, batch(b))
+      if (b == 1) copied.foreach { case (d, files) =>
+        assert(files.nonEmpty && files.subsetOf(partNames(s"$copy/index/$d")),
+          s"the copy's first batch must not rebuild $d: ${partNames(s"$copy/index/$d")}")
+      }
+    }
+    def ids(root: String): Set[Long] =
+      spark.read.parquet(s"$root/curated").select("doc_id").as[Long].collect().toSet
+    assert(ids(orig) == (1 to 6).flatMap(b => (0 until 6).map(i => 1000L * b + i)).toSet,
+      s"unexpected curated ids: ${ids(orig).toSeq.sorted}")
+    assert(ids(copy) == ids(orig), "the copy must admit what the original admits")
+    Seq(orig, copy).foreach { root =>
+      val entries = new java.io.File(s"$root/index/_log").listFiles
+        .count(_.getName.matches("""\d+\.json"""))
+      assert(entries <= 2, s"$root keeps $entries log entries")
+      assertListed(s"$root/curated", s"$root/index")
+    }
+    assert(Incremental.latestEntry(spark, s"$orig/index").exists(e =>
+      e(Incremental.Store).size <= 4 && e(Incremental.Bands).size <= 4),
+      "compaction must have run under the trigger")
   }
 }
