@@ -7,6 +7,8 @@ import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Cut
+
 /** O37/O38 — gradient-boosted-tree regression, the reference's
   * LGBMRegressor fit/predict (pipeline.py:258-265, 287-294): one
   * first-order Friedman boosting loop over [[HistTree]] stages with a
@@ -54,13 +56,13 @@ import org.apache.spark.sql.functions._
   * Scale design (100 TB): the working frame carries (bins, label, F) —
   * the raw feature vector is DROPPED after the one-time binning (r17:
   * it was the largest resident column) — and is re-persisted per round
-  * with the previous round's storage RELEASED (unpersist, plus the
-  * checkpoint-block release for a cut round: `DataFrame.unpersist`
-  * alone cannot reach a localCheckpoint's RDD blocks, and that leak —
+  * with the previous round's storage RELEASED (unpersist, plus
+  * [[graft.util.Cut.release]] for a cut round: `DataFrame.unpersist`
+  * alone cannot reach a local checkpoint's RDD blocks, and that leak —
   * one full binned frame per checkpointed round per concurrent model —
   * is what ran the full-width M5 tweedie demo out of a 32 GB heap).
-  * Lineage is cut by `localCheckpoint` every `checkpointInterval`
-  * rounds, the same cadence Spark's own GBT uses. Per round the cost is
+  * Lineage is cut by [[graft.util.Cut.local]] every
+  * `checkpointInterval` rounds, the same cadence Spark's own GBT uses. Per round the cost is
   * one tree fit + one narrow map to update F + one 1-row deviance agg;
   * nothing driver-side grows with data size, only with tree count. */
 object TweedieGbt {
@@ -358,22 +360,16 @@ object TweedieGbt {
     // Bin once, drop it (r17: half the per-model cache bytes).
     val base1 = base0.withColumn("__bins", HistTree.binColumn(histBins, "features"))
       .drop("features")
-    // Rotation helper: a round frame is a plain persist OR a
-    // localCheckpoint cut. A cut's blocks belong to its RDD, which
-    // DataFrame.unpersist cannot reach (the graft.util.Cut.release gap):
-    // every checkpointed round's FULL binned frame stayed resident
-    // until context GC, and at full M5 width × 8 concurrent models that
-    // leak ran a 32 GB driver out of heap (r17 tweedie run). Only a cut
-    // is released that way: a persisted round's plan still reads the
-    // last cut, which was already released when its successor landed.
-    def release(df: DataFrame): Unit = {
-      df.unpersist()
-      df.queryExecution.analyzed match {
-        case _: org.apache.spark.sql.execution.LogicalRDD => graft.util.Cut.release(df)
-        case _ => ()
-      }
-    }
-    var cur = base1.withColumn("__F", lit(f0)).localCheckpoint(true)
+    // Rotation: a round frame is a plain persist OR a local cut. A
+    // cut's blocks belong to its RDD, which DataFrame.unpersist cannot
+    // reach: every checkpointed round's FULL binned frame stayed
+    // resident until context GC, and at full M5 width × 8 concurrent
+    // models that leak ran a 32 GB driver out of heap (r17 tweedie
+    // run). Cut.release frees a frame's own cut and nothing under it:
+    // a persisted round's plan still reads the last cut, which was
+    // already released when its successor landed.
+    def release(df: DataFrame): Unit = { df.unpersist(); Cut.release(df) }
+    var cur = Cut.local(base1.withColumn("__F", lit(f0)))
     var best = (Double.MaxValue, 0) // (valid deviance, round)
     val stages = scala.collection.mutable.ArrayBuffer.empty[HistTree.Tree]
     val validDev = scala.collection.mutable.ArrayBuffer.empty[Double]
@@ -445,7 +441,7 @@ object TweedieGbt {
       // split — and only then is the previous round released: its blocks
       // are the persisted frame's lineage until that action has run.
       val checkpointed = (round + 1) % params.checkpointInterval == 0
-      val next = if (checkpointed) next0.localCheckpoint(true) else next0.persist()
+      val next = if (checkpointed) Cut.local(next0) else next0.persist()
       if (hasValid) {
         val dev = objective.deviance(
           next.filter(col("__valid")).withColumn("__mu", objective.link(col("__F"))),

@@ -285,7 +285,7 @@ object Annotation {
       // both joins of the following round — without a lineage barrier
       // the analyzed plan doubles twice per iteration (4^iters nodes,
       // OOMs the driver before any data moves).
-      val next = scope.persist(graft.util.Cut.cut(
+      val next = scope.persist(graft.util.Cut(
         raw.crossJoin(broadcast(tot))
           .select(col("__e"),
             round(col("__raw") / col("__tot"), quantDigits).as("__p"))))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Hashing, Text}
-import graft.util.CacheScope
+import graft.util.{CacheScope, Cut}
 
 /** Deduplication suite for large text corpora (SURVEY.md §2.5 X12/X14):
   * exact, MinHash+LSH, SimHash, and exact n-gram Jaccard.
@@ -1509,36 +1509,21 @@ object Dedup {
             col(aCol).cast("long").as("dst")))).as("__e"))
         .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
         .repartition(col("dst")))
-    // each round's plan is CUT at a checkpoint: without it the
+    // each round's plan is CUT (graft.util.Cut): without it the
     // logical plan nests one level per round and the driver dies
     // compiling (then holding) an exponentially growing tree — the
-    // standard iterative-DataFrame trap. When the context has a
-    // checkpoint dir configured (sc.setCheckpointDir — a cluster
-    // deployment always should), the cut is a RELIABLE checkpoint():
-    // executor loss mid-iteration recovers from the checkpoint files
-    // instead of failing the job, because a localCheckpoint's blocks
-    // die with their executor AND its truncated lineage makes them
-    // unrecomputable. Locally (no dir) the executor-storage variant
-    // suffices. Round N−1's checkpoint FILES are deleted as soon as
-    // round N's materialize (below) — relying on the ContextCleaner
-    // (opt-in conf, GC-driven) would leave every round's full label
-    // table on disk and exhaust the checkpoint dir on long iterations
-    // (r6 VERDICT #5). The FINAL round's files are left for the
-    // caller's consuming action.
-    val sc = nodes.sparkSession.sparkContext
-    val reliable = sc.getCheckpointDir.isDefined
-    def cut(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
-    def checkpointFile(df: DataFrame): Option[String] =
-      df.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.flatMap(_.getCheckpointFile)
-    def deleteCheckpointFile(file: String): Unit = {
-      val p = new org.apache.hadoop.fs.Path(file)
-      p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
-    }
-    var checkpointed = cut(nodes
-      .select(col(idCol).cast("long").as("node"), col(idCol).cast("long").as("label")))
+    // standard iterative-DataFrame trap. Under a checkpoint dir (a
+    // cluster deployment always should set one) the cut is RELIABLE:
+    // executor loss mid-iteration recovers from the checkpoint files,
+    // where a local checkpoint's blocks die with their executor.
+    // Round N−1's cut is released as soon as round N's materializes
+    // (below) — relying on the ContextCleaner (opt-in conf, GC-driven)
+    // would leave every round's full label table on disk and exhaust
+    // the checkpoint dir on long iterations (r6 VERDICT #5). The FINAL
+    // round's cut is left for the caller's consuming action.
+    var checkpointed = Cut(nodes
+      .select(col(idCol).cast("long").as("node"), col(idCol).cast("long").as("label")),
+      eager = true)
     // DELTA iteration: only nodes whose label changed last round send
     // messages — after round 1 the frontier collapses to the interior
     // of still-converging components, so late rounds touch almost
@@ -1574,12 +1559,11 @@ object Dedup {
             least(col("__lab"), coalesce(col("__jl"), col("__lab"))).as("__lab"))
       val next = jumped.select(col("node"), col("__lab").as("label"),
         (col("__lab") < col("__old")).as("__chg"))
-      val cutNext = cut(next)
-      // `cut` is EAGER (checkpoint(true)), so round N's data is durable
-      // here — round N−1's storage can go: block-manager blocks for the
-      // local variant, checkpoint files for the reliable one
-      if (!reliable) releaseCheckpoint(checkpointed)
-      else checkpointFile(checkpointed).foreach(deleteCheckpointFile)
+      val cutNext = Cut(next, eager = true)
+      // the cut is EAGER, so round N's data is durable here — round
+      // N−1's storage can go: block-manager blocks for the local
+      // variant, checkpoint files for the reliable one
+      Cut.release(checkpointed)
       checkpointed = cutNext
       frontier = cutNext.filter(col("__chg")).select(col("node"), col("label"))
       // full frontier count (over the just-cut cached table — cheap):
@@ -1637,29 +1621,6 @@ object Dedup {
         "shortcutAfter + log2(diameter)); raise maxIter")
     checkpointed.select(col("node").as(idCol), col("label").as("cluster"))
   }
-
-  /** Free the block-manager storage behind a `localCheckpoint`ed frame.
-    * `Dataset.unpersist` only touches CacheManager entries, so a plain
-    * call silently leaks each round's checkpoint until driver GC; the
-    * blocks actually live in the LogicalRDD the checkpoint planted in
-    * the plan. (The FINAL round's checkpoint is intentionally left for
-    * the caller's consuming action; the ContextCleaner reclaims it once
-    * the result is unreferenced.) */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
-    }
-
-  /** Release ALL storage behind a checkpointed frame once its
-    * consumers have run: block-manager blocks (localCheckpoint) and
-    * checkpoint files (reliable checkpoint). For callers like the
-    * streaming curation batch that cut a frame per micro-batch —
-    * without an explicit release every batch of a long-lived stream
-    * leaks one checkpoint until driver GC (blocks) or forever
-    * (files; the ContextCleaner's checkpoint cleanup is opt-in). */
-  private[graft] def releaseCheckpointStorage(df: DataFrame): Unit =
-    graft.util.Cut.release(df)
 
   /** X143 — MinHash sketch calibration: for every LSH candidate pair,
     * the sketch's Jaccard ESTIMATE (fraction of agreeing signature

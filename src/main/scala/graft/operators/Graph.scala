@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Cut
+
 /** Graph operators for corpus curation. The first use case is link-graph
   * authority scoring: web-scale training-data pipelines rank hosts or
   * pages (Common-Crawl-style harmonic/PageRank scores) and use the rank
@@ -58,8 +60,6 @@ object Graph {
     : (DataFrame, Long) = {
     require(iterations >= 1, s"need iterations >= 1, got $iterations")
     require(damping > 0 && damping < 1, s"need 0 < damping < 1, got $damping")
-    val spark = edges.sparkSession
-    val sc = spark.sparkContext
     val dedup = edges.select(col(srcCol).cast("string").as("src"),
         col(dstCol).cast("string").as("dst"))
       .distinct()
@@ -81,18 +81,8 @@ object Graph {
     val sinks = scope.persist(
       nodes.join(e, col("node") === col("src"), "left_anti"))
     val hasSinks = sinks.limit(1).count() > 0
-    val reliable = sc.getCheckpointDir.isDefined
-    def cut(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
-    def checkpointFile(df: DataFrame): Option[String] =
-      df.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.flatMap(_.getCheckpointFile)
-    def deleteCheckpointFile(file: String): Unit = {
-      val p = new org.apache.hadoop.fs.Path(file)
-      p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
-    }
-    var checkpointed = cut(nodes.select(col("node"), lit(1.0 / n).as("rank")))
+    var checkpointed = Cut(nodes.select(col("node"), lit(1.0 / n).as("rank")),
+      eager = true)
     var ranks: DataFrame = checkpointed
     var round = 0
     // r16: two per-round job eliminations, both value-identical —
@@ -130,9 +120,8 @@ object Graph {
         }
       round += 1
       if (round % cutEvery == 0 || round == iterations) {
-        val cutNext = cut(next)
-        if (!reliable) Dedup.releaseCheckpointStorage(checkpointed)
-        else checkpointFile(checkpointed).foreach(deleteCheckpointFile)
+        val cutNext = Cut(next, eager = true)
+        Cut.release(checkpointed)
         checkpointed = cutNext
         ranks = cutNext
       } else ranks = next
@@ -168,8 +157,6 @@ object Graph {
     : DataFrame = {
     require(iterations >= 1, s"need iterations >= 1, got $iterations")
     require(damping > 0 && damping < 1, s"need 0 < damping < 1, got $damping")
-    val spark = edges.sparkSession
-    val sc = spark.sparkContext
     val dedup = edges.select(col(srcCol).cast("string").as("src"),
         col(dstCol).cast("string").as("dst"))
       .distinct()
@@ -197,18 +184,8 @@ object Graph {
     val sinks = scope.persist(
       nodes.join(e, col("node") === col("src"), "left_anti"))
     val hasSinks = sinks.limit(1).count() > 0
-    val reliable = sc.getCheckpointDir.isDefined
-    def cut(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
-    def checkpointFile(df: DataFrame): Option[String] =
-      df.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.flatMap(_.getCheckpointFile)
-    def deleteCheckpointFile(file: String): Unit = {
-      val p = new org.apache.hadoop.fs.Path(file)
-      p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
-    }
-    var checkpointed = cut(nodes.select(col("node"), col("tele").as("rank")))
+    var checkpointed = Cut(nodes.select(col("node"), col("tele").as("rank")),
+      eager = true)
     var ranks: DataFrame = checkpointed
     var iter = 0
     // same r16 job eliminations as [[pageRankWithN]]: broadcast
@@ -238,9 +215,8 @@ object Graph {
         }
       iter += 1
       if (iter % cutEvery == 0 || iter == iterations) {
-        val cutNext = cut(next)
-        if (!reliable) Dedup.releaseCheckpointStorage(checkpointed)
-        else checkpointFile(checkpointed).foreach(deleteCheckpointFile)
+        val cutNext = Cut(next, eager = true)
+        Cut.release(checkpointed)
         checkpointed = cutNext
         ranks = cutNext
       } else ranks = next
@@ -441,38 +417,34 @@ object Graph {
       maxRounds: Int = 8): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val spark = edges.sparkSession
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
     // checkpoint each round (the pageRank/CC cut discipline): a
     // persisted-but-uncut frame keeps its full logical plan, and each
     // peel round embeds the previous plan ~5× — by round 8 the
     // ANALYZER blows the heap before a single task runs
-    def cut(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
     val a = least(col(srcCol).cast("string"), col(dstCol).cast("string"))
     val b = greatest(col(srcCol).cast("string"), col(dstCol).cast("string"))
     def degrees(e: DataFrame): DataFrame =
       e.select(col("a").as("n")).union(e.select(col("b").as("n")))
         .groupBy(col("n")).agg(count(lit(1)).as("d"))
-    var cur = cut(edges.select(a.as("a"), b.as("b"))
-      .filter(col("a") =!= col("b")).distinct())
+    var cur = Cut(edges.select(a.as("a"), b.as("b"))
+      .filter(col("a") =!= col("b")).distinct(), eager = true)
     var curCount = cur.count()
     var round = 0
     var converged = false
     while (round < maxRounds && !converged) {
       val keep = degrees(cur).filter(col("d") >= k).select(col("n"))
-      val next = cut(cur
+      val next = Cut(cur
         .join(keep.withColumnRenamed("n", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("n", "b"), Seq("b"), "left_semi")
-        .select(col("a"), col("b")))
+        .select(col("a"), col("b")), eager = true)
       val nextCount = next.count()
       // edge-count fixpoint ⇔ node fixpoint: any peeled node had
       // degree ≥ 1 in the previous round, so its removal drops edges
       if (nextCount == curCount) {
-        if (!reliable) graft.operators.Dedup.releaseCheckpointStorage(next)
+        Cut.release(next)
         converged = true
       } else {
-        if (!reliable) graft.operators.Dedup.releaseCheckpointStorage(cur)
+        Cut.release(cur)
         cur = next
         curCount = nextCount
       }
@@ -507,21 +479,17 @@ object Graph {
       seedCol: String,
       maxHops: Int = 6): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
-    val spark = edges.sparkSession
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
-    def cut(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
     val a = least(col(srcCol).cast("string"), col(dstCol).cast("string"))
     val b = greatest(col(srcCol).cast("string"), col(dstCol).cast("string"))
     val canon = edges.select(a.as("a"), b.as("b"))
       .filter(col("a") =!= col("b")).distinct()
-    val adj = cut(canon.select(col("a").as("z"), col("b").as("nb"))
-      .union(canon.select(col("b").as("z"), col("a").as("nb"))))
+    val adj = Cut(canon.select(col("a").as("z"), col("b").as("nb"))
+      .union(canon.select(col("b").as("z"), col("a").as("nb"))), eager = true)
     val nodes = adj.select(col("z").as("node")).distinct()
-    var dist = cut(nodes
+    var dist = Cut(nodes
       .join(seeds.select(col(seedCol).cast("string").as("node")).distinct(),
         Seq("node"), "left_semi")
-      .select(col("node"), lit(0L).as("hops")))
+      .select(col("node"), lit(0L).as("hops")), eager = true)
     var reached = dist.count()
     require(reached > 0, "seed set shares no nodes with the graph")
     var round = 0
@@ -530,19 +498,21 @@ object Graph {
       val relaxed = dist
         .join(adj, col("node") === col("z"))
         .select(col("nb").as("node"), (col("hops") + 1).as("hops"))
-      val next = cut(dist.unionByName(relaxed)
-        .groupBy(col("node")).agg(min(col("hops")).as("hops")))
+      val next = Cut(dist.unionByName(relaxed)
+        .groupBy(col("node")).agg(min(col("hops")).as("hops")), eager = true)
       val nextReached = next.count()
       if (nextReached == reached) {
-        if (!reliable) Dedup.releaseCheckpointStorage(next)
+        Cut.release(next)
         converged = true
       } else {
-        if (!reliable) Dedup.releaseCheckpointStorage(dist)
+        Cut.release(dist)
         dist = next
         reached = nextReached
       }
       round += 1
     }
+    // every round's dist is materialized: the adjacency cut is dead
+    Cut.release(adj)
     dist
   }
 
@@ -698,14 +668,14 @@ object Graph {
     // Each half-round is ONE action (the 1-row L1 collect, which also
     // materializes the persisted contrib cache). The normalized score
     // frame is a LAZY Cut (flat LogicalRDD leaf immediately; its
-    // localCheckpoint blocks materialize inside the NEXT half-round's
+    // checkpoint blocks materialize inside the NEXT half-round's
     // collect job) — r19, measured in both directions: the previous
     // form eagerly counted the cut frame (a second full job per
     // half-round, 10.8 s median), while a bare lazy projection over
     // the cache nests each generation's full logical plan inside the
-    // next (the cutEager InMemoryRelation-pyramid failure mode — the
-    // optimizer re-walks the whole pyramid every half-round: 23.8 s).
-    // The lazy cut keeps the flat leaf AND the one-action half-round:
+    // next (the InMemoryRelation pyramid of the graft.util.Cut doc —
+    // the optimizer re-walks it every half-round: 23.8 s). The lazy
+    // cut keeps the flat leaf AND the one-action half-round:
     // 10.8 → ~7 s isolated. The backing cache must outlive its
     // consumer: contrib caches release one generation LATE (after the
     // next half-round's collect), and the final auth/hub frames
@@ -718,7 +688,7 @@ object Graph {
       // exchange and the collect doubles as c's cache materialization.
       val tot = c.agg(sum(col("__c"))).collect().head
       val totV = if (tot.isNullAt(0)) 0.0d else tot.getDouble(0)
-      val out = scope.persist(graft.util.Cut.cut(
+      val out = scope.persist(Cut(
         c.select(col("node"),
           (if (totV > 0) round(col("__c") / lit(totV), quantDigits)
            else lit(0.0d)).as("__s"))))
@@ -729,7 +699,6 @@ object Graph {
     var auth: DataFrame = null
     var authBack: DataFrame = null // cache behind `auth`
     var hubBack: DataFrame = null  // cache behind `hub` (null: nodes-backed)
-    var hubBackWasSet = false      // hub gen 0 is NOT a cut frame
     for (_ <- 1 to iterations) {
       val aRaw = eBySrc.join(hub.withColumnRenamed("node", "src"), Seq("src"))
         .groupBy(col("dst")).agg(sum(col("__s")).as("__c"))
@@ -740,13 +709,13 @@ object Graph {
       authBack = aBack
       // the collect above consumed the PREVIOUS auth's cache — release
       // it AND the superseded auth score frame itself (r19 ADVICE: the
-      // lazy-cut frames' localCheckpoint blocks are unreachable to
+      // lazy-cut frames' checkpoint blocks are unreachable to
       // DataFrame.unpersist — Cut.release drops them; the superseded
       // generation's last consumer was the PREVIOUS half-round's
       // collect, so both are dead here)
       if (aPrevBack != null) aPrevBack.unpersist()
       if (aPrevOut != null) {
-        aPrevOut.unpersist(); graft.util.Cut.release(aPrevOut)
+        aPrevOut.unpersist(); Cut.release(aPrevOut)
       }
       val hRaw = eByDst.join(auth.withColumnRenamed("node", "dst"), Seq("dst"))
         .groupBy(col("src")).agg(sum(col("__s")).as("__c"))
@@ -756,16 +725,9 @@ object Graph {
       hub = h2
       hubBack = hBack
       if (hPrevBack != null) hPrevBack.unpersist()
-      // hub gen N−1's last consumer was THIS iteration's aRaw collect.
-      // The INITIAL hub is a plain projection whose plan reaches the
-      // caller's edge frame — Cut.release walks the analyzed plan and
-      // would free any caller-owned LogicalRDD, so it only runs on the
-      // normalized() generations (flat cut leaves, gen ≥ 1)
-      if (hPrevOut != null) {
-        hPrevOut.unpersist()
-        if (hubBackWasSet) graft.util.Cut.release(hPrevOut)
-      }
-      hubBackWasSet = true
+      // hub gen N−1's last consumer was THIS iteration's aRaw collect
+      // (gen 0 is a plain projection, which Cut.release leaves alone)
+      hPrevOut.unpersist(); Cut.release(hPrevOut)
     }
     val stable = org.apache.spark.sql.types.DecimalType(18, 8)
     nodes
@@ -814,7 +776,6 @@ object Graph {
       scope: graft.util.CacheScope = graft.util.CacheScope.unmanaged)
       : DataFrame = {
     require(rounds >= 1 && rounds <= 64, s"rounds out of range: $rounds")
-    val sc = edges.sparkSession.sparkContext
     val dir0 = edges
       .filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
       .select(col(srcCol).cast("string").as("src"),
@@ -832,18 +793,8 @@ object Graph {
         .repartition(col("dst"))
         .dropDuplicates("src", "dst"))
     val nodes = scope.persist(e.select(col("src").as("node")).distinct())
-    val reliable = sc.getCheckpointDir.isDefined
-    def cut(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
-    def checkpointFile(df: DataFrame): Option[String] =
-      df.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.flatMap(_.getCheckpointFile)
-    def deleteCheckpointFile(file: String): Unit = {
-      val p = new org.apache.hadoop.fs.Path(file)
-      p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
-    }
-    var labels = cut(nodes.select(col("node"), col("node").as("__lab")))
+    var labels = Cut(nodes.select(col("node"), col("node").as("__lab")),
+      eager = true)
     for (_ <- 1 to rounds) {
       val votes = e
         .join(labels.withColumnRenamed("node", "dst"), Seq("dst"))
@@ -854,12 +805,11 @@ object Graph {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("node"))
         .orderBy(col("__cnt").desc, col("__lab"))
-      val next = cut(counts
+      val next = Cut(counts
         .withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1)
-        .select(col("node"), col("__lab")))
-      if (!reliable) Dedup.releaseCheckpointStorage(labels)
-      else checkpointFile(labels).foreach(deleteCheckpointFile)
+        .select(col("node"), col("__lab")), eager = true)
+      Cut.release(labels)
       labels = next
     }
     val sizes = labels.groupBy(col("__lab"))
@@ -1188,93 +1138,9 @@ object Graph {
     * stalls Catalyst before a single task runs (measured: sweeps=3
     * hung >9 min at sf0.001; cut, it's seconds). Returns the cut
     * (node, __c) frame. */
-  /** Eager lineage cut (reliable checkpoint when a dir is configured,
-    * else local) that ALSO resets plan statistics. Two Catalyst-time
-    * failure modes found on the louvain fixtures (40 edges, minutes
-    * to HOURS in the optimizer before any task ran):
-    *
-    *  1. nested lazy caches — stats estimation (InjectRuntimeFilter's
-    *     canBroadcastBySize) re-recurses through unmaterialized
-    *     InMemoryRelation pyramids on every optimizer pass; flat
-    *     leaves fix the depth;
-    *  2. ORIGIN-STATS COMPOUNDING — checkpoint/localCheckpoint carry
-    *     the original plan's estimated statistics onto the LogicalRDD
-    *     leaf, and the size-only join estimator MULTIPLIES child
-    *     sizes, so each sweep's leaf inherits the previous sweep's
-    *     ~8-leaf product and the BigInteger exponent grows ~8× PER
-    *     SWEEP (doubly exponential): the two-level ring fixture
-    *     pinned the optimizer inside Toom-Cook multiplications of
-    *     million-bit integers.
-    *
-    * Rewrapping the checkpointed RDD in a fresh DataFrame keeps the
-    * materialization barrier but drops originStats to the flat
-    * default; AQE re-derives real sizes at runtime, so broadcast
-    * decisions still happen where they matter.
-    *
-    * Storage reclamation (r18 ADVICE): under localCheckpoint the cut
-    * blocks are reclaimed by the ContextCleaner when the rewrapped
-    * frame's RDD becomes unreachable. Under a RELIABLE checkpoint dir
-    * the files are NEVER auto-deleted unless
-    * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (default
-    * false) — so the iterative loops here delete each SUPERSEDED
-    * generation's checkpoint dir explicitly (the
-    * [[graft.operators.Dedup.connectedComponents]] round-N−1
-    * protocol) via [[cutEagerFile]]'s returned path; only the FINAL
-    * returned generation survives, bounded at one V-sized frame per
-    * call. */
-  private def cutEager(df: DataFrame): DataFrame = cutEagerFile(df)._1
-
-  /** [[cutEager]] plus the reliable-checkpoint dir backing the cut
-    * (None under localCheckpoint) — captured from the PRE-rewrap
-    * frame, whose plan leaf holds the actually-checkpointed RDD. */
-  private def cutEagerFile(df: DataFrame): (DataFrame, Option[String]) = {
-    val spark = df.sparkSession
-    val cp =
-      if (spark.sparkContext.getCheckpointDir.isDefined)
-        df.checkpoint(true)
-      else df.localCheckpoint(true)
-    val file = cp.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.flatMap(_.getCheckpointFile)
-    (spark.createDataFrame(cp.rdd, cp.schema), file)
-  }
-
-  /** [[cutEagerFile]]'s LAZY twin for INTERMEDIATE frames consumed
-    * only inside the next eager cut's job (r19): the plan becomes a
-    * flat LogicalRDD leaf immediately (same pyramid/origin-stats
-    * protection — the rewrap drops originStats), but no job runs at
-    * cut time; the localCheckpoint blocks materialize inside the
-    * first consuming job and are cached for its other consumers, so
-    * the frame's work is paid ONCE and one whole job boundary per use
-    * disappears. Only taken when NO reliable checkpoint dir is
-    * configured: a lazy reliable checkpoint exposes no file path at
-    * cut time, which would silently defeat the superseded-generation
-    * dir reclamation the eager path guarantees (r18 ADVICE), so
-    * cluster deployments keep the eager discipline. */
-  private def cutSoftFile(df: DataFrame): (DataFrame, Option[String]) = {
-    val spark = df.sparkSession
-    if (spark.sparkContext.getCheckpointDir.isDefined) cutEagerFile(df)
-    else {
-      val cp = df.localCheckpoint(false)
-      (spark.createDataFrame(cp.rdd, cp.schema), None)
-    }
-  }
-
-  /** Delete a superseded generation's reliable-checkpoint dir. Safe
-    * once the NEXT generation has materialized: checkpoint(true) is
-    * eager and the new leaf has no lineage back to the old file. */
-  private def deleteCheckpointDir(spark: org.apache.spark.sql.SparkSession,
-      file: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(file)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(p, true)
-    ()
-  }
-
   private def refineCore(e: DataFrame, selfW: Option[DataFrame],
       m: Long, asg0: DataFrame, sweeps: Int,
       scope: graft.util.CacheScope): DataFrame = {
-    val spark = e.sparkSession
     // node-driven degrees: an aggregated super-node with ONLY a
     // self-loop (an isolated community) never appears in `e`.
     // r20: k_i is STATIC across sweeps, so it rides INSIDE the cut
@@ -1292,17 +1158,16 @@ object Graph {
       case None => degBase
         .select(col("node"), coalesce(col("__kw"), lit(0L)).as("__k"))
     }
-    var (asg, asgFile) = cutEagerFile(
+    var asg = Cut.flat(
       asg0.join(deg, Seq("node"), "left")
         .select(col("node"), col("__c"),
-          coalesce(col("__k"), lit(0L)).as("__ki")))
+          coalesce(col("__k"), lit(0L)).as("__ki")), eager = true)
     for (_ <- 1 to sweeps) {
       val prev = asg
-      val prevFile = asgFile
       // community degree totals — communities-bounded; lazily cut so
       // its two consumers (the __totC and __totD joins) aggregate the
       // V-sized prev leaf once, not twice
-      val (degC, degCFile) = cutSoftFile(
+      val degC = Cut.flat(
         prev.groupBy(col("__c")).agg(sum(col("__ki")).as("__tot")))
       // i's edge weight into each ASSIGNED neighbor community
       // (includes D = C(i): that row is k_iC′)
@@ -1348,8 +1213,8 @@ object Graph {
       // longs, so negation is total and ties break identically).
       // CUT, not persisted: props is referenced 3× (two incident legs
       // + the accept join) — as a flat leaf it's one small
-      // materialization per sweep (see cutEager)
-      val (props, propsFile) = cutSoftFile(
+      // materialization per sweep (see Cut.flat)
+      val props = Cut.flat(
         cand.groupBy(col("node"), col("__c"))
           .agg(min(struct((-col("__score")).as("__ns"), col("__cd")))
             .as("__best"))
@@ -1374,25 +1239,20 @@ object Graph {
           .withColumnRenamed("__winner", "__wd"), Seq("__cd"))
         .filter(col("node") === col("__wc") && col("node") === col("__wd"))
         .select(col("node"), col("__cd").as("__move"))
-      val (next, nextFile) = cutEagerFile(
+      val next = Cut.flat(
         prev.join(accepted, Seq("node"), "left")
           .select(col("node"),
-            coalesce(col("__move"), col("__c")).as("__c"), col("__ki")))
-      // storage reclamation: `next` is materialized (checkpoint(true)
-      // is eager), so this sweep's props/degC and the superseded
-      // assignment generation are unreachable — delete their
-      // reliable-checkpoint dirs NOW (under localCheckpoint the
-      // files are None and the ContextCleaner reclaims the blocks
-      // as the references die here); frames are communities/V-
-      // bounded, so the in-flight footprint is two generations of
-      // small frames plus at most one superseded file mid-delete
-      propsFile.foreach(deleteCheckpointDir(spark, _))
-      degCFile.foreach(deleteCheckpointDir(spark, _))
-      prevFile.foreach(deleteCheckpointDir(spark, _))
+            coalesce(col("__move"), col("__c")).as("__c"), col("__ki")),
+        eager = true)
+      // storage reclamation: `next` is materialized (an eager cut), so
+      // this sweep's props/degC and the superseded assignment
+      // generation are unreachable — free their blocks and files NOW;
+      // frames are communities/V-bounded, so the in-flight footprint
+      // is two generations of small frames
+      Seq(props, degC, prev).foreach(Cut.release)
       asg = next
-      asgFile = nextFile
     }
-    // the final assignment's own file intentionally survives — the
+    // the final assignment's own cut intentionally survives — the
     // caller reads it (one V-bounded frame per call, reclaimed by the
     // caller's lifecycle / cleanCheckpoints)
     asg.select(col("node"), col("__c"))
@@ -1451,7 +1311,7 @@ object Graph {
     // phase 2: aggregate communities to a weighted super-graph. Every
     // super frame is communities-bounded AND eagerly cut — flat
     // LogicalRDD leaves, or the optimizer's stats recursion chokes on
-    // the cache pyramid (see cutEager)
+    // the cache pyramid (see Cut.flat)
     val tagged = scope.persist(canon
       .join(l1.select(col("node").as("a"), col("__c").as("__ca")), Seq("a"))
       .join(l1.select(col("node").as("b"), col("__c").as("__cb")), Seq("b")))
@@ -1459,22 +1319,22 @@ object Graph {
       .select(least(col("__ca"), col("__cb")).as("a"),
         greatest(col("__ca"), col("__cb")).as("b"))
       .groupBy(col("a"), col("b")).agg(count(lit(1)).as("__w"))
-    val (e2, e2File) = cutEagerFile(
+    val e2 = Cut.flat(
       superEdges.select(col("a").as("src"), col("b").as("dst"), col("__w"))
         .union(superEdges.select(col("b").as("src"), col("a").as("dst"),
           col("__w")))
-        .repartition(col("dst")))
-    val (superSelf, selfFile) = cutEagerFile(
+        .repartition(col("dst")), eager = true)
+    val superSelf = Cut.flat(
       tagged.filter(col("__ca") === col("__cb"))
-        .groupBy(col("__ca").as("node")).agg(count(lit(1)).as("__sw")))
+        .groupBy(col("__ca").as("node")).agg(count(lit(1)).as("__sw")),
+      eager = true)
     val superSeed = l1.select(col("__c").as("node")).distinct()
       .select(col("node"), col("node").as("__c"))
     val l2 = refineCore(e2, Some(superSelf), m, superSeed,
       sweepsPerLevel, scope)
-    // l2 is a materialized flat leaf — the super-level inputs'
-    // reliable-checkpoint dirs are superseded (see cutEager doc)
-    e2File.foreach(deleteCheckpointDir(edges.sparkSession, _))
-    selfFile.foreach(deleteCheckpointDir(edges.sparkSession, _))
+    // l2 is a materialized flat leaf — the super-level input cuts are
+    // superseded
+    Seq(e2, superSelf).foreach(Cut.release)
     // project the super-assignment down
     l1.join(l2.toDF("__c", "__super"), Seq("__c"))
       .select(col("node"), col("__super").as("community"))
@@ -1517,8 +1377,8 @@ object Graph {
     * the Shiloach–Vishkin shortcut [[graft.operators.Dedup
     * .connectedComponents]] engages adaptively), so a diameter-D part
     * needs O(log D) rounds, each one intra-E-bounded join + one
-    * V-bounded jump join, under the [[cutEager]] discipline with
-    * per-round checkpoint-dir reclamation. Both steps only ever
+    * V-bounded jump join, under the [[graft.util.Cut.flat]] discipline
+    * with per-round release of the superseded cuts. Both steps only ever
     * lower labels toward the part minimum, so the fixpoint is the
     * true component labeling regardless of round count.
     *
@@ -1529,7 +1389,6 @@ object Graph {
       scope: graft.util.CacheScope = graft.util.CacheScope.unmanaged)
       : DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1: $maxRounds")
-    val spark = edges.sparkSession
     val canon = canonicalEdges(edges, srcCol, dstCol)
     val asg = scope.persist(assignment
       .select(col(nodeCol).cast("string").as("node"),
@@ -1552,13 +1411,12 @@ object Graph {
       intra.select(col("a").as("src"), col("b").as("dst"))
         .union(intra.select(col("b").as("src"), col("a").as("dst")))
         .repartition(col("dst")))
-    var (lab, labFile) = cutEagerFile(
-      asg.select(col("node"), col("node").as("__r")))
+    var lab = Cut.flat(asg.select(col("node"), col("node").as("__r")),
+      eager = true)
     var round = 0
     var changed = 1L
     while (round < maxRounds && changed > 0) {
       val prev = lab
-      val prevFile = labFile
       val nbrMin = sym
         .join(prev.select(col("node").as("dst"), col("__r").as("__nr")),
           Seq("dst"))
@@ -1570,7 +1428,7 @@ object Graph {
       // next eager cut's job instead of its own job per round.
       // prev's label rides along as __r0 so the change test below is
       // a scan of the round's materialized leaf, not a V⋈V join.
-      val (stepped, stepFile) = cutSoftFile(
+      val stepped = Cut.flat(
         prev.join(nbrMin, Seq("node"), "left")
           .select(col("node"),
             least(col("__r"), coalesce(col("__nm"), col("__r")))
@@ -1583,22 +1441,20 @@ object Graph {
           col("__r1").as("__rr")).toDF("__r1", "__rr"), Seq("__r1"))
         .select(col("node"), least(col("__r1"), col("__rr")).as("__r"),
           col("__r0"))
-      val (nextR, nextFile) = cutEagerFile(jumped)
-      stepFile.foreach(deleteCheckpointDir(spark, _))
+      val next = Cut.flat(jumped, eager = true)
+      Cut.release(stepped)
       // labels only ever DECREASE (least of own and neighbors), so a
       // round changed something iff any row's __r differs from its
       // carried __r0 — one scan of the flat leaf just materialized
-      changed = nextR.filter(col("__r") =!= col("__r0")).count()
-      val next = nextR.select(col("node"), col("__r"))
-      prevFile.foreach(deleteCheckpointDir(spark, _))
+      changed = next.filter(col("__r") =!= col("__r0")).count()
+      Cut.release(prev)
       lab = next
-      labFile = nextFile
       round += 1
     }
     require(changed == 0L,
       s"repairCommunities did not converge in $maxRounds rounds — " +
         "raise maxRounds (components converge in O(log diameter))")
-    val parts = lab.join(asg, Seq("node"))
+    val parts = lab.select(col("node"), col("__r")).join(asg, Seq("node"))
     val nParts = parts.groupBy(col("__c"))
       .agg(countDistinct(col("__r")).as("__np"))
     parts.join(nParts, Seq("__c"))
@@ -1658,7 +1514,6 @@ object Graph {
       scope: graft.util.CacheScope = graft.util.CacheScope.unmanaged)
       : DataFrame = {
     require(rounds >= 1 && rounds <= 64, s"rounds out of range: $rounds")
-    val spark = edges.sparkSession
     // current graph, the labelPropagation canonical form
     def sym2(d: DataFrame): DataFrame =
       d.select(explode(array(
@@ -1687,36 +1542,35 @@ object Graph {
     val eU = scope.persist(
       e.select(col("src"), col("dst")).union(chgSym)
         .dropDuplicates("src", "dst"))
-    def grow(b: DataFrame, g: DataFrame): (DataFrame, Option[String]) =
-      cutEagerFile(
+    def grow(b: DataFrame, g: DataFrame): DataFrame =
+      Cut.flat(
         g.join(b.withColumnRenamed("node", "src"), Seq("src"))
           .select(col("dst").as("node"))
-          .union(b).distinct())
+          .union(b).distinct(), eager = true)
     // FIXED-POINT EXIT (r19 optimization): grow is monotone (the new
     // ball is a superset of the old), so equal consecutive COUNTS mean
     // equal SETS — every remaining round's grow would return the same
     // frame. On a dense graph the ball saturates in a round or two and
     // the exit saves the remaining E-sized joins + checkpoint writes;
     // the saturated set is bit-identical to the full expansion, so the
-    // output is unchanged row-for-row. cutEagerFile is eager, so the
+    // output is unchanged row-for-row. The cut is eager, so the
     // count() reads the just-materialized RDD — a near-free job.
-    var (ball, ballFile) = cutEagerFile(
+    var ball = Cut.flat(
       chgSym.select(col("src").as("node"))
-        .union(chgSym.select(col("dst").as("node"))).distinct())
+        .union(chgSym.select(col("dst").as("node"))).distinct(), eager = true)
     var ballN = ball.count()
     var ballClosed = false // neighbor-closed over eU
     var r0 = 0
     while (r0 < rounds && !ballClosed) {
-      val (b2, f2) = grow(ball, eU)
+      val b2 = grow(ball, eU)
       val n2 = b2.count()
       if (n2 == ballN) {
-        // b2 == ball as a set; keep the old frame, drop the new file
-        f2.foreach(deleteCheckpointDir(spark, _))
+        // b2 == ball as a set; keep the old frame, drop the new cut
+        Cut.release(b2)
         ballClosed = true
       } else {
-        ballFile.foreach(deleteCheckpointDir(spark, _))
+        Cut.release(ball)
         ball = b2
-        ballFile = f2
         ballN = n2
       }
       r0 += 1
@@ -1732,38 +1586,33 @@ object Graph {
     // inside a neighbor-closed superset by induction from
     // needs(0) = the closed set).
     val needs = new Array[DataFrame](rounds + 1)
-    val needFiles = new Array[Option[String]](rounds + 1)
     val needsClosed = new Array[Boolean](rounds + 1)
     needs(rounds) = mayChange
-    needFiles(rounds) = None // mayChange's file survives (merge reads it)
     needsClosed(rounds) = false
     var needN = ballN
     var needDone = false
     for (r <- rounds - 1 to 0 by -1) {
       if (needDone) {
         needs(r) = needs(r + 1)
-        needFiles(r) = None
         needsClosed(r) = true
       } else {
-        val (nf, ff) = grow(needs(r + 1), e)
+        val nf = grow(needs(r + 1), e)
         val n2 = nf.count()
         if (n2 == needN) {
           // needs(r+1) is e-neighbor-closed and nf == needs(r+1)
-          ff.foreach(deleteCheckpointDir(spark, _))
+          Cut.release(nf)
           needs(r) = needs(r + 1)
-          needFiles(r) = None
           needsClosed(r) = true
           needsClosed(r + 1) = true
           needDone = true
         } else {
           needs(r) = nf
-          needFiles(r) = ff
           needN = n2
         }
       }
     }
-    var (lab, labFile) = cutEagerFile(
-      needs(0).select(col("node"), col("node").as("__lab")))
+    var lab = Cut.flat(needs(0).select(col("node"), col("node").as("__lab")),
+      eager = true)
     for (r <- 1 to rounds) {
       val votes0 = e
         .join(lab.withColumnRenamed("node", "dst"), Seq("dst"))
@@ -1777,18 +1626,16 @@ object Graph {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("node"))
         .orderBy(col("__cnt").desc, col("__lab"))
-      val (next, nextFile) = cutEagerFile(counts
+      val next = Cut.flat(counts
         .withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1)
-        .select(col("node"), col("__lab")))
-      labFile.foreach(deleteCheckpointDir(spark, _))
+        .select(col("node"), col("__lab")), eager = true)
+      Cut.release(lab)
       lab = next
-      labFile = nextFile
     }
     // the final vote is materialized — need-set generations are
     // superseded (mayChange excepted; the merge still reads it)
-    (0 until rounds).foreach(r =>
-      needFiles(r).foreach(deleteCheckpointDir(spark, _)))
+    needs.distinct.filter(_ ne mayChange).foreach(Cut.release)
     val prev = prevAssignment
       .select(col(nodeCol).cast("string").as("node"),
         col(communityCol).cast("string").as("__lab"))
@@ -1963,20 +1810,20 @@ object Graph {
       .select(least(col("__ca"), col("__cb")).as("a"),
         greatest(col("__ca"), col("__cb")).as("b"), col("__w"))
       .groupBy(col("a"), col("b")).agg(sum(col("__w")).as("__w"))
-    val (e2, e2File) = cutEagerFile(
+    val e2 = Cut.flat(
       superEdges.select(col("a").as("src"), col("b").as("dst"), col("__w"))
         .union(superEdges.select(col("b").as("src"), col("a").as("dst"),
           col("__w")))
-        .repartition(col("dst")))
-    val (superSelf, selfFile) = cutEagerFile(
+        .repartition(col("dst")), eager = true)
+    val superSelf = Cut.flat(
       tagged.filter(col("__ca") === col("__cb"))
-        .groupBy(col("__ca").as("node")).agg(sum(col("__w")).as("__sw")))
+        .groupBy(col("__ca").as("node")).agg(sum(col("__w")).as("__sw")),
+      eager = true)
     val superSeed = l1.select(col("__c").as("node")).distinct()
       .select(col("node"), col("node").as("__c"))
     val l2 = refineCore(e2, Some(superSelf), m, superSeed,
       sweepsPerLevel, scope)
-    e2File.foreach(deleteCheckpointDir(edges.sparkSession, _))
-    selfFile.foreach(deleteCheckpointDir(edges.sparkSession, _))
+    Seq(e2, superSelf).foreach(Cut.release)
     l1.join(l2.toDF("__c", "__super"), Seq("__c"))
       .select(col("node"), col("__super").as("community"))
   }

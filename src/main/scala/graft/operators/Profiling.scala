@@ -743,7 +743,7 @@ object Profiling {
     // Cut, not just persist: the chunk ids and mono ids are partition-
     // dependent and must be identical for the summary and pick
     // consumers (graft.util.Cut scaladoc)
-    val indexed = scope.persist(graft.util.Cut.cut(df.filter(value.isNotNull)
+    val indexed = scope.persist(graft.util.Cut(df.filter(value.isNotNull)
       .select((gs :+ value.cast(inType).as("__v")): _*)
       .repartitionByRange(chunks, gs :+ col("__v"): _*)
       .sortWithinPartitions(gs :+ col("__v"): _*)
@@ -913,7 +913,7 @@ object Profiling {
     val chunks = df.sparkSession.sessionState.conf.numShufflePartitions
     // Cut, not just persist: partition-dependent ids must be identical
     // for every consumer (graft.util.Cut scaladoc)
-    val indexed = scope.persist(graft.util.Cut.cut(
+    val indexed = scope.persist(graft.util.Cut(
       rows.repartitionByRange(chunks, gs :+ col("__v"): _*)
         .withColumn("__pfx_c", spark_partition_id().cast("long"))))
     // (group, chunk) summary: weight sum + row count, map-side

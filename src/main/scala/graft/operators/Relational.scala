@@ -242,7 +242,7 @@ object Relational {
     // plan alone can still be re-evaluated per consumer with different
     // range-sample seeds (graft.util.Cut scaladoc; the r14 row-loss
     // bug PrefixSumScaleDemo caught)
-    val chunked = scope.persist(graft.util.Cut.cut(
+    val chunked = scope.persist(graft.util.Cut(
       df.repartitionByRange(chunks, gs ++ orderCols: _*)
         .withColumn("__pfx_c", spark_partition_id().cast("long"))))
     // (group, chunk) sums: map-side combinable, collapses the frame to
@@ -309,7 +309,7 @@ object Relational {
       scope: graft.util.CacheScope = graft.util.CacheScope.unmanaged)
       : DataFrame = {
     val chunks = df.sparkSession.sessionState.conf.numShufflePartitions
-    val indexed = scope.persist(graft.util.Cut.cut(
+    val indexed = scope.persist(graft.util.Cut(
       df.repartitionByRange(chunks, orderCols: _*)
         .sortWithinPartitions(orderCols: _*)
         .withColumn("__rnk_c", spark_partition_id().cast("long"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Hashing, Text}
+import graft.util.Cut
 
 /** Text-analysis operators for training-data pipelines (SURVEY.md §2.5
   * X13): language-ID heuristic, quality scoring, token counting,
@@ -414,14 +415,16 @@ object TextAnalysis {
       : Seq[(String, String)] = {
     val spark = hist.sparkSession
     import spark.implicits._
-    var words = hist
+    // `cut` is the checkpoint the word chain currently reads; each new
+    // cut frees the one it supersedes, the last one goes on return
+    var cut = Cut.local(hist
       .select(col("__w").as("_1"), col("__c").as("_2")).as[(String, Long)]
-      .map { case (w, c) => (graft.functions.Bpe.toByteSymbols(w), c) }
-      .localCheckpoint(true)
+      .map { case (w, c) => (graft.functions.Bpe.toByteSymbols(w), c) })
+    var words = cut
     val merges = Vector.newBuilder[(String, String)]
     var round = 0
     var dry = false
-    while (round < numMerges && !dry) {
+    try while (round < numMerges && !dry) {
       val best = words.flatMap { case (w, c) =>
           (0 until w.size - 1).iterator.map(i => ((w(i), w(i + 1)), c))
         }
@@ -438,11 +441,14 @@ object TextAnalysis {
           (graft.functions.Bpe.mergeOnce(w, pair), c)
         }
         round += 1
-        words =
-          if (round % BpeTrainCutEvery == 0) next.localCheckpoint(true)
-          else next
+        words = next
+        if (round % BpeTrainCutEvery == 0) {
+          words = Cut.local(next)
+          Cut.release(cut)
+          cut = words
+        }
       }
-    }
+    } finally Cut.release(cut)
     merges.result()
   }
 

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions.{coalesce, col, collect_list, explode, lit
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.Dedup
-import graft.util.ParquetSchemaMemo
+import graft.util.{Cut, ParquetSchemaMemo}
 
 /** Incremental corpus curation over a document stream — the production
   * ingest shape: each micro-batch is deduped against the FROZEN
@@ -126,14 +126,11 @@ object Incremental {
     val fresh = freshAgainstState(spark, batch, idCol, textCol,
       referenceDir, curatedDir, refDigestDirFor(curatedDir, refDigestDir),
       refBloomFpp)
-    // cut once so the all-dup check and the append share one evaluation
-    // (same reliable/local auto-selection as the fuzzy path); an
-    // all-duplicate batch — the normal replay shape — appends NOTHING,
+    // cut once so the all-dup check and the append share one evaluation;
+    // an all-duplicate batch — the normal replay shape — appends NOTHING,
     // because an empty append still writes a part file and those
     // accrete into a listing tax on a long-lived stream
-    val cut =
-      if (spark.sparkContext.getCheckpointDir.isDefined) fresh.checkpoint(true)
-      else fresh.localCheckpoint()
+    val cut = Cut(fresh, eager = true)
     try {
       if (cut.count() > 0) {
         val added = log.written(log.dirs.keySet) {
@@ -142,7 +139,7 @@ object Incremental {
         }
         compactIfDue(spark, log, log.commit(state.plus(added)), compactAfterFiles)
       }
-    } finally Dedup.releaseCheckpointStorage(cut)
+    } finally Cut.release(cut)
   }
 
   /** The exact dedup layers of one micro-batch as a LAZY plan: null
@@ -230,11 +227,11 @@ object Incremental {
     * BEFORE the store/index writes: the probe plan reads the index it
     * is about to append to, so a lazy re-evaluation after the append
     * would see its own output and drop everything. The cut is a
-    * RELIABLE `checkpoint()` when the context has a checkpoint dir
-    * configured (a cluster deployment always should — a
-    * localCheckpoint's blocks die with their executor between the two
-    * appends), `localCheckpoint` otherwise — the same auto-selection
-    * [[Dedup.connectedComponents]] uses.
+    * [[graft.util.Cut]]: a reliable checkpoint when the context has a
+    * checkpoint dir configured (a cluster deployment always should — a
+    * local checkpoint's blocks die with their executor between the two
+    * appends), a local one otherwise; [[graft.util.Cut.release]] frees
+    * it once the batch ends.
     *
     * Crash window: the store and index parts a batch writes become
     * state only when the batch commits one log entry listing both. A
@@ -279,9 +276,7 @@ object Incremental {
           .drop(textCol)
           .repartition(spark.sessionState.conf.numShufflePartitions, col(idCol)),
         idCol, index.numHashes, carry = Seq(collect_list(col("__row")).as(RowsCol)))
-      val docs =
-        if (spark.sparkContext.getCheckpointDir.isDefined) byDoc.checkpoint(true)
-        else byDoc.localCheckpoint()
+      val docs = Cut(byDoc, eager = true)
       cut = Some(docs)
       // matched ids are bounded by the batch: once on the driver, the
       // admitted set no longer depends on the index it is appended to
@@ -315,7 +310,7 @@ object Incremental {
       // threw mid-append (blocks for the local variant, files for the
       // reliable one) — a replayed batch re-dedups from the store, so
       // the checkpoint is worthless after this point either way
-      cut.foreach(Dedup.releaseCheckpointStorage)
+      cut.foreach(Cut.release)
       scope.unpersistAll()
     }
   }
@@ -587,19 +582,21 @@ object Incremental {
       ids: DataFrame, indexDir: Option[String] = None): Long = {
     val log = indexDir.fold(exactLog(spark, curatedDir))(fuzzyLog(spark, curatedDir, _))
     val state = log.open()
-    val idsOnly = ids.select(col(idCol)).distinct().localCheckpoint(true)
-    val live = log.dirs.keySet.filter(role => state(role).nonEmpty)
-    val removed = if (!live(Store)) 0L else ParquetSchemaMemo.read(spark, curatedDir)
-      .join(idsOnly, Seq(idCol), "left_semi").count()
-    val rewritten = log.written(live) {
-      live.foreach { role =>
-        val key = if (role == Store) idCol else "doc"
-        ParquetSchemaMemo.read(spark, log.dirs(role))
-          .join(idsOnly.select(col(idCol).as(key)), Seq(key), "left_anti")
-          .write.mode("append").parquet(log.dirs(role))
+    val idsOnly = Cut.local(ids.select(col(idCol)).distinct())
+    try {
+      val live = log.dirs.keySet.filter(role => state(role).nonEmpty)
+      val removed = if (!live(Store)) 0L else ParquetSchemaMemo.read(spark, curatedDir)
+        .join(idsOnly, Seq(idCol), "left_semi").count()
+      val rewritten = log.written(live) {
+        live.foreach { role =>
+          val key = if (role == Store) idCol else "doc"
+          ParquetSchemaMemo.read(spark, log.dirs(role))
+            .join(idsOnly.select(col(idCol).as(key)), Seq(key), "left_anti")
+            .write.mode("append").parquet(log.dirs(role))
+        }
       }
-    }
-    if (live.nonEmpty) log.commit(state.copy(parts = state.parts ++ rewritten))
-    removed
+      if (live.nonEmpty) log.commit(state.copy(parts = state.parts ++ rewritten))
+      removed
+    } finally Cut.release(idsOnly)
   }
 }

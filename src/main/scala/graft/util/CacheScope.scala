@@ -28,8 +28,10 @@ final class CacheScope private[util] (track: Boolean) {
 
   /** Release every block this scope persisted. `blocking = true` waits
     * for the executors to actually drop them (specs assert on it).
-    * Cut-backed frames ([[Cut.cut]]) also release their checkpoint
-    * RDD's storage — DataFrame.unpersist alone cannot reach it. */
+    * A held frame that is itself a cut (`persist(Cut(...))`) also
+    * releases its checkpoint storage through [[Cut.release]] —
+    * DataFrame.unpersist alone cannot reach it. Cuts deeper in a held
+    * frame's plan belong to whoever made them and are left alone. */
   def unpersistAll(blocking: Boolean = false): Unit = synchronized {
     held.foreach { df => df.unpersist(blocking); Cut.release(df) }
     held.clear()

@@ -131,6 +131,20 @@ class BpeSpec extends SparkSpec {
     assert(Bpe.trainFromCounts(Seq((Vector("a"), 9L)), 3) == Seq.empty)
   }
 
+  test("distributed bpeTrainMerges frees every word cut it makes") {
+    // 40 merges cross the trainer's every-16-rounds cut twice
+    val docs = Seq((1L, "abcdefghijklmnopqrstuvwxyz zyxwvutsrqponmlkjihgfedcba"))
+      .toDF("doc_id", "text")
+    val sc = spark.sparkContext
+    val held = sc.getPersistentRDDs.size
+    val dist = graft.operators.TextAnalysis
+      .bpeTrainMerges(docs, "text", numMerges = 40, maxDriverWords = 0L)
+    assert(sc.getPersistentRDDs.size == held,
+      s"word cuts left behind: ${sc.getPersistentRDDs.values}")
+    assert(dist == graft.operators.TextAnalysis
+      .bpeTrainMerges(docs, "text", numMerges = 40))
+  }
+
   test("bpeTrainMerges: driver and distributed paths train " +
       "bit-identical tables; self-trained merges round-trip the " +
       "token counts") {

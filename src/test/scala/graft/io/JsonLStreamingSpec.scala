@@ -69,7 +69,7 @@ class JsonLStreamingSpec extends SparkSpec {
           Incremental.curateBatch(b.sparkSession,
             b.filter(col(JsonL.CorruptCol).isNull).drop(JsonL.CorruptCol),
             "doc_id", "text", refDir, curDir)
-        } finally graft.operators.Dedup.releaseCheckpointStorage(b)
+        } finally graft.util.Cut.release(b)
       }
       .start()
       .awaitTermination()

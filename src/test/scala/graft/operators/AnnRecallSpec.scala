@@ -193,6 +193,26 @@ class AnnRecallSpec extends SparkSpec {
       "the probe must not re-read corpus vectors")
   }
 
+  test("IVFADC build leaves a caller-owned cut corpus readable, reliable and local") {
+    // the build persists frames derived from the corpus in its own
+    // scope; releasing that scope must not free the caller's cut
+    val sc = spark.sparkContext
+    assert(sc.getCheckpointDir.isEmpty, "suite assumes no global checkpoint dir")
+    val emb = Tables.embeddings(spark, dir)
+    val ids = emb.select("vec_id").collect().map(_.getLong(0)).sorted.toSeq
+    for (reliable <- Seq(true, false)) {
+      val tmp = java.nio.file.Files.createTempDirectory("ivfadc_owned").toString
+      if (reliable) sc.setCheckpointDir(s"$tmp/ck")
+      try {
+        val corpus = if (reliable) emb.checkpoint(true) else emb.localCheckpoint(true)
+        Similarity.ensureIvfAdcIndex(corpus, "vec_id", "embedding",
+          Seq(10, 60, 110), m = 4, codewords = 16, indexDir = s"$tmp/idx", iters = 1)
+        assert(corpus.select("vec_id").collect().map(_.getLong(0)).sorted.toSeq == ids,
+          s"the corpus cut must survive the build (reliable = $reliable)")
+      } finally sc.setCheckpointDir(null)
+    }
+  }
+
   test("int8-quantized vectors preserve brute-force top-k (recall >= 0.8)") {
     // the storage path: rank over DEQUANTIZED int8 codes and compare to
     // exact float ranking — quantization must not reshuffle neighbors

@@ -29,10 +29,10 @@ object IvfAdcScaleDemo {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // corpus lands as parquet, not a localCheckpoint: the index
-    // build's CacheScope cleanup releases every LogicalRDD in its
-    // consumed lineage, which would evict a checkpointed corpus's
-    // blocks out from under the later probe batch
+    // corpus lands as parquet, so build and probe read it from disk as
+    // a deployed corpus would. A cut corpus would be safe too: the
+    // index build's CacheScope cleanup frees only the cuts the build
+    // made (Cut.release frees a frame's own cut), never the caller's
     def corpus(n: Long): DataFrame = {
       val path = s"/tmp/ivfadc_demo_corpus_$n"
       spark.range(n).select(col("id").as("vec_id"),

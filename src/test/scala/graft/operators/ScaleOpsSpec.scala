@@ -240,32 +240,84 @@ class ScaleOpsSpec extends SparkSpec {
       s"redaction must drop span tokens only, in order: $red")
   }
 
-  test("connectedComponents uses RELIABLE checkpoints when a checkpoint dir is set") {
-    val sc = spark.sparkContext
-    assert(sc.getCheckpointDir.isEmpty, "suite assumes no global checkpoint dir")
-    val ckDir = java.nio.file.Files.createTempDirectory("graft-cc-ck").toString
-    sc.setCheckpointDir(ckDir)
-    try {
-      val nodes = Seq(1L, 2L, 3L, 4L, 10L, 11L, 20L).toDF("id")
-      val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("a", "b")
-      val out = Dedup.connectedComponents(nodes, "id", pairs, "a", "b")
-        .orderBy("id").as[(Long, Long)].collect().toSeq
-      // identical labels to the local-checkpoint run of the same graph
-      assert(out == Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
-        10L -> 10L, 11L -> 10L, 20L -> 20L))
-      // and the rounds actually wrote reliable checkpoint files (the
-      // executor-loss-safe cut — a localCheckpoint writes none), with
-      // every superseded round's files DELETED as the next one landed:
-      // this multi-round graph must leave exactly the final round's
-      // rdd-* dir, or a long iteration exhausts the checkpoint dir
-      def rddDirs(f: java.io.File): Int =
-        if (f.getName.startsWith("rdd-")) 1
-        else Option(f.listFiles).map(_.map(rddDirs).sum).getOrElse(0)
-      assert(rddDirs(new java.io.File(ckDir)) == 1,
-        "checkpoint dir must hold ONLY the final round's files after " +
-          s"convergence; found ${rddDirs(new java.io.File(ckDir))}")
-    } finally sc.setCheckpointDir(null)
-  }
+  // Every operator that cuts its lineage, one test each: under a
+  // checkpoint dir the cuts are RELIABLE (the executor-loss-safe kind;
+  // a localCheckpoint writes no files), the rows equal a run without a
+  // dir, and every superseded round's rdd-* dir is deleted as the next
+  // round lands — the only dirs left are ones the returned frame reads,
+  // or a long iteration exhausts the checkpoint dir.
+  // A ring of four triangles joined by bridges, with a three-edge tail
+  // (kCore peels it one node per round; shortestHops walks it).
+  private def ring = ((0 until 4).flatMap { t =>
+    Seq((s"t${t}a", s"t${t}b"), (s"t${t}a", s"t${t}c"), (s"t${t}b", s"t${t}c"),
+      (s"t${t}c", s"t${(t + 1) % 4}a"))
+  } ++ Seq(("t0a", "p1"), ("p1", "p2"), ("p2", "p3"))).toDF("src", "dst")
+  private def seeded(merge: Map[Int, Int] = Map.empty) =
+    ((0 until 4).flatMap(t => Seq("a", "b", "c")
+      .map(n => (s"t$t$n", s"T${merge.getOrElse(t, t)}"))) ++
+      Seq("p1", "p2", "p3").map(p => (p, p))).toDF("node", "community")
+  private val cutting: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+    "connectedComponents" -> (() => Dedup.connectedComponents(
+      Seq(1L, 2L, 3L, 4L, 10L, 11L, 20L).toDF("id"), "id",
+      Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("a", "b"), "a", "b")),
+    "pageRank" -> (() => Graph.pageRank(ring, "src", "dst", iterations = 4)),
+    "personalizedPageRank" -> (() => Graph.personalizedPageRank(ring, "src", "dst",
+      Seq("t0a").toDF("seed"), "seed", iterations = 4)),
+    "kCore" -> (() => Graph.kCore(ring, "src", "dst", k = 2)),
+    "shortestHops" -> (() => Graph.shortestHops(ring, "src", "dst",
+      Seq("p3").toDF("seed"), "seed")),
+    "hits" -> (() => Graph.hits(ring, "src", "dst", iterations = 3)),
+    "labelPropagation" -> (() => Graph.labelPropagation(ring, "src", "dst", rounds = 3)),
+    "louvain" -> (() => Graph.louvain(ring, "src", "dst",
+      seeded(), "node", "community")),
+    "repairCommunities" -> (() => Graph.repairCommunities(ring, "src", "dst",
+      seeded(Map(2 -> 0)), "node", "community")),
+    "deltaLabelPropagation" -> { () =>
+      val added = Seq(("t0b", "t2b")).toDF("src", "dst")
+      Graph.deltaLabelPropagation(ring.union(added), "src", "dst",
+        added, "src", "dst",
+        Graph.labelPropagation(ring, "src", "dst", rounds = 3),
+        "node", "community", rounds = 3)
+    },
+    "weightedLouvain" -> (() => Graph.weightedLouvain(
+      ring.withColumn("w", when(col("src").startsWith("p"), 3L).otherwise(1L)),
+      "src", "dst", "w", seeded(), "node", "community")))
+
+  for ((op, run) <- cutting)
+    test(s"$op uses RELIABLE checkpoints when a checkpoint dir is set") {
+      val sc = spark.sparkContext
+      assert(sc.getCheckpointDir.isEmpty, "suite assumes no global checkpoint dir")
+      def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+        df.collect().map(_.toSeq.map {
+          case d: Double => f"$d%.9f"
+          case v => String.valueOf(v)
+        }.mkString("|")).toSeq.sorted
+      val local = rows(run())
+      val ckDir = java.nio.file.Files.createTempDirectory("graft-cut-ck").toFile
+      sc.setCheckpointDir(ckDir.toString)
+      try {
+        val out = run()
+        assert(rows(out) == local, s"$op: rows must not depend on the cut kind")
+        def left(f: java.io.File): Seq[String] =
+          if (f.getName.startsWith("rdd-")) Seq(f.getCanonicalPath)
+          else Option(f.listFiles).toSeq.flatten.flatMap(left)
+        // the cut files the returned frame's plan reads, through any
+        // RDDs a leaf builds over a checkpointed one
+        def cutFiles(r: org.apache.spark.rdd.RDD[_]): Seq[String] =
+          r.getCheckpointFile match {
+            case Some(f) => Seq(new java.io.File(new java.net.URI(f).getPath).getCanonicalPath)
+            case None => r.dependencies.flatMap(d => cutFiles(d.rdd))
+          }
+        val read = out.queryExecution.analyzed.collect {
+          case lr: org.apache.spark.sql.execution.LogicalRDD => cutFiles(lr.rdd)
+        }.flatten.toSet
+        val files = left(ckDir)
+        assert(files.nonEmpty, s"$op: a reliable cut writes rdd-* dirs")
+        assert(files.toSet.subsetOf(read),
+          s"$op: superseded cuts must be deleted; left ${files.sorted} but " +
+            s"the result reads only ${read.toSeq.sorted}")
+      } finally sc.setCheckpointDir(null)
+    }
 
   test("deterministic-quantizer IVF full-probe == brute-force top-k exactly") {
     val emb = Tables.embeddings(spark, dir)

@@ -720,6 +720,19 @@ class IncrementalSpec extends SparkSpec {
       .as[Long].collect().toSet == Set(11L, 30L, 31L))
   }
 
+  test("takedown frees its id cut") {
+    val tmp = Files.createTempDirectory("graft-takedown-cut").toString
+    val refDir = s"$tmp/ref"; val curDir = s"$tmp/curated"
+    Seq((1L, "frozen text")).toDF("doc_id", "text").write.parquet(refDir)
+    Incremental.curateBatch(spark,
+      Seq((10L, "alpha text"), (11L, "beta text")).toDF("doc_id", "text"),
+      "doc_id", "text", refDir, curDir)
+    val held = spark.sparkContext.getPersistentRDDs.size
+    assert(Incremental.takedown(spark, curDir, "doc_id", Seq(10L).toDF("doc_id")) == 1L)
+    assert(spark.sparkContext.getPersistentRDDs.size == held,
+      "the takedown's id cut must not wait for driver GC")
+  }
+
   test("a write to a fuzzy stream's store outside its log stops the stream instead of losing rows") {
     val tmp = Files.createTempDirectory("graft-incr-foreign").toString
     val refDir = s"$tmp/ref"; val curDir = s"$tmp/curated"
